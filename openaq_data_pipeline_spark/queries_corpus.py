@@ -1,10 +1,8 @@
-"""Round-5 corpus-pipeline queries: boilerplate line removal, domain
-mixture sampling, embedding quantization, audio decode, vocabulary
-heavy hitters, bigram-LM quality scoring, BM25 sparse retrieval and
-deterministic training-shard export — the next ring of operations a 100 TB training-data
-pipeline runs beyond dedup/similarity/text/curation (BASELINE.json
-north star; no counterpart exists in the reference, whose surface
-stops at air-quality marts).
+"""Corpus-pipeline queries: trigram-LM backoff scoring, BPE merge
+training and logistic-regression quality classification — operations
+a 100 TB training-data pipeline runs beyond dedup/similarity/text/
+curation (BASELINE.json north star; no counterpart exists in the
+reference, whose surface stops at air-quality marts).
 
 Every query pairs with an ANSI-SQL DuckDB oracle on the same parquet
 tables; all decisions are MD5- or integer-derived so both engines
@@ -18,360 +16,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from openaq_data_pipeline_spark.catalog import (
+    exact_ratio_duck,
     fan_out,
     load,
     register,
-    register_rotated,
 )
-from openaq_data_pipeline_spark.operators.curation import (
-    mixture_sample,
-    remove_boilerplate_lines,
-)
-
-# deterministically injected boilerplate lines (the corpus ships no
-# verbatim-repeated lines, exactly like it ships no PII — pii_scan
-# set the injection precedent)
-_BL1 = "subscribe to our newsletter today"
-_BL2 = "copyright twenty twenty four all rights reserved"
-
-
-@register_rotated(
-    "boilerplate_line_removal",
-    "EXT-curation — corpus-level boilerplate line removal (the "
-    "C4/CCNet line-dedup filter): lines repeated verbatim across "
-    "≥5 distinct documents are dropped corpus-wide; per-doc "
-    "n_lines/n_kept plus the MD5 of the surviving text. One "
-    "line-frequency aggregate + a broadcast anti-tag + one "
-    "reassembly groupBy — the heavy-line set is tiny by "
-    "construction, so the big side never shuffles on line text "
-    "twice",
-    oracle=f"""
-WITH w AS (
-    SELECT doc_id, string_split(text, ' ') AS w FROM documents
-),
-inj AS (
-    SELECT doc_id,
-           concat_ws(chr(10),
-               array_to_string(list_slice(w, 1, 10), ' '),
-               CASE WHEN doc_id % 3 = 0 THEN '{_BL1}' END,
-               CASE WHEN len(w) > 10
-                    THEN array_to_string(list_slice(w, 11, len(w)), ' ') END,
-               CASE WHEN doc_id % 4 = 0 THEN '{_BL2}' END) AS text2
-    FROM w
-),
-lines AS (
-    SELECT doc_id, g.i AS pos, ls[g.i] AS line
-    FROM (SELECT doc_id, string_split(text2, chr(10)) AS ls FROM inj),
-         generate_series(1, 100) g(i)
-    WHERE g.i <= len(ls)
-),
-heavy AS (
-    SELECT line FROM (
-        SELECT line, count(DISTINCT doc_id) AS line_df FROM lines GROUP BY line
-    ) WHERE line_df >= 5
-),
-tagged AS (
-    SELECT l.doc_id, l.pos, l.line, h.line IS NOT NULL AS bl
-    FROM lines l LEFT JOIN heavy h ON h.line = l.line
-)
-SELECT doc_id,
-       CAST(count(*) AS BIGINT) AS n_lines,
-       CAST(count(*) FILTER (WHERE NOT bl) AS BIGINT) AS n_kept,
-       md5(array_to_string(
-           coalesce(list(line ORDER BY pos) FILTER (WHERE NOT bl), []),
-           chr(10))) AS kept_fp
-FROM tagged GROUP BY doc_id
-""",
-)
-def boilerplate_line_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-line documents are synthesized deterministically (first
-    10 words / optional boilerplate / remaining words / optional
-    footer — every 3rd doc gets a newsletter line, every 4th a
-    copyright footer), then the corpus-level filter drops any line
-    appearing in ≥5 distinct docs. The oracle recomputes injection +
-    frequency + reassembly from scratch in SQL."""
-    d = fan_out(load(spark, sf_dir, "documents")["documents"])
-    w = F.split(F.col("text"), " ")
-    injected = d.select(
-        "doc_id",
-        F.concat_ws(
-            "\n",
-            F.concat_ws(" ", F.slice(w, 1, 10)),
-            F.when(F.col("doc_id") % 3 == 0, F.lit(_BL1)),
-            F.when(
-                F.size(w) > 10,
-                F.concat_ws(" ", F.slice(w, 11, F.size(w) - 10)),
-            ),
-            F.when(F.col("doc_id") % 4 == 0, F.lit(_BL2)),
-        ).alias("text"),
-    )
-    return remove_boilerplate_lines(injected, "text", "doc_id", min_df=5)
-
-
-# target mixture: src1/src2/src3 at 50/30/20 (integer parts); every
-# other source carries weight 0 and is dropped
-_MIX_WEIGHTS = {"src1": 5, "src2": 3, "src3": 2}
-_MIX_CASE_DUCK = (
-    "CASE source "
-    + " ".join(f"WHEN '{s}' THEN {w}" for s, w in sorted(_MIX_WEIGHTS.items()))
-    + " END"
-)
-
-
-@register_rotated(
-    "domain_mixture_sample",
-    "EXT-curation — domain-mixture rebalancing: the largest corpus "
-    "whose source composition matches target weights 50/30/20 "
-    "(binding stratum kept whole, others hash-down-sampled on a "
-    "32-bit MD5 bucket with ppm-integer thresholds — deterministic, "
-    "RNG-free, resume-safe; one tiny count aggregate + a broadcast "
-    "threshold join, the big side never shuffles)",
-    oracle=f"""
-WITH counts AS (
-    SELECT source, count(*) AS n, {_MIX_CASE_DUCK} AS w
-    FROM documents
-    WHERE source IN ({", ".join(repr(s) for s in sorted(_MIX_WEIGHTS))})
-    GROUP BY source
-),
-cap AS (SELECT min(n * 1000000 // w) AS t FROM counts),
-thr AS (
-    SELECT source, ((w * t // n) * 4294967296 // 1000000) AS thr
-    FROM counts, cap
-)
-SELECT d.doc_id, d.source,
-       CAST(CAST('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8)
-                 AS BIGINT) AS BIGINT) AS bucket32,
-       CAST(t.thr AS BIGINT) AS thr
-FROM documents d JOIN thr t USING (source)
-WHERE CAST('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8) AS BIGINT)
-      < t.thr
-""",
-)
-def domain_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")["documents"]
-    kept = mixture_sample(d, "doc_id", "source", _MIX_WEIGHTS)
-    return kept.select("doc_id", "source", "bucket32", "thr")
-
-
-@register_rotated(
-    "embedding_quantization",
-    "EXT-similarity — per-dimension affine int8 quantization of the "
-    "embedding column (the FAISS/ScaNN scalar-quantization storage "
-    "baseline): corpus min/max grids per dim, codes by fixed-order "
-    "IEEE floor math so both engines agree bit-for-bit; one tiny "
-    "per-dim aggregate, grids folded to a broadcast single row, "
-    "pass 2 is a pure per-row transform — no reassembly shuffle",
-    oracle="""
-WITH ex AS (
-    SELECT vec_id, g.i AS dim, embedding[g.i]::DOUBLE AS x
-    FROM embeddings, generate_series(1, 4096) g(i)
-    WHERE g.i <= len(embedding)
-),
-stats AS (SELECT dim, min(x) AS mn, max(x) AS mx FROM ex GROUP BY dim),
-q AS (
-    SELECT vec_id, dim,
-           CASE WHEN mx - mn = 0 THEN 0
-                ELSE least(255, CAST(floor((x - mn) * 255.0 / (mx - mn))
-                                     AS BIGINT)) END AS q
-    FROM ex JOIN stats USING (dim)
-)
-SELECT vec_id,
-       CAST(count(*) AS BIGINT) AS n_dims,
-       CAST(sum(q) AS BIGINT) AS q_sum,
-       CAST(min(q) AS BIGINT) AS q_min,
-       CAST(max(q) AS BIGINT) AS q_max,
-       md5(array_to_string(list(q ORDER BY dim), ',')) AS q_fp
-FROM q GROUP BY vec_id
-""",
-)
-def embedding_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from openaq_data_pipeline_spark.operators.similarity import (
-        quantize_embeddings,
-    )
-
-    e = load(spark, sf_dir, "embeddings")["embeddings"]
-    return quantize_embeddings(e, "embedding", "vec_id", levels=255)
-
-
-@register_rotated(
-    "audio_decode_features",
-    "EXT-multimodal — REAL audio decode on executors: deterministic "
-    "RIFF/WAVE PCM16 clips synthesized per id (closed-form integer "
-    "waveform), parsed back by the pure-NumPy WAV chunk walker "
-    "inside Arrow mapInPandas; the oracle recomputes byte layout, "
-    "duration and every sample statistic (sum_abs/peak/zero "
-    "crossings) analytically from the id, so encode→decode→stats "
-    "is hash-checked end to end",
-    oracle="""
-WITH params AS (
-    SELECT doc_id AS media_id,
-           256 + 64 * (doc_id % 7) AS n,
-           8000 * (1 + doc_id % 3) AS rate
-    FROM documents
-),
-samp AS (
-    SELECT media_id, n, rate, g.k AS k,
-           ((media_id * 7919 + g.k * 773) % 4001) - 2000 AS s
-    FROM params, generate_series(0, 699) g(k)
-    WHERE g.k < n
-),
-sgn AS (
-    SELECT media_id, n, rate, s,
-           lag(s) OVER (PARTITION BY media_id ORDER BY k) AS prev
-    FROM samp
-)
-SELECT media_id,
-       CAST(44 + 2 * n AS BIGINT) AS n_bytes,
-       '52494646' AS header_hex,
-       CAST(rate AS INTEGER) AS sample_rate,
-       CAST(n AS BIGINT) AS n_samples,
-       CAST(n * 1000 // rate AS BIGINT) AS duration_ms,
-       CAST(sum(abs(s)) AS BIGINT) AS sum_abs,
-       CAST(max(abs(s)) AS INTEGER) AS peak,
-       CAST(count(*) FILTER (WHERE prev IS NOT NULL AND (prev < 0) != (s < 0))
-            AS BIGINT) AS n_zero_cross
-FROM sgn GROUP BY media_id, n, rate
-""",
-)
-def audio_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio analogue of multimodal_real_decode: WAV blobs are
-    synthesized per doc_id (operators/multimodal.synthetic_audio —
-    pure integer waveform, closed-form length/rate), then the real
-    RIFF chunk walker decodes them back and every output column is
-    independently derivable from the id, which is what the oracle
-    does — verifying the 44-byte PCM16 header layout (n_bytes), the
-    RIFF magic (header_hex) and sample-exact decode (sum_abs, peak,
-    zero crossings, integer-exact duration_ms)."""
-    from openaq_data_pipeline_spark.operators.multimodal import (
-        audio_features,
-        synthetic_audio,
-    )
-
-    d = load(spark, sf_dir, "documents")["documents"]
-    media = synthetic_audio(d.select(F.col("doc_id").alias("media_id")))
-    return audio_features(media)
-
-
-@register_rotated(
-    "vocab_top_ngrams",
-    "EXT-text — corpus vocabulary heavy hitters: top-50 unigrams and "
-    "top-50 bigrams by occurrence count (ties broken by gram text) "
-    "with document frequencies — the corpus-statistics pass behind "
-    "tokenizer/vocab construction; one explode into a map-side "
-    "partial (gram → count, n_docs) aggregate, global top-k as "
-    "TakeOrderedAndProject (per-partition heaps, never a full sort), "
-    "rank window over the 50 survivors only",
-    oracle="""
-WITH w AS (
-    SELECT doc_id,
-           string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')),
-                        ' ') AS w
-    FROM documents
-),
-uni AS (
-    SELECT doc_id, w[g.i] AS gram
-    FROM w, generate_series(1, 4000) g(i) WHERE g.i <= len(w)
-),
-bi AS (
-    SELECT doc_id, w[g.i] || ' ' || w[g.i + 1] AS gram
-    FROM w, generate_series(1, 4000) g(i) WHERE g.i <= len(w) - 1
-),
-u AS (
-    SELECT gram, count(*) AS n_occ, count(DISTINCT doc_id) AS nd
-    FROM uni GROUP BY gram
-),
-b AS (
-    SELECT gram, count(*) AS n_occ, count(DISTINCT doc_id) AS nd
-    FROM bi GROUP BY gram
-),
-ur AS (
-    SELECT 1 AS gram_len,
-           row_number() OVER (ORDER BY n_occ DESC, gram) AS rank,
-           gram, n_occ, nd
-    FROM u
-),
-br AS (
-    SELECT 2 AS gram_len,
-           row_number() OVER (ORDER BY n_occ DESC, gram) AS rank,
-           gram, n_occ, nd
-    FROM b
-)
-SELECT CAST(gram_len AS INTEGER) AS gram_len, CAST(rank AS BIGINT) AS rank,
-       gram, CAST(n_occ AS BIGINT) AS n_occurrences, CAST(nd AS BIGINT) AS n_docs
-FROM (SELECT * FROM ur WHERE rank <= 50 UNION ALL
-      SELECT * FROM br WHERE rank <= 50)
-""",
-)
-def vocab_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from openaq_data_pipeline_spark.operators.text import top_ngrams
-
-    d = fan_out(load(spark, sf_dir, "documents")["documents"])
-    return top_ngrams(d, "text", "doc_id", n=1, k=50).unionByName(
-        top_ngrams(d, "text", "doc_id", n=2, k=50)
-    )
-
-
-from openaq_data_pipeline_spark.catalog import exact_ratio_duck  # noqa: E402
 
 _LM_K = 10**6  # operators/lm.PROB_SCALE fixed-point multiplier
-
-
-@register_rotated(
-    "lm_bigram_score",
-    "EXT-lm — n-gram LM quality scoring (the CCNet/Gopher LM gate): "
-    "train an add-one-smoothed bigram model on the even-id half of "
-    "the corpus (two hash aggregates over one materialized bigram "
-    "stream, vocab-bounded count tables), score the odd-id half by "
-    "mean smoothed bigram probability (two keyed LEFT joins + one "
-    "partial-aggregable groupBy). Probabilities are fixed-point "
-    "BIGINTs so the mean is order-free and bit-identical across "
-    "engines (operators/lm.py determinism contract)",
-    oracle=f"""
-WITH tok AS (
-    SELECT doc_id,
-           string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
-    FROM documents
-),
-big AS (
-    SELECT doc_id, w[g.i] AS w1, w[g.i + 1] AS w2
-    FROM tok, generate_series(1, 4000) g(i)
-    WHERE g.i <= len(w) - 1
-),
-c12 AS (SELECT w1, w2, count(*) AS c12 FROM big WHERE doc_id % 2 = 0 GROUP BY w1, w2),
-c1 AS (SELECT w1, count(*) AS c1 FROM big WHERE doc_id % 2 = 0 GROUP BY w1),
-v AS (SELECT count(DISTINCT w2) AS v FROM big WHERE doc_id % 2 = 0),
-scored AS (
-    SELECT b.doc_id,
-           ((CAST(coalesce(c12.c12, 0) + 1 AS BIGINT) * {2 * _LM_K}
-             + CAST(coalesce(c1.c1, 0) + v.v AS BIGINT))
-            // (2 * CAST(coalesce(c1.c1, 0) + v.v AS BIGINT))) AS p_int
-    FROM big b
-    CROSS JOIN v
-    LEFT JOIN c12 ON b.w1 = c12.w1 AND b.w2 = c12.w2
-    LEFT JOIN c1 ON b.w1 = c1.w1
-    WHERE b.doc_id % 2 = 1
-)
-SELECT doc_id, count(*) AS n_bigrams,
-       {exact_ratio_duck('sum(p_int)', f'count(*) * {_LM_K}', 4)} AS avg_prob
-FROM scored
-GROUP BY doc_id
-""",
-)
-def lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Half-corpus train/score split on parity of doc_id: the even
-    half is the 'trusted' training slice, the odd half the candidate
-    stream being gated — the standard shape of an LM quality filter
-    (train on curated text, score the crawl)."""
-    from openaq_data_pipeline_spark.operators.lm import (
-        score_bigram_lm,
-        train_bigram_lm,
-    )
-
-    d = fan_out(load(spark, sf_dir, "documents")["documents"])
-    train = d.filter(F.col("doc_id") % 2 == 0)
-    cand = d.filter(F.col("doc_id") % 2 == 1)
-    c12, c1, v = train_bigram_lm(train, "text", "doc_id")
-    return score_bigram_lm(cand, "text", "doc_id", c12, c1, v)
 
 
 @register(
@@ -457,283 +108,6 @@ def lm_trigram_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     return score_trigram_backoff(cand, "text", "doc_id", tri, bi, uni, n)
 
 
-@register_rotated(
-    "bm25_topk",
-    "EXT-retrieval — BM25 sparse top-k retrieval (k1=1.2, b=0.75) "
-    "over an inverted index: the lexical companion to the dense ANN "
-    "tier (near-dup audit, retrieval-based decontamination, "
-    "hard-negative mining all need it). Query terms broadcast into "
-    "the tf table so the posting scan prunes to Σ df(query terms) "
-    "before anything heavy; scores are exact integer ratios "
-    "(DECIMAL(38,0) arithmetic) fixed-pointed at 6 decimals and "
-    "summed as BIGINTs — bit-identical across engines "
-    "(operators/retrieval.py determinism contract). Since r6 the "
-    "query runs the PRODUCTION shape (VERDICT r5 next #4): the "
-    "inverted index persists as a term-bucketed table and the probe "
-    "reads it with zero corpus re-tokenization and no index-side "
-    "exchange (df/S re-derive bucket-locally; plan pinned by "
-    "tests/test_plans.py)",
-    oracle="""
-WITH tok AS (
-    SELECT doc_id,
-           string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
-    FROM documents
-),
-dl AS (
-    SELECT doc_id,
-           CASE WHEN array_to_string(w, '') = '' THEN 0 ELSE len(w) END AS dl
-    FROM tok
-),
-stats AS (SELECT count(*) AS n, sum(dl) AS s FROM dl),
-tf AS (
-    SELECT t.doc_id, u.term, count(*) AS tf
-    FROM tok t, unnest(t.w) AS u(term)
-    WHERE u.term <> ''
-    GROUP BY t.doc_id, u.term
-),
-dft AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-qt AS (
-    SELECT DISTINCT doc_id AS query_id, u.term
-    FROM tok, unnest(list_slice(w, 1, 8)) AS u(term)
-    WHERE doc_id % 101 = 0 AND u.term <> ''
-),
-sc AS (
-    SELECT qt.query_id, tf.doc_id,
-           CAST(
-             (CAST(2*stats.n - 2*dft.df + 1 AS HUGEINT)
-                * (22 * tf.tf * stats.s) * 2000000
-              + CAST(2*dft.df + 1 AS HUGEINT)
-                * (10*tf.tf*stats.s + 3*stats.s + 9*dl.dl*stats.n))
-             // (2 * CAST(2*dft.df + 1 AS HUGEINT)
-                * (10*tf.tf*stats.s + 3*stats.s + 9*dl.dl*stats.n))
-           AS BIGINT) AS score_term
-    FROM qt
-    JOIN tf ON tf.term = qt.term
-    JOIN dft ON dft.term = qt.term
-    JOIN dl ON dl.doc_id = tf.doc_id
-    CROSS JOIN stats
-),
-agg AS (
-    SELECT query_id, doc_id, CAST(sum(score_term) AS BIGINT) AS score_fp
-    FROM sc GROUP BY query_id, doc_id
-),
-r AS (
-    SELECT query_id, doc_id, score_fp,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY score_fp DESC, doc_id) AS rank
-    FROM agg
-)
-SELECT query_id, CAST(rank AS BIGINT) AS rank, doc_id, score_fp
-FROM r WHERE rank <= 5
-""",
-)
-def bm25_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Every ~101st document's first 8 (normalized) tokens form a
-    query; its source doc typically ranks #1 — the self-retrieval
-    sanity property — with lexical near-neighbors behind it.
-    Production shape: build the persisted term-bucketed index once,
-    probe it (no corpus re-tokenization at query time); context
-    manager + eager checkpoint keep the no-residue contract."""
-    from openaq_data_pipeline_spark.operators.retrieval import (
-        bm25_topk_indexed,
-        build_bm25_index,
-        temp_bm25_index,
-    )
-    from openaq_data_pipeline_spark.operators.text import normalize, tokens
-
-    d = fan_out(load(spark, sf_dir, "documents")["documents"])
-    qdf = d.filter(F.col("doc_id") % 101 == 0).select(
-        F.col("doc_id").alias("query_id"),
-        F.concat_ws(
-            " ", F.slice(tokens(normalize(F.col("text"))), 1, 8)
-        ).alias("q_text"),
-    )
-    with temp_bm25_index(n_buckets=8) as idx:
-        build_bm25_index(d, "text", "doc_id", idx)
-        return bm25_topk_indexed(
-            spark, qdf, idx, "doc_id", "q_text", "query_id", k=5
-        ).localCheckpoint(eager=True)
-
-
-@register_rotated(
-    "training_shards",
-    "EXT-export — deterministic global shuffle + fixed-shard-count "
-    "assignment (the last step before a sharded training-data "
-    "export): shard = int(first 8 MD5 hex chars of doc_id) mod 16, "
-    "position = rank under (MD5, id) order within the shard. "
-    "Seed-free and engine-neutral, so a resumed training job and a "
-    "re-run export agree byte-for-byte; one exchange + per-shard "
-    "sort, the same physical work the sharded writer does anyway",
-    oracle="""
-WITH h AS (
-    SELECT doc_id,
-           md5(CAST(doc_id AS VARCHAR)) AS hh,
-           CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 16
-               AS shard_id
-    FROM documents
-)
-SELECT doc_id, shard_id,
-       CAST(row_number() OVER (PARTITION BY shard_id ORDER BY hh, doc_id)
-            AS BIGINT) AS shard_pos
-FROM h
-""",
-)
-def training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from openaq_data_pipeline_spark.operators.curation import shard_assignments
-
-    d = fan_out(load(spark, sf_dir, "documents")["documents"])
-    return shard_assignments(d, "doc_id", n_shards=16)
-
-
-_FD_TRUNC = (
-    "array_to_string(list_slice(string_split(text, ' '), 1, "
-    "len(string_split(text, ' ')) - 5), ' ')"
-)
-
-
-_FUZZY_DECON_ORACLE = f"""
-WITH base AS (
-    SELECT doc_id, text FROM documents
-    UNION ALL
-    SELECT doc_id + 500000 AS doc_id, {_FD_TRUNC} AS text
-    FROM documents
-    WHERE doc_id % 13 = 0 AND len(string_split(text, ' ')) >= 8
-),
-corpus AS (
-    SELECT doc_id, text FROM base
-    WHERE len(string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')) >= 3
-),
-words AS (
-    SELECT doc_id, string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
-    FROM corpus
-),
-shingles AS (
-    SELECT DISTINCT doc_id,
-           w[g.i] || ' ' || w[g.i + 1] || ' ' || w[g.i + 2] AS shingle
-    FROM words, generate_series(1, 4000) g(i)
-    WHERE g.i <= len(w) - 2
-),
-signatures AS (
-    SELECT doc_id,
-           min(substr(md5('0|' || shingle), 1, 8)) AS minhash_0,
-           min(substr(md5('0|' || shingle), 9, 8)) AS minhash_1,
-           min(substr(md5('0|' || shingle), 17, 8)) AS minhash_2,
-           min(substr(md5('0|' || shingle), 25, 8)) AS minhash_3,
-           min(substr(md5('1|' || shingle), 1, 8)) AS minhash_4,
-           min(substr(md5('1|' || shingle), 9, 8)) AS minhash_5,
-           min(substr(md5('1|' || shingle), 17, 8)) AS minhash_6,
-           min(substr(md5('1|' || shingle), 25, 8)) AS minhash_7
-    FROM shingles GROUP BY doc_id
-),
-bands AS (
-    SELECT doc_id, 0 AS band_id, md5(minhash_0 || '|' || minhash_1) AS band_hash FROM signatures
-    UNION ALL
-    SELECT doc_id, 1, md5(minhash_2 || '|' || minhash_3) FROM signatures
-    UNION ALL
-    SELECT doc_id, 2, md5(minhash_4 || '|' || minhash_5) FROM signatures
-    UNION ALL
-    SELECT doc_id, 3, md5(minhash_6 || '|' || minhash_7) FROM signatures
-),
-bsz AS (SELECT band_id, band_hash, count(*) AS c FROM bands GROUP BY band_id, band_hash),
-cand AS (
-    SELECT DISTINCT t.doc_id AS train_id, e.doc_id AS eval_id
-    FROM bands t
-    JOIN bands e ON t.band_id = e.band_id AND t.band_hash = e.band_hash
-    JOIN bsz s ON s.band_id = t.band_id AND s.band_hash = t.band_hash
-    WHERE t.doc_id < 500000 AND e.doc_id >= 500000 AND s.c <= 2048
-),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM shingles GROUP BY doc_id),
-inter AS (
-    SELECT c.train_id, c.eval_id, count(*) AS n_common
-    FROM cand c
-    JOIN shingles a ON a.doc_id = c.train_id
-    JOIN shingles b ON b.doc_id = c.eval_id AND b.shingle = a.shingle
-    GROUP BY c.train_id, c.eval_id
-)
-SELECT train_id, eval_id,
-       CAST(n_common AS BIGINT) AS n_common,
-       CAST(st.n_sh AS BIGINT) AS n_train,
-       CAST(se.n_sh AS BIGINT) AS n_eval,
-       {exact_ratio_duck('n_common', 'st.n_sh + se.n_sh - n_common')} AS jaccard
-FROM inter
-JOIN sizes st ON st.doc_id = train_id
-JOIN sizes se ON se.doc_id = eval_id
-WHERE {exact_ratio_duck('n_common', 'st.n_sh + se.n_sh - n_common')} >= 0.5
-"""
-
-
-@register_rotated(
-    "fuzzy_decontamination",
-    "[rotated r8 after green r5-r7; the fuzzy-decontamination family "
-    "stays driver-live via fuzzy_decon_incremental, which runs the "
-    "same shingle-overlap verify against the persisted index] "
-    "EXT-curation — FUZZY benchmark decontamination (the second tier "
-    "of the standard two-tier decon stack): MinHash banding with "
-    "per-bucket SPLIT train/eval member lists so only CROSS-corpus "
-    "candidates explode, degenerate-bucket cap shared with the dedup "
-    "family, then exact n-gram Jaccard verification (full sizes) of "
-    "the candidate set. Catches truncated/lightly-reworded eval "
-    "leakage that the verbatim n-gram overlap gate "
-    "(`decontamination`) misses below its 20% threshold",
-    oracle=_FUZZY_DECON_ORACLE,
-)
-def fuzzy_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Eval split = truncated copies (last 5 words dropped,
-    id+500000) of every 13th doc — synthetic paraphrase-level leakage
-    the verbatim gate under-fires on — mixed into the corpus; the
-    operator must surface each (original, leaked copy) pair."""
-    from openaq_data_pipeline_spark.operators.curation import fuzzy_decontaminate
-
-    d = fan_out(load(spark, sf_dir, "documents")["documents"])
-    w = F.split(F.col("text"), " ")
-    ev = d.filter((F.col("doc_id") % 13 == 0) & (F.size(w) >= 8)).select(
-        (F.col("doc_id") + 500000).alias("doc_id"),
-        F.concat_ws(" ", F.slice(w, 1, F.size(w) - 5)).alias("text"),
-    )
-    corpus = d.select("doc_id", "text").unionByName(ev)
-    return fuzzy_decontaminate(
-        corpus, is_eval=F.col("doc_id") >= 500000
-    )
-
-
-@register_rotated(
-    "fuzzy_decon_incremental",
-    "EXT-curation — INCREMENTAL fuzzy decontamination (VERDICT r5 "
-    "next #3): the training corpus is indexed ONCE into persisted "
-    "bucketed MinHash band / posting / size tables "
-    "(operators/incremental_fuzzy.py), and the eval batch probes the "
-    "index without re-signaturing history — band join, posting "
-    "verify and size lookup are all bucket-local on the index side. "
-    "Same fixture and SAME from-scratch whole-corpus oracle as "
-    "`fuzzy_decontamination`: per-document MinHash/shingle state "
-    "makes probe-vs-recompute provably identical, and the driver "
-    "hash-match IS that proof (index == recompute)",
-    oracle=_FUZZY_DECON_ORACLE,
-)
-def fuzzy_decon_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same leakage fixture as `fuzzy_decontamination` (truncated
-    copies of every 13th doc, id+500000), but run the incremental
-    way: index the originals, probe the eval batch. Context manager +
-    eager checkpoint: no catalog//tmp residue (r5 #2 contract)."""
-    from openaq_data_pipeline_spark.operators.incremental_fuzzy import (
-        build_fuzzy_index,
-        incremental_fuzzy_matches,
-        temp_fuzzy_index,
-    )
-
-    d = fan_out(load(spark, sf_dir, "documents")["documents"])
-    w = F.split(F.col("text"), " ")
-    ev = d.filter((F.col("doc_id") % 13 == 0) & (F.size(w) >= 8)).select(
-        (F.col("doc_id") + 500000).alias("doc_id"),
-        F.concat_ws(" ", F.slice(w, 1, F.size(w) - 5)).alias("text"),
-    )
-    with temp_fuzzy_index(n_buckets=8) as idx:
-        build_fuzzy_index(d.select("doc_id", "text"), "text", "doc_id", idx)
-        return incremental_fuzzy_matches(
-            ev, "text", "doc_id", idx
-        ).localCheckpoint(eager=True)
-
-
 def _bpe_rounds_sql(n_merges: int) -> str:
     """WITH-prefix shared by the two BPE oracles: corpus words,
     round-0 vocab, then k chained merge rounds in pure SQL — per
@@ -792,64 +166,6 @@ def _bpe_oracle(n_merges: int) -> str:
 """
 
 
-def _bpe_encode_oracle(n_merges: int) -> str:
-    """Re-learns the merges (the shared round chain), then replays
-    the FULL encode contract of operators/tokenizer.bpe_encode in
-    SQL: sorted-alphabet base ids, merged-symbol ids A + round − 1
-    with earliest-round-wins on collisions, per-word id arrays from
-    the final vocab state, and per-document assembly in token order.
-    Token ids render as a space-joined string (driver value-hashing
-    needs hashable cells; the Spark side renders identically)."""
-    merge_list = "\nUNION ALL\n".join(
-        f"SELECT {r} AS r, lhs, rhs FROM top{r}"
-        for r in range(1, n_merges + 1)
-    )
-    return f"""{_bpe_rounds_sql(n_merges)},
-merge_list AS (
-{merge_list}
-),
-alphabet AS (
-    SELECT c, CAST(row_number() OVER (ORDER BY c) - 1 AS BIGINT) AS tid
-    FROM (SELECT DISTINCT unnest(seq) AS c FROM vocab0)
-),
-nalpha AS (SELECT count(*) AS a FROM alphabet),
-merge_ids AS (
-    SELECT sym, CAST(n.a + m.r - 1 AS BIGINT) AS tid
-    FROM (SELECT lhs || rhs AS sym, min(r) AS r FROM merge_list GROUP BY lhs || rhs) m
-    CROSS JOIN nalpha n
-),
-word_syms AS (
-    SELECT v.word, g.i AS pos, v.seq[g.i] AS sym
-    FROM vocab{n_merges} v, generate_series(1, 200) g(i)
-    WHERE g.i <= len(v.seq)
-),
-word_ids AS (
-    SELECT ws.word, list(COALESCE(a.tid, m.tid, -1) ORDER BY ws.pos) AS ids
-    FROM word_syms ws
-    LEFT JOIN alphabet a ON a.c = ws.sym
-    LEFT JOIN merge_ids m ON m.sym = ws.sym
-    GROUP BY ws.word
-),
-docw AS (
-    SELECT doc_id, ws[g.i] AS word, g.i AS pos
-    FROM (SELECT doc_id,
-                 string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS ws
-          FROM documents),
-         generate_series(1, 200) g(i)
-    WHERE g.i <= len(ws) AND ws[g.i] <> ''
-),
-assembled AS (
-    SELECT d.doc_id, flatten(list(w.ids ORDER BY d.pos)) AS tids
-    FROM docw d JOIN word_ids w ON w.word = d.word
-    GROUP BY d.doc_id
-)
-SELECT doc_id,
-       CAST(len(tids) AS BIGINT) AS n_tokens,
-       array_to_string(tids, ' ') AS token_ids
-FROM assembled
-"""
-
-
 @register(
     "bpe_merge_training",
     "EXT-tokenizer — distributed BPE merge learning (Sennrich 2016, "
@@ -870,187 +186,6 @@ def bpe_merge_training(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe_train_merges(d, "text", "doc_id", n_merges=6)
 
 
-@register_rotated(
-    "bpe_encode",
-    "EXT-tokenizer — BPE apply/encode (VERDICT r5 next #2): the "
-    "pipeline-completing step after merge training — apply the "
-    "learned merge table corpus-wide and emit per-document TOKEN-ID "
-    "sequences, the arrays a training job actually consumes "
-    "(reference analogue: the typed staging projection "
-    "stg_openaq__measurements.sql:22-30, raw → model-ready). Merges "
-    "apply to the DISTINCT-WORD table (vocab-sized work), documents "
-    "broadcast-join word → id array and reassemble in token order. "
-    "The oracle re-learns all 6 merges in the shared chained-CTE "
-    "round machinery, then replays the full id contract "
-    "(sorted-alphabet base ids, A + round − 1 merged ids, "
-    "earliest-round-wins) and per-doc assembly in SQL",
-    oracle=_bpe_encode_oracle(6),
-)
-def bpe_encode_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from openaq_data_pipeline_spark.operators.tokenizer import (
-        bpe_encode,
-        bpe_train_merges,
-    )
-
-    d = fan_out(load(spark, sf_dir, "documents")["documents"])
-    merges = bpe_train_merges(d, "text", "doc_id", n_merges=6)
-    enc = bpe_encode(d, "text", "doc_id", merges)
-    # ids render as a space-joined string: the driver's value hash
-    # sorts row tuples into a set, so cells must be hashable scalars
-    # (same move as timestamp string rendering — catalog.py contract)
-    return enc.select(
-        "doc_id",
-        "n_tokens",
-        F.concat_ws(
-            " ", F.transform(F.col("token_ids"), lambda t: t.cast("string"))
-        ).alias("token_ids"),
-    )
-
-
-# --- r8: substring-level (span) dedup — operators/spans.py ------------
-
-_SPAN_K = 6
-_SPAN_MIN_DOCS = 2
-
-# shared oracle CTE chain: k-window shingles with 0-based positions →
-# cross-doc duplicated hashes → gaps-and-islands merge into maximal
-# spans (mirrors operators/spans.py step by step; the 512 series bound
-# covers the corpus max of 100 words/doc with 5x headroom)
-def _span_ctes(src: str) -> str:
-    return _SPAN_CTES.replace("FROM documents)", f"FROM {src})", 1)
-
-
-_SPAN_CTES = f"""
-w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-sh AS (
-    SELECT doc_id, g.i - 1 AS pos,
-           md5(array_to_string(list_slice(w, g.i, g.i + {_SPAN_K} - 1), ' ')) AS h
-    FROM w, generate_series(1, 512) g(i)
-    WHERE g.i + {_SPAN_K} - 1 <= len(w)
-),
-dup AS (
-    SELECT h FROM sh GROUP BY h
-    HAVING count(DISTINCT doc_id) >= {_SPAN_MIN_DOCS}
-),
-occ AS (SELECT doc_id, pos FROM sh JOIN dup USING (h)),
-isl AS (
-    SELECT doc_id, pos,
-           CASE WHEN pos > coalesce(max(pos + {_SPAN_K}) OVER (
-                    PARTITION BY doc_id ORDER BY pos
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-                THEN 1 ELSE 0 END AS ni
-    FROM occ
-),
-grp AS (
-    SELECT doc_id, pos,
-           sum(ni) OVER (PARTITION BY doc_id ORDER BY pos
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-    FROM isl
-),
-spans AS (
-    SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
-           CAST(max(pos) + {_SPAN_K} AS BIGINT) AS span_end
-    FROM grp GROUP BY doc_id, island
-)"""
-
-
-@register_rotated(
-    "dedup_span_ngrams",
-    "EXT-dedup — substring-level dedup (ExactSubstr of Lee et al. "
-    "2022, 'Deduplicating Training Data Makes LMs Better'): maximal "
-    "word spans whose every 6-word window recurs in >=2 distinct "
-    "documents, i.e. the verbatim passages whole-doc dedup misses. "
-    "Spark-first re-expression of the paper's suffix-array step: "
-    "shingle projection (no shuffle) -> two-phase countDistinct agg "
-    "-> AQE-broadcast tag join -> gaps-and-islands window merge; "
-    "three keyed exchanges, zero UDFs, ~n_words intermediate rows "
-    "(operators/spans.py docstring has the 100 TB budget). span_md5 "
-    "pins the actual span text via one final slice-and-hash join",
-    oracle=f"""
-WITH {_SPAN_CTES.strip()}
-SELECT s.doc_id, s.span_start, s.span_end,
-       md5(array_to_string(
-           list_slice(w.w, s.span_start + 1, s.span_end), ' ')) AS span_md5
-FROM spans s JOIN w ON s.doc_id = w.doc_id
-""",
-)
-def dedup_span_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from openaq_data_pipeline_spark.operators.spans import duplicated_spans
-
-    d = fan_out(load(spark, sf_dir, "documents")["documents"])
-    spans = duplicated_spans(d, _SPAN_K, _SPAN_MIN_DOCS)
-    words = d.select("doc_id", F.split("text", " ").alias("words"))
-    return spans.join(words, "doc_id").select(
-        "doc_id",
-        "span_start",
-        "span_end",
-        F.md5(
-            F.array_join(
-                F.slice(
-                    F.col("words"),
-                    F.col("span_start").cast("int") + F.lit(1),
-                    (F.col("span_end") - F.col("span_start")).cast("int"),
-                ),
-                " ",
-            )
-        ).alias("span_md5"),
-    )
-
-
-@register_rotated(
-    "span_removal_stats",
-    "[parity-only: new in r8 while the registry sits at the 50-query "
-    "driver cap; its detection core is driver-verified via "
-    "dedup_span_ngrams] EXT-dedup — the removal half of ExactSubstr: "
-    "every duplicated span excised, per-doc survivor text pinned by "
-    "md5 plus kept/removed word counters; pass-through docs keep "
-    "zero counters so the filter's no-op path is pinned too",
-    oracle=f"""
-WITH {_SPAN_CTES.strip()},
-words AS (
-    SELECT doc_id, g.i - 1 AS pos, w[g.i] AS word
-    FROM w, generate_series(1, 512) g(i) WHERE g.i <= len(w)
-),
-covered AS (
-    SELECT DISTINCT s.doc_id, g.j AS pos
-    FROM spans s, generate_series(0, 511) g(j)
-    WHERE g.j BETWEEN s.span_start AND s.span_end - 1
-),
-kept AS (
-    SELECT wo.doc_id, wo.pos, wo.word
-    FROM words wo LEFT JOIN covered c
-      ON wo.doc_id = c.doc_id AND wo.pos = c.pos
-    WHERE c.pos IS NULL
-)
-SELECT d.doc_id,
-       md5(coalesce((SELECT string_agg(k.word, ' ' ORDER BY k.pos)
-                     FROM kept k WHERE k.doc_id = d.doc_id), '')) AS clean_md5,
-       CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_words,
-       CAST(len(string_split(d.text, ' '))
-            - coalesce((SELECT count(*) FROM kept k
-                        WHERE k.doc_id = d.doc_id), 0) AS BIGINT)
-           AS n_words_removed,
-       coalesce((SELECT CAST(count(*) AS BIGINT) FROM spans s
-                 WHERE s.doc_id = d.doc_id), 0) AS n_spans
-FROM documents d
-""",
-)
-def span_removal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from openaq_data_pipeline_spark.operators.spans import (
-        remove_duplicated_spans,
-    )
-
-    d = fan_out(load(spark, sf_dir, "documents")["documents"])
-    out = remove_duplicated_spans(d, _SPAN_K, _SPAN_MIN_DOCS)
-    return out.select(
-        "doc_id",
-        F.md5("clean_text").alias("clean_md5"),
-        "n_words",
-        "n_words_removed",
-        "n_spans",
-    )
-
-
 # --- r8: model-based quality filtering — operators/classifier.py ------
 
 _LR_NF = 128
@@ -1058,8 +193,7 @@ _LR_ITERS = 4
 _LR_RATE = 4.0
 _LR_MAX_DF = 0.5
 # marker tokens whose md5 buckets (35, 114 at 128 features) no corpus
-# vocabulary word occupies — the planted learnable signal, same
-# injection precedent as pii_scan / boilerplate_line_removal
+# vocabulary word occupies — the planted learnable signal
 _LR_MARKERS = "qmarker0 qmarker1"
 
 
@@ -1182,87 +316,3 @@ def quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("y").cast("long").alias("label"),
         F.col("pred"),
     )
-
-
-@register_rotated(
-    "global_sample_ids",
-    "[parity-only: new in r8 at the 50-query driver cap; the "
-    "operator's scale property — one range exchange, no "
-    "single-partition window — is plan-pinned in test_ids.py] "
-    "EXT-export — contiguous global sample ids in deterministic "
-    "shuffle order (the resumable-loader/shard-offset id space a "
-    "training export needs): two-phase zipWithIndex — range "
-    "partition + per-partition numbering + broadcast offset join — "
-    "where the naive row_number() OVER (ORDER BY ...) collapses the "
-    "corpus into one task. The oracle IS that naive window, which "
-    "DuckDB can afford at oracle scale",
-    oracle="""
-SELECT doc_id,
-       CAST(row_number() OVER (ORDER BY md5(CAST(doc_id AS VARCHAR))) - 1
-            AS BIGINT) AS sample_id
-FROM documents
-""",
-)
-def global_sample_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from openaq_data_pipeline_spark.operators.ids import assign_global_ids
-
-    d = fan_out(load(spark, sf_dir, "documents")["documents"])
-    keyed = d.select(
-        "doc_id", F.md5(F.col("doc_id").cast("string")).alias("__h")
-    )
-    return assign_global_ids(keyed, "__h", id_name="sample_id").select(
-        "doc_id", "sample_id"
-    )
-
-
-# mirrors queries_ext._APPENDED_DUCK — the cross-batch near-dup
-# testbed: every 5th doc re-arrives one token longer under a new id
-_SPAN_BATCH_DUCK = """
-corpus AS (
-    SELECT doc_id, text FROM documents
-    UNION ALL
-    SELECT doc_id + 100000 AS doc_id, text || ' qq' AS text
-    FROM documents WHERE doc_id % 5 = 0
-)
-"""
-
-
-@register_rotated(
-    "dedup_span_incremental",
-    "EXT-dedup — INCREMENTAL substring-span dedup: the span tier's "
-    "cross-batch face, completing the per-tier incremental set "
-    "(exact, Jaccard, MinHash, SimHash, containment, embedding — and "
-    "now spans). History window counts persist bucketed on the "
-    "window hash (SUM-reaggregatable, blind appends — the ExactIndex "
-    "discipline); a batch window is duplicated iff history + batch "
-    "distinct-doc counts reach min_docs, which IS the whole-corpus "
-    "count — so the oracle recomputes spans from scratch over "
-    "history + batch and restricts to batch docs. History text is "
-    "never re-shingled (plan-pinned, test_incremental_spans.py); "
-    "probe cost scales with the batch alone",
-    oracle=f"""
-WITH {_SPAN_BATCH_DUCK.strip()},
-{_span_ctes("corpus").strip()}
-SELECT s.doc_id, s.span_start, s.span_end
-FROM spans s WHERE s.doc_id >= 100000
-""",
-)
-def dedup_span_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Index the original documents' window counts, probe with the
-    appended near-dup copies; returns the batch docs' maximal
-    duplicated spans. Context manager + the operator's own eager
-    pre-append checkpoint: no catalog//tmp residue."""
-    from openaq_data_pipeline_spark.operators.spans import (
-        build_span_index,
-        incremental_duplicated_spans,
-        temp_span_index,
-    )
-
-    d = fan_out(load(spark, sf_dir, "documents")["documents"])
-    batch = d.filter(F.col("doc_id") % 5 == 0).select(
-        (F.col("doc_id") + 100000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" qq")).alias("text"),
-    )
-    with temp_span_index(k=_SPAN_K, min_docs=_SPAN_MIN_DOCS, n_buckets=8) as idx:
-        build_span_index(d.select("doc_id", "text"), idx)
-        return incremental_duplicated_spans(batch, idx)

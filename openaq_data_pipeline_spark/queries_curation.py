@@ -1,9 +1,7 @@
-"""Corpus-curation queries: benchmark decontamination, deterministic
-stratified sampling, sequence packing, PII scan/redaction — the
-remaining standard LLM-training-data preparation steps beyond
+"""Corpus-curation queries: token-budget sequence packing and the
+Gopher quality rules — LLM-training-data preparation steps beyond
 dedup/similarity/text-analysis (queries_ext.py). Each oracle-paired
-with DuckDB SQL; all hash-derived decisions are MD5-based so both
-engines agree bit-for-bit.
+with DuckDB SQL.
 
 No counterpart exists in the reference (its surface stops at air-
 quality marts); these extend the engine per the BASELINE.json north
@@ -15,96 +13,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from openaq_data_pipeline_spark.catalog import load, register, register_rotated
+from openaq_data_pipeline_spark.catalog import load, register
 from openaq_data_pipeline_spark.operators import text as X
 from openaq_data_pipeline_spark.operators.curation import (
-    EMAIL_RE,
-    PHONE_RE,
-    chunk_documents,
     pack_sequences,
-    pii_scan,
-    stratified_sample,
-    train_eval_overlap,
 )
-
-# DuckDB mirror of operators/dedup.shingles() normalization: lower,
-# collapse whitespace, trim, split on single space. The 4000-row
-# series bound caps document length (corpus docs are ≤ 99 words).
-_DOC_SHINGLES_DUCK = """
-words AS (
-    SELECT doc_id, doc_id % 10 = 0 AS is_eval,
-           string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
-    FROM documents
-),
-shingles AS (
-    SELECT DISTINCT doc_id, is_eval,
-           w[g.i] || ' ' || w[g.i + 1] || ' ' || w[g.i + 2] AS shingle
-    FROM words, generate_series(1, 4000) g(i)
-    WHERE g.i <= len(w) - 2
-)
-"""
-
-
-@register_rotated(
-    "decontamination",
-    "EXT-curation — benchmark decontamination: train-split documents "
-    "scored by distinct 3-gram overlap with the eval split (broadcast "
-    "eval shingle set, ≥20% overlap → drop)",
-    oracle=f"""
-WITH {_DOC_SHINGLES_DUCK.strip()},
-eval_set AS (SELECT DISTINCT shingle FROM shingles WHERE is_eval),
-train AS (SELECT doc_id, shingle FROM shingles WHERE NOT is_eval),
-totals AS (SELECT doc_id, count(*) AS n_shingles FROM train GROUP BY doc_id),
-shared AS (
-    SELECT t.doc_id, count(*) AS n_shared
-    FROM train t JOIN eval_set e USING (shingle)
-    GROUP BY t.doc_id
-)
-SELECT t.doc_id,
-       CAST(t.n_shingles AS BIGINT) AS n_shingles,
-       CAST(coalesce(s.n_shared, 0) AS BIGINT) AS n_shared,
-       CASE WHEN coalesce(s.n_shared, 0) * 5 >= t.n_shingles
-            THEN 'drop' ELSE 'keep' END AS verdict
-FROM totals t LEFT JOIN shared s USING (doc_id)
-""",
-)
-def decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")["documents"]
-    return train_eval_overlap(d, "text", "doc_id", n=3)
-
-
-# per-stratum keep thresholds on the 256-bucket MD5 hex space:
-# en 50%, es/de 25%, fr 12.5%, default (zh, unseen) 6.25%
-_SAMPLE_RATES = {"en": "80", "es": "40", "de": "40", "fr": "20"}
-_SAMPLE_DEFAULT = "10"
-_SAMPLE_CASE_DUCK = (
-    "CASE lang "
-    + " ".join(f"WHEN '{k}' THEN '{v}'" for k, v in sorted(_SAMPLE_RATES.items()))
-    + f" ELSE '{_SAMPLE_DEFAULT}' END"
-)
-
-
-@register_rotated(
-    "stratified_sample",
-    "EXT-curation — deterministic hash-threshold stratified sampling "
-    "(per-language rates on an MD5 bucket; shuffle-free, seed-free, "
-    "resume-safe — unlike RNG sample())",
-    oracle=f"""
-SELECT doc_id, lang, source,
-       substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) AS bucket
-FROM documents
-WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < {_SAMPLE_CASE_DUCK}
-""",
-)
-def stratified_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")["documents"]
-    return stratified_sample(
-        d.select("doc_id", "lang", "source"),
-        "doc_id",
-        "lang",
-        _SAMPLE_RATES,
-        _SAMPLE_DEFAULT,
-    )
 
 
 @register(
@@ -148,132 +61,6 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("doc_id").alias("min_doc_id"),
         F.max("doc_id").alias("max_doc_id"),
     )
-
-
-@register_rotated(
-    "doc_chunking",
-    "EXT-curation — context-window document chunking: overlapping "
-    "32-token windows with stride 24 (the step BEFORE sequence "
-    "packing: long docs must be cut to the model context, overlap "
-    "preserves cross-boundary n-grams; the trailing window ends "
-    "exactly at the doc end so no token is dropped); pure map-side "
-    "split+sequence+slice — no shuffle, no UDF, scan-speed at any "
-    "scale; chunk count is exact integer math so both engines agree",
-    oracle="""
-WITH words AS (
-    SELECT doc_id,
-           string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ') AS w
-    FROM documents
-),
-base AS (SELECT doc_id, w, len(w) AS n FROM words),
-chunks AS (
-    SELECT doc_id, g.k AS chunk_id, 1 + g.k * 24 AS s, w, n
-    FROM base, generate_series(0, 4000) g(k)
-    WHERE g.k < 1 + (greatest(n - 32, 0) + 23) // 24
-)
-SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-       array_to_string(list_slice(w, s, s + 31), ' ') AS chunk_text,
-       CAST(least(32, n - s + 1) AS BIGINT) AS n_tokens
-FROM chunks
-""",
-)
-def doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")["documents"]
-    return chunk_documents(d, "text", "doc_id", chunk_tokens=32, overlap=8)
-
-
-@register_rotated(
-    "pii_scan",
-    "EXT-curation — PII detection + redaction audit: email/phone "
-    "regexp counts and the MD5 of the redacted text, over a corpus "
-    "with deterministically injected PII (every 7th doc)",
-    oracle=f"""
-WITH injected AS (
-    SELECT doc_id,
-           CASE WHEN doc_id % 7 = 0
-                THEN text || ' contact user' || CAST(doc_id AS VARCHAR)
-                     || '@example.com or call 555-'
-                     || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') || ' now'
-                ELSE text END AS text
-    FROM documents
-),
-scanned AS (
-    SELECT doc_id,
-           CAST(len(regexp_extract_all(text, '{EMAIL_RE}')) AS BIGINT) AS n_emails,
-           CAST(len(regexp_extract_all(text, '{PHONE_RE}')) AS BIGINT) AS n_phones,
-           md5(regexp_replace(
-                 regexp_replace(text, '{EMAIL_RE}', '<EMAIL>', 'g'),
-                 '{PHONE_RE}', '<PHONE>', 'g')) AS redacted_fp
-    FROM injected
-)
-SELECT doc_id, n_emails, n_phones, redacted_fp,
-       (n_emails = 0 AND n_phones = 0) AS is_clean
-FROM scanned
-""",
-)
-def pii_scan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")["documents"]
-    injected = d.select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 7 == 0,
-            F.concat(
-                F.col("text"),
-                F.lit(" contact user"),
-                F.col("doc_id").cast("string"),
-                F.lit("@example.com or call 555-"),
-                F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-                F.lit(" now"),
-            ),
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    return pii_scan(injected, "text", "doc_id")
-
-
-@register_rotated(
-    "pps_systematic_sample",
-    "EXT-sampling — systematic probability-proportional-to-size "
-    "sampling (Madow 1949, r8): documents occupy weight-length "
-    "segments on a line (weight = n_chars), the sampler picks the "
-    "rows covering multiples of W/k — inclusion probability exactly "
-    "min(1, k·w/W) with ZERO floating-point randomness; the whole "
-    "design is integer arithmetic, bit-reproducible on any engine. "
-    "The Spark side computes the global cumulative weight with the "
-    "TWO-PHASE partition-offset pattern (operators/ids.py — a "
-    "single-partition running-sum window is the canonical 100 TB "
-    "scale-killer the oracle is allowed but the engine is not)",
-    oracle="""
-WITH c AS (
-    SELECT doc_id, n_chars,
-           CAST(sum(n_chars) OVER (
-               ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-           ) AS BIGINT) AS cum_weight
-    FROM documents
-),
-t AS (SELECT CAST(sum(n_chars) AS BIGINT) AS w FROM documents)
-SELECT doc_id, n_chars, cum_weight,
-       CAST((cum_weight * 37) // t.w AS BIGINT) AS pick_no
-FROM c CROSS JOIN t
-WHERE (cum_weight * 37) // t.w > ((cum_weight - n_chars) * 37) // t.w
-""",
-)
-def pps_systematic_sample_query(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """k=37 (prime, to avoid aliasing against any periodicity in the
-    synthetic weights); order = doc_id. Output = the selected rows
-    with their covering selection point."""
-    from openaq_data_pipeline_spark.operators.curation import (
-        pps_systematic_sample,
-    )
-
-    d = load(spark, sf_dir, "documents")["documents"].select(
-        "doc_id", "n_chars"
-    )
-    return pps_systematic_sample(d, "n_chars", "doc_id", k=37)
 
 
 # the driver corpus draws from a synthetic systems vocabulary whose

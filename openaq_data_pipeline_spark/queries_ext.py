@@ -1,257 +1,38 @@
-"""Extension operator queries: dedup, similarity search, text
-analysis, multimodal plumbing — the training-data-pipeline surface
-(BASELINE.json north star), each oracle-paired where SQL-expressible.
+"""Extension operator queries: dedup, hybrid retrieval, text
+analysis, multimodal plumbing, the quality and streaming surfaces and
+graph scoring — the training-data-pipeline surface (BASELINE.json
+north star), each oracle-paired where SQL-expressible.
 
 The synthetic documents table has no natural duplicates, so the
-dedup queries build a deterministic *mutated corpus* inline — every
-5th document gets a copy (id + 100000) with its last five words
-dropped — giving true near-duplicate positives that both engines
-construct identically.
+dedup queries build deterministic near-duplicate batches inline that
+both engines construct identically.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window
 
 from openaq_data_pipeline_spark.catalog import (
     HOUR_FMT_DUCK,
     HOUR_FMT_SPARK,
-    TS_FMT_DUCK,
-    TS_FMT_SPARK,
     exact_avg_duck,
     exact_avg_spark,
     exact_ratio_duck,
-    exact_ratio_spark,
     fan_out,
     load,
     register,
-    register_rotated,
-    ts_str,
 )
-from openaq_data_pipeline_spark.operators import dedup as D
 from openaq_data_pipeline_spark.operators import text as X
 from openaq_data_pipeline_spark.operators.multimodal import extract_features
-from openaq_data_pipeline_spark.operators.similarity import (
-    ivf_topk,
-    brute_force_topk,
-    cosine_near_dup_pairs,
-    lsh_topk,
-)
-
-# --- shared corpus builders (Spark + DuckDB must agree exactly) --------
-
-
-def _mutated_corpus(documents: DataFrame) -> DataFrame:
-    """documents ∪ truncated copies of every 5th doc (id+100000).
-    Only docs with ≥ 8 words are mutated so 3-gram shingling stays
-    well-defined on both sides. Callers that feed the jaccard posting
-    -list pipeline fan_out the scan first: since the r4 single-pass
-    rewrite of jaccard_pairs the shingle explode runs in the SCAN
-    stage (no distinct/window shuffle parallelizes it any more), so a
-    one-file input would chew the whole regex+explode on one core
-    (measured ~0.6 s/query at sf0.1)."""
-    w = F.split(F.col("text"), " ")
-    mutated = (
-        documents.filter((F.col("doc_id") % 5 == 0) & (F.size(w) >= 8))
-        .select(
-            (F.col("doc_id") + 100000).alias("doc_id"),
-            F.concat_ws(" ", F.slice(w, 1, F.size(w) - 5)).alias("text"),
-        )
-    )
-    return documents.select("doc_id", "text").unionByName(mutated)
-
-
-_MUTATED_DUCK = """
-corpus AS (
-    SELECT doc_id, text FROM documents
-    UNION ALL
-    SELECT doc_id + 100000 AS doc_id,
-           array_to_string(list_slice(string_split(text, ' '), 1,
-               len(string_split(text, ' ')) - 5), ' ') AS text
-    FROM documents
-    WHERE doc_id % 5 = 0 AND len(string_split(text, ' ')) >= 8
-)
-"""
-
-# (id, shingle) distinct 3-gram shingles; docs need ≥ 3 words.
-# The 4000-row series bound caps document length; log-noted in the
-# operator docstring (documents in this corpus are ≪ 4000 words).
-_SHINGLES_DUCK = """
-words AS (
-    SELECT doc_id, string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
-    FROM corpus
-),
-shingles AS (
-    SELECT DISTINCT doc_id,
-           w[g.i] || ' ' || w[g.i + 1] || ' ' || w[g.i + 2] AS shingle
-    FROM words, generate_series(1, 4000) g(i)
-    WHERE g.i <= len(w) - 2
-)
-"""
-
-# stop-shingle guard mirror (dedup.jaccard_pairs max_doc_freq=1000):
-# shingles shared by more than 1000 documents leave the universe
-# before pair generation
-_STOP_SHINGLE_DUCK = """
-fsh AS (
-    SELECT doc_id, shingle FROM (
-        SELECT doc_id, shingle, count(*) OVER (PARTITION BY shingle) AS df
-        FROM shingles
-    ) WHERE df <= 1000
-)
-"""
-
-
-def _minhash_duck(num_hashes: int = 8) -> str:
-    # mirror of operators/dedup.minhash_signatures: hash i = 8-hex
-    # slice i%4 of md5(f"{i//4}|" + shingle)
-    mins = ",\n           ".join(
-        f"min(substr(md5('{i // 4}|' || shingle), {(i % 4) * 8 + 1}, 8)) AS minhash_{i}"
-        for i in range(num_hashes)
-    )
-    return f"""
-signatures AS (
-    SELECT doc_id,
-           {mins}
-    FROM shingles GROUP BY doc_id
-)
-"""
-
-
-def _bands_duck(num_hashes: int = 8, band_size: int = 2) -> str:
-    n_bands = num_hashes // band_size
-    selects = []
-    for b in range(n_bands):
-        cols = " || '|' || ".join(
-            f"minhash_{i}" for i in range(b * band_size, (b + 1) * band_size)
-        )
-        selects.append(
-            f"SELECT doc_id, {b} AS band_id, md5({cols}) AS band_hash FROM signatures"
-        )
-    return "bands AS (\n    " + "\n    UNION ALL\n    ".join(selects) + "\n)"
-
 
 # --- text analysis ------------------------------------------------------
-
-_BPE_RE_SQL = "[A-Za-z]+(?:''[A-Za-z]+)?|[0-9]+|[^A-Za-z0-9\\s]"
-
-
-@register_rotated(
-    "text_token_stats",
-    "EXT-text — token counting: whitespace + BPE-ish regexp "
-    "tokenizers, chars-per-token ratio",
-    oracle=f"""
-SELECT doc_id,
-       CAST(len(string_split(trim(text), ' ')) AS BIGINT) AS n_tokens,
-       CAST(len(regexp_extract_all(text, '{_BPE_RE_SQL}')) AS BIGINT) AS n_bpe_tokens,
-       CAST(length(text) AS BIGINT) AS n_chars,
-       {exact_ratio_duck('length(text)', "len(string_split(trim(text), ' '))")} AS chars_per_token
-FROM documents
-""",
-)
-def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = fan_out(load(spark, sf_dir, "documents")["documents"])
-    n_tok = X.token_count(F.col("text"))
-    return d.select(
-        "doc_id",
-        n_tok.alias("n_tokens"),
-        X.bpe_token_count(F.col("text")).alias("n_bpe_tokens"),
-        F.length("text").cast("long").alias("n_chars"),
-        exact_ratio_spark(F.length("text"), n_tok).alias("chars_per_token"),
-    )
-
-
-_STOPWORD_RE_SQL = "\\b(?:" + "|".join(X.STOPWORDS) + ")\\b"
-_N_STOP_SQL = f"len(regexp_extract_all(lower(text), '{_STOPWORD_RE_SQL}'))"
-
-@register_rotated(
-    # rotated r6 after 3 green driver rounds (r3-r5); the text family
-    # stays driver-live (text_token_stats, text_repetition_signals,
-    # corpus_curation) and this query keeps full Spark-vs-DuckDB
-    # parity via pytest. Slot freed for dedup_simhash_incremental.
-    "text_quality_scores",
-    "EXT-text — quality scoring: alpha/punct/stopword ratios + "
-    "length-based keep/flag verdict",
-    oracle=f"""
-SELECT doc_id,
-       CAST(length(text) AS BIGINT) AS n_chars,
-       CAST({_N_STOP_SQL} AS BIGINT) AS n_stopwords,
-       {exact_ratio_duck("len(regexp_extract_all(text, '[A-Za-z]'))", "length(text)")} AS alpha_ratio,
-       {exact_ratio_duck("len(regexp_extract_all(text, '[^ -~]'))", "length(text)")} AS nonascii_ratio,
-       {exact_ratio_duck(_N_STOP_SQL, "len(string_split(trim(text), ' '))")} AS stopword_ratio,
-       CASE WHEN length(text) BETWEEN 50 AND 10000
-             AND len(regexp_extract_all(text, '[A-Za-z]')) * 2 > length(text)
-            THEN 'keep' ELSE 'flag' END AS verdict
-FROM documents
-""",
-)
-def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = fan_out(load(spark, sf_dir, "documents")["documents"])
-    n_chars = F.length("text").cast("long")
-    n_alpha = F.size(F.regexp_extract_all("text", F.lit(r"[A-Za-z]"), 0)).cast("long")
-    n_nonascii = F.size(F.regexp_extract_all("text", F.lit(r"[^ -~]"), 0)).cast("long")
-    n_stop = X.stopword_count(F.col("text"))
-    n_tok = X.token_count(F.col("text"))
-    return d.select(
-        "doc_id",
-        n_chars.alias("n_chars"),
-        n_stop.alias("n_stopwords"),
-        exact_ratio_spark(n_alpha, n_chars).alias("alpha_ratio"),
-        exact_ratio_spark(n_nonascii, n_chars).alias("nonascii_ratio"),
-        exact_ratio_spark(n_stop, n_tok).alias("stopword_ratio"),
-        F.when(
-            n_chars.between(50, 10000) & (n_alpha * 2 > n_chars), "keep"
-        )
-        .otherwise("flag")
-        .alias("verdict"),
-    )
 
 
 _LANG_COUNTS_DUCK = ",\n       ".join(
     f"len(regexp_extract_all(lower(text), '\\b(?:{'|'.join(words)})\\b')) AS c_{lang}"
     for lang, words in X.LANG_MARKERS.items()
 )
-
-
-@register_rotated(
-    # rotated r6 after 3 green driver rounds (r3-r5); the family
-    # stays driver-live (text: text_token_stats/text_quality_scores/
-    # text_repetition_signals; ANN: ann_topk_lsh/ann_topk_ivf) and
-    # this query keeps full Spark-vs-DuckDB parity via pytest
-    "text_lang_id",
-    "EXT-text — heuristic language ID (marker-stopword scoring, "
-    "fixed-priority tie break) vs the labeled lang column",
-    oracle=f"""
-WITH scored AS (
-    SELECT doc_id, lang,
-       {_LANG_COUNTS_DUCK}
-    FROM documents
-)
-SELECT doc_id, lang,
-       CASE WHEN c_en + c_es + c_de + c_fr = 0 THEN 'und'
-            WHEN c_en >= c_es AND c_en >= c_de AND c_en >= c_fr THEN 'en'
-            WHEN c_es >= c_de AND c_es >= c_fr THEN 'es'
-            WHEN c_de >= c_fr THEN 'de'
-            ELSE 'fr' END AS lang_pred,
-       (CASE WHEN c_en + c_es + c_de + c_fr = 0 THEN 'und'
-            WHEN c_en >= c_es AND c_en >= c_de AND c_en >= c_fr THEN 'en'
-            WHEN c_es >= c_de AND c_es >= c_fr THEN 'es'
-            WHEN c_de >= c_fr THEN 'de'
-            ELSE 'fr' END) = lang AS is_match
-FROM scored
-""",
-)
-def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = fan_out(load(spark, sf_dir, "documents")["documents"])
-    pred = X.lang_id(F.col("text"))
-    return d.select(
-        "doc_id",
-        "lang",
-        pred.alias("lang_pred"),
-        (pred == F.col("lang")).alias("is_match"),
-    )
 
 
 _LANG_PRED_DUCK = """CASE WHEN c_en + c_es + c_de + c_fr = 0 THEN 'und'
@@ -296,8 +77,8 @@ FROM surv JOIN kept k ON k.doc_id = surv.doc_id
 def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full curation funnel a training pipeline runs before
     tokenization, composed from the engine's own operators: quality
-    verdict (text_quality_scores semantics) → lang-id 'en' gate →
-    exact dedup (dedup_exact semantics, min-id survivor). One regex
+    verdict (alpha-ratio and length rules) → lang-id 'en' gate →
+    exact dedup (fingerprint groups, min-id survivor). One regex
     projection pass and ONE shuffle on the MD5 fingerprint (uniform
     → skew-free): the survivor's metadata rides the same aggregate
     via ``min_by(n_tokens, doc_id)`` (doc_id unique ⇒ deterministic),
@@ -338,250 +119,6 @@ def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- dedup --------------------------------------------------------------
-
-
-@register_rotated(
-    "dedup_exact",
-    "EXT-dedup — exact dedup by content fingerprint (hash-groupBy, "
-    "min-id survivor) over a re-ingested (doubled) corpus; rotated "
-    "after two green driver rounds — corpus_curation driver-verifies "
-    "the identical fingerprint + min-id-survivor + join-back "
-    "semantics",
-    oracle="""
-WITH corpus AS (
-    SELECT doc_id, text FROM documents
-    UNION ALL
-    SELECT doc_id + 200000, text FROM documents
-),
-fp AS (
-    SELECT doc_id, md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fingerprint
-    FROM corpus
-)
-SELECT fingerprint, CAST(min(doc_id) AS BIGINT) AS doc_id,
-       CAST(count(*) AS BIGINT) AS n_copies
-FROM fp GROUP BY fingerprint
-""",
-)
-def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")["documents"]
-    corpus = d.select("doc_id", "text").unionByName(
-        d.select((F.col("doc_id") + 200000).alias("doc_id"), "text")
-    )
-    return (
-        corpus.select("doc_id", X.fingerprint(F.col("text")).alias("fingerprint"))
-        .groupBy("fingerprint")
-        .agg(
-            F.min("doc_id").cast("long").alias("doc_id"),
-            F.count("*").cast("long").alias("n_copies"),
-        )
-    )
-
-
-@register_rotated(
-    # rotated r7 after 3 green driver rounds (r4-r6); MinHash banding
-    # stays driver-live via fuzzy_decon_incremental (band buckets +
-    # exact-Jaccard verify against the persisted band index) and the
-    # clustering consumers (dedup_keep_one/keep_best); full
-    # Spark-vs-DuckDB parity continues via pytest. Slot freed for
-    # dedup_exact_incremental.
-    "dedup_minhash_lsh",
-    "EXT-dedup — MinHash(k=8) + LSH banding (4 bands × 2 rows): "
-    "near-dup candidate pairs on the mutated corpus; the "
-    "degenerate-bucket cap (≤2048 members per band bucket) is "
-    "mirrored by the oracle's bucket-size exclusion",
-    oracle=f"""
-WITH {_MUTATED_DUCK.strip()},
-{_SHINGLES_DUCK.strip()},
-{_minhash_duck(8).strip()},
-{_bands_duck(8, 2).strip()},
-bsz AS (
-    SELECT band_id, band_hash, count(*) AS c
-    FROM bands GROUP BY band_id, band_hash
-)
-SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-FROM bands a JOIN bands b
-  ON a.band_id = b.band_id AND a.band_hash = b.band_hash
- AND a.doc_id < b.doc_id
-JOIN bsz s ON s.band_id = a.band_id AND s.band_hash = a.band_hash
-WHERE s.c <= 2048
-""",
-)
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")["documents"]
-    corpus = _mutated_corpus(d).filter(F.size(F.split("text", " ")) >= 3)
-    sh = D.shingles(corpus, "text", "doc_id", n=3, distinct=False)  # MIN is multiset-invariant
-    sig = D.minhash_signatures(sh, "doc_id", num_hashes=8)
-    return D.lsh_candidate_pairs(sig, "doc_id", num_hashes=8, band_size=2)
-
-
-@register_rotated(
-    "dedup_ngram_jaccard",
-    "EXT-dedup — exact n-gram Jaccard verification (shingle "
-    "equi-join) at threshold 0.5 on the mutated corpus, with the "
-    "df≤1000 stop-shingle guard live; rotated r5 after FOUR green "
-    "driver rounds (r1-r4) — the identical jaccard_pairs pipeline "
-    "remains driver-verified as stage one of dedup_keep_one and "
-    "dedup_keep_best, and stays Spark-vs-DuckDB parity-checked "
-    "every pytest run",
-    oracle=f"""
-WITH {_MUTATED_DUCK.strip()},
-{_SHINGLES_DUCK.strip()},
-{_STOP_SHINGLE_DUCK.strip()},
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM fsh GROUP BY doc_id),
-common AS (
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-    FROM fsh a JOIN fsh b
-      ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    GROUP BY a.doc_id, b.doc_id
-)
-SELECT id_a, id_b,
-       CAST(n_common AS BIGINT) AS n_common,
-       CAST(sa.n_sh AS BIGINT) AS n_a,
-       CAST(sb.n_sh AS BIGINT) AS n_b,
-       {exact_ratio_duck('n_common', 'sa.n_sh + sb.n_sh - n_common')} AS jaccard
-FROM common
-JOIN sizes sa ON sa.doc_id = id_a
-JOIN sizes sb ON sb.doc_id = id_b
-WHERE {exact_ratio_duck('n_common', 'sa.n_sh + sb.n_sh - n_common')} >= 0.5
-""",
-)
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")["documents"]
-    # fan_out: the regex+explode shingle build runs in the scan stage,
-    # which on a one-file input is a single task without it
-    corpus = _mutated_corpus(fan_out(d)).filter(F.size(F.split("text", " ")) >= 3)
-    sh = D.shingles(corpus, "text", "doc_id", n=3, distinct=False)  # jaccard_pairs dedups in its posting-list aggregate
-    return D.jaccard_pairs(sh, "doc_id", min_jaccard=0.5, max_doc_freq=1000)
-
-
-@register_rotated(
-    # rotated r7 after 3 green driver rounds (r4-r6); the containment
-    # family stays driver-live via dedup_containment_incremental
-    # (same fixture, same excerpt-catching semantics, plus the
-    # persisted-index path), and this query keeps full
-    # Spark-vs-DuckDB parity via pytest.
-    "dedup_containment",
-    "EXT-dedup — Broder containment |A∩B|/min(|A|,|B|) at threshold "
-    "0.8: the asymmetric companion to Jaccard that catches "
-    "EXCERPT/QUOTE duplication (a 10-word excerpt of a long article "
-    "scores containment 1.0 but Jaccard ~0.02, invisible to any "
-    "symmetric threshold); same single-exchange posting-list "
-    "topology and stop-shingle guard as dedup_ngram_jaccard",
-    oracle=f"""
-WITH corpus AS (
-    SELECT doc_id, text FROM documents
-    UNION ALL
-    SELECT doc_id + 300000 AS doc_id,
-           array_to_string(list_slice(string_split(text, ' '), 1, 10), ' ') AS text
-    FROM documents
-    WHERE doc_id % 7 = 0 AND len(string_split(text, ' ')) >= 12
-),
-{_SHINGLES_DUCK.strip()},
-{_STOP_SHINGLE_DUCK.strip()},
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM fsh GROUP BY doc_id),
-common AS (
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-    FROM fsh a JOIN fsh b
-      ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    GROUP BY a.doc_id, b.doc_id
-)
-SELECT id_a, id_b,
-       CAST(n_common AS BIGINT) AS n_common,
-       CAST(sa.n_sh AS BIGINT) AS n_a,
-       CAST(sb.n_sh AS BIGINT) AS n_b,
-       {exact_ratio_duck('n_common', 'least(sa.n_sh, sb.n_sh)')} AS containment
-FROM common
-JOIN sizes sa ON sa.doc_id = id_a
-JOIN sizes sb ON sb.doc_id = id_b
-WHERE {exact_ratio_duck('n_common', 'least(sa.n_sh, sb.n_sh)')} >= 0.8
-""",
-)
-def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents ∪ 10-word excerpts of every 7th doc (id+300000):
-    every excerpt's shingle set is a subset of its source's, so the
-    pair scores containment 1.0 while its Jaccard is ~8/n_source —
-    exactly the embedded-copy class the jaccard threshold can never
-    see."""
-    d = load(spark, sf_dir, "documents")["documents"]
-    w = F.split(F.col("text"), " ")
-    excerpts = d.filter((F.col("doc_id") % 7 == 0) & (F.size(w) >= 12)).select(
-        (F.col("doc_id") + 300000).alias("doc_id"),
-        F.concat_ws(" ", F.slice(w, 1, 10)).alias("text"),
-    )
-    corpus = fan_out(d).select("doc_id", "text").unionByName(excerpts).filter(
-        F.size(F.split("text", " ")) >= 3
-    )
-    sh = D.shingles(corpus, "text", "doc_id", n=3, distinct=False)
-    return D.containment_pairs(sh, "doc_id", min_containment=0.8, max_doc_freq=1000)
-
-
-@register_rotated(
-    "dedup_containment_incremental",
-    "EXT-dedup — INCREMENTAL containment tier (VERDICT r6 next #7), "
-    "completing the per-tier incremental set (Jaccard, MinHash bands, "
-    "SimHash, containment): history is indexed ONCE into the "
-    "persisted bucketed posting/size tables (build_full_index — no "
-    "dedup pass, the reference-corpus bootstrap), and the excerpt "
-    "batch probes it for cross pairs at containment ≥ 0.8 without "
-    "re-shingling history; posting re-aggregation and size lookup "
-    "are bucket-local on the index side. Oracle recomputes every "
-    "cross containment pair from raw text with no index — the hash "
-    "match IS the index == recompute proof",
-    oracle=f"""
-WITH corpus AS (
-    SELECT doc_id, text FROM documents
-    UNION ALL
-    SELECT doc_id + 300000 AS doc_id,
-           array_to_string(list_slice(string_split(text, ' '), 1, 10), ' ') AS text
-    FROM documents
-    WHERE doc_id % 7 = 0 AND len(string_split(text, ' ')) >= 12
-),
-{_SHINGLES_DUCK.strip()},
-{_STOP_SHINGLE_DUCK.strip()},
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM shingles GROUP BY doc_id),
-common AS (
-    SELECT b.doc_id AS new_id, a.doc_id AS old_id, count(*) AS n_common
-    FROM fsh a JOIN fsh b ON a.shingle = b.shingle
-    WHERE a.doc_id < 300000 AND b.doc_id >= 300000
-    GROUP BY b.doc_id, a.doc_id
-)
-SELECT new_id, old_id,
-       CAST(n_common AS BIGINT) AS n_common,
-       CAST(sn.n_sh AS BIGINT) AS n_new,
-       CAST(so.n_sh AS BIGINT) AS n_old,
-       {exact_ratio_duck('n_common', 'least(sn.n_sh, so.n_sh)')} AS containment
-FROM common
-JOIN sizes sn ON sn.doc_id = new_id
-JOIN sizes so ON so.doc_id = old_id
-WHERE {exact_ratio_duck('n_common', 'least(sn.n_sh, so.n_sh)')} >= 0.8
-""",
-)
-def dedup_containment_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same excerpt fixture as `dedup_containment` (10-word excerpts
-    of every 7th doc, id+300000), run the incremental way: index the
-    originals in full, probe the excerpt batch. Contract difference
-    vs the whole-corpus operator, mirrored by the oracle: CROSS pairs
-    only, and denominators are FULL per-doc shingle counts (the
-    persisted text-only property) while the numerator stays under the
-    combined-df guard. Context-managed temp index: no catalog or /tmp
-    residue."""
-    from openaq_data_pipeline_spark.operators.incremental_dedup import (
-        build_full_index,
-        incremental_containment_matches,
-        temp_index,
-    )
-
-    d = fan_out(load(spark, sf_dir, "documents")["documents"])
-    w = F.split(F.col("text"), " ")
-    excerpts = d.filter((F.col("doc_id") % 7 == 0) & (F.size(w) >= 12)).select(
-        (F.col("doc_id") + 300000).alias("doc_id"),
-        F.concat_ws(" ", F.slice(w, 1, 10)).alias("text"),
-    )
-    with temp_index(n_buckets=8) as idx:
-        build_full_index(d.select("doc_id", "text"), "text", "doc_id", idx)
-        return incremental_containment_matches(
-            excerpts, "text", "doc_id", idx, min_containment=0.8
-        ).localCheckpoint(eager=True)
 
 
 @register(
@@ -655,421 +192,6 @@ def dedup_exact_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         return incremental_exact_dedup(
             batch, "text", "doc_id", idx
         ).localCheckpoint(eager=True)
-
-
-# shared pairs → transitive-closure → cluster CTE chain (DuckDB
-# recursive CTE mirror of jaccard_pairs + connected_components);
-# callers append their own final SELECT
-def _clusters_duck(corpus_cte: str) -> str:
-    """pairs → transitive-closure → cluster CTE chain over any corpus
-    CTE (DuckDB recursive mirror of jaccard_pairs +
-    connected_components); callers append their own final SELECT."""
-    return f"""{corpus_cte.strip()},
-{_SHINGLES_DUCK.strip()},
-{_STOP_SHINGLE_DUCK.strip()},
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM fsh GROUP BY doc_id),
-common AS (
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-    FROM fsh a JOIN fsh b
-      ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    GROUP BY a.doc_id, b.doc_id
-),
-pairs AS (
-    SELECT id_a, id_b
-    FROM common
-    JOIN sizes sa ON sa.doc_id = id_a
-    JOIN sizes sb ON sb.doc_id = id_b
-    WHERE {exact_ratio_duck('n_common', 'sa.n_sh + sb.n_sh - n_common')} >= 0.5
-),
-edges AS MATERIALIZED (
-    -- MATERIALIZED (r17): DuckDB inlines plain CTEs, so the
-    -- recursive walk below re-ran the whole shingle self-join every
-    -- iteration (measured 154s -> 1s at sf0.001 on the incremental
-    -- variant); materializing the feeder is row-identical
-    SELECT id_a AS n1, id_b AS n2 FROM pairs
-    UNION ALL
-    SELECT id_b, id_a FROM pairs
-),
-walk(node, r) AS (
-    SELECT n1, n1 FROM edges
-    UNION
-    SELECT e.n2, w.r FROM walk w JOIN edges e ON e.n1 = w.node
-),
-comp AS (
-    SELECT node AS doc_id, CAST(min(r) AS BIGINT) AS component_id
-    FROM walk GROUP BY node
-),
-csize AS (
-    SELECT component_id, CAST(count(*) AS BIGINT) AS cluster_size
-    FROM comp GROUP BY component_id
-)"""
-
-
-_CLUSTERS_DUCK = _clusters_duck(_MUTATED_DUCK)
-
-
-@register_rotated(
-    "dedup_clusters",
-    "EXT-dedup — connected components over the verified near-dup pair "
-    "graph (iterative min-label propagation): pair list → duplicate "
-    "CLUSTERS with a canonical min-id representative. Oracle: DuckDB "
-    "recursive CTE computes the same transitive min-label closure; "
-    "rotated in favor of dedup_keep_one, which driver-verifies the "
-    "identical pairs→components pipeline plus the final survivor "
-    "materialization",
-    oracle=f"""
-WITH RECURSIVE {_CLUSTERS_DUCK}
-SELECT doc_id, component_id, cluster_size FROM comp JOIN csize USING (component_id)
-""",
-)
-def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Jaccard-verified pairs (same settings as dedup_ngram_jaccard)
-    → connected components → per-doc (component_id, cluster_size).
-    Non-trivial topology at this threshold (37 multi-degree nodes at
-    sf0.01): chains A~B~C without A~C, so the closure is real work,
-    not a per-pair groupBy."""
-    d = load(spark, sf_dir, "documents")["documents"]
-    corpus = _mutated_corpus(fan_out(d)).filter(F.size(F.split("text", " ")) >= 3)
-    sh = D.shingles(corpus, "text", "doc_id", n=3, distinct=False)  # jaccard_pairs dedups in its posting-list aggregate
-    pairs = D.jaccard_pairs(sh, "doc_id", min_jaccard=0.5, max_doc_freq=1000)
-    comp = D.connected_components(pairs)
-    sizes = comp.groupBy("component_id").agg(
-        F.count(F.lit(1)).cast("long").alias("cluster_size")
-    )
-    return (
-        comp.select(F.col("node").alias("doc_id"), "component_id")
-        .join(F.broadcast(sizes), "component_id")
-        .select("doc_id", "component_id", "cluster_size")
-    )
-
-
-@register_rotated(
-    "dedup_keep_one",
-    "EXT-dedup — end-to-end deduped-corpus materialization: Jaccard-"
-    "verified pairs → connected components → keep the min-id "
-    "representative per cluster, singletons pass through (cluster_"
-    "size 1). This is the table a curation run actually trains on — "
-    "the final step of the pair→cluster→keep-one pipeline. Oracle: "
-    "recursive-CTE closure + anti-join, identical semantics",
-    oracle=f"""
-WITH RECURSIVE {_CLUSTERS_DUCK}
-SELECT c.doc_id,
-       CAST(coalesce(cs.cluster_size, 1) AS BIGINT) AS cluster_size
-FROM (
-    SELECT doc_id FROM corpus
-    WHERE len(string_split(text, ' ')) >= 3
-) c
-LEFT JOIN comp ON comp.doc_id = c.doc_id
-LEFT JOIN csize cs ON cs.component_id = c.doc_id
-WHERE comp.doc_id IS NULL OR comp.component_id = c.doc_id
-""",
-)
-def dedup_keep_one(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same pair pipeline as dedup_clusters, then
-    dedup.keep_one_per_cluster: anti-join away non-representative
-    members, left-join cluster sizes onto survivors."""
-    d = load(spark, sf_dir, "documents")["documents"]
-    corpus = _mutated_corpus(fan_out(d)).filter(F.size(F.split("text", " ")) >= 3)
-    sh = D.shingles(corpus, "text", "doc_id", n=3, distinct=False)  # jaccard_pairs dedups in its posting-list aggregate
-    pairs = D.jaccard_pairs(sh, "doc_id", min_jaccard=0.5, max_doc_freq=1000)
-    comp = D.connected_components(pairs)
-    return D.keep_one_per_cluster(corpus.select("doc_id"), comp, id_col="doc_id")
-
-
-@register_rotated(
-    "text_repetition_signals",
-    "EXT-text — Gopher-style repetition quality signals per document: "
-    "total bigrams, fraction claimed by the most frequent bigram, "
-    "fraction occurring more than once (boilerplate/keyword-stuffing "
-    "filters from the MassiveText/RefinedWeb recipe); one explode + "
-    "two partial-aggregated hash aggregates, exact integer-rounded "
-    "ratios",
-    oracle=f"""
-WITH words AS (
-    SELECT doc_id,
-           string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
-    FROM documents
-),
-grams AS (
-    SELECT doc_id, w[g.i] || ' ' || w[g.i + 1] AS shingle
-    FROM words, generate_series(1, 4000) g(i)
-    WHERE g.i <= len(w) - 1 AND len(w) >= 2
-),
-per_gram AS (
-    SELECT doc_id, shingle, count(*) AS c FROM grams GROUP BY doc_id, shingle
-)
-SELECT doc_id,
-       CAST(sum(c) AS BIGINT) AS n_grams,
-       {exact_ratio_duck('max(c)', 'sum(c)')} AS frac_top_gram,
-       {exact_ratio_duck('coalesce(sum(CASE WHEN c > 1 THEN c END), 0)', 'sum(c)')} AS frac_dup_grams
-FROM per_gram GROUP BY doc_id
-""",
-)
-def text_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fan_out: the regex+explode gram build runs in the scan stage,
-    # which on a one-file input is a single task without it
-    d = fan_out(load(spark, sf_dir, "documents")["documents"])
-    return X.repetition_signals(d, "text", "doc_id", n=2)
-
-
-# 64 majority-vote sums: bit j reads hex digit (j mod 32) of
-# md5(tok) — nibble bit 3 (digit >= 8) for j < 32, nibble bit 2
-# (digit & 4) for j >= 32 — mirrors operators/dedup.simhash64.
-_SIMHASH_SUMS_DUCK = ",\n           ".join(
-    "sum(CASE WHEN substr(md5(tok), %d, 1) IN (%s) "
-    "THEN 1 ELSE -1 END) AS s%d"
-    % (
-        (j % 32) + 1,
-        "'8','9','a','b','c','d','e','f'"
-        if j < 32
-        else "'4','5','6','7','c','d','e','f'",
-        j,
-    )
-    for j in range(64)
-)
-# four 16-bit band integers from the vote signs
-_SIMHASH_BANDS_DUCK = ",\n       ".join(
-    "CAST(%s AS INTEGER) AS b%d"
-    % (
-        " + ".join(
-            f"(CASE WHEN s{16 * k + j} >= 0 THEN {1 << j} ELSE 0 END)"
-            for j in range(16)
-        ),
-        k,
-    )
-    for k in range(4)
-)
-_SIMHASH_HAMMING_DUCK = " + ".join(
-    f"bit_count(xor(fa.b{k}, fb.b{k}))" for k in range(4)
-)
-
-# simhash-specific mutation: append ONE token to every 5th doc.
-# Removing 5 words (the shared _MUTATED_DUCK) flips ~10+ of 64 bits
-# on typical docs — past any banded radius; a single appended token
-# shifts every bit-sum by ±1 and flips only the bits whose vote was
-# balanced, landing many true near-dup pairs in Hamming 1..3 where
-# the banded search (and not Hamming-0 bucketing) finds them.
-_APPENDED_DUCK = """
-corpus AS (
-    SELECT doc_id, text FROM documents
-    UNION ALL
-    SELECT doc_id + 100000 AS doc_id, text || ' qq' AS text
-    FROM documents WHERE doc_id % 5 = 0
-)
-"""
-
-
-def _appended_corpus(documents: DataFrame) -> DataFrame:
-    """documents ∪ one-token-appended copies of every 5th doc
-    (id+100000) — the Hamming-1..3 near-dup testbed mirrored by
-    ``_APPENDED_DUCK``."""
-    mutated = documents.filter(F.col("doc_id") % 5 == 0).select(
-        (F.col("doc_id") + 100000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" qq")).alias("text"),
-    )
-    return documents.select("doc_id", "text").unionByName(mutated)
-
-
-@register_rotated(
-    "dedup_simhash",
-    "[rotated r8 after green r1-r7; simhash family stays driver-live "
-    "via dedup_simhash_incremental, which runs the same fingerprint + "
-    "banding + Hamming verify plus the cross-batch index] "
-    "EXT-dedup — 64-bit SimHash (4×16-bit bands) + banded Hamming≤3 "
-    "search: pigeonhole guarantees any pair within distance 3 agrees "
-    "exactly on ≥1 band, so candidates come from four band "
-    "equi-joins (one stack+exchange in Spark) and an integer "
-    "bit_count(xor) verify — no O(n²) scan at any radius; the "
-    "degenerate-bucket cap (≤2048 members) is mirrored by the oracle",
-    oracle=f"""
-WITH {_APPENDED_DUCK.strip()},
-words AS (
-    SELECT doc_id, string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
-    FROM corpus
-),
-toks AS (
-    SELECT doc_id, w[g.i] AS tok
-    FROM words, generate_series(1, 4000) g(i)
-    WHERE g.i <= len(w) AND w[g.i] <> ''
-),
-votes AS (
-    SELECT doc_id,
-           {_SIMHASH_SUMS_DUCK}
-    FROM toks GROUP BY doc_id
-),
-fp AS (
-    SELECT doc_id,
-       {_SIMHASH_BANDS_DUCK}
-    FROM votes
-),
-bands AS (
-    SELECT doc_id, 0 AS band_id, b0 AS band_val FROM fp
-    UNION ALL SELECT doc_id, 1, b1 FROM fp
-    UNION ALL SELECT doc_id, 2, b2 FROM fp
-    UNION ALL SELECT doc_id, 3, b3 FROM fp
-),
-bsz AS (
-    SELECT band_id, band_val, count(*) AS c
-    FROM bands GROUP BY band_id, band_val
-),
-cand AS (
-    SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-    FROM bands a
-    JOIN bands b ON a.band_id = b.band_id AND a.band_val = b.band_val
-                AND a.doc_id < b.doc_id
-    JOIN bsz s ON s.band_id = a.band_id AND s.band_val = a.band_val
-    WHERE s.c <= 2048
-)
-SELECT c.id_a, c.id_b,
-       CAST({_SIMHASH_HAMMING_DUCK} AS INTEGER) AS hamming
-FROM cand c
-JOIN fp fa ON fa.doc_id = c.id_a
-JOIN fp fb ON fb.doc_id = c.id_b
-WHERE {_SIMHASH_HAMMING_DUCK} <= 3
-""",
-)
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")["documents"]
-    # fan_out: the token explode + two MD5s + 64 vote aggregates all
-    # run map-side in the scan stage — a one-file input would chew
-    # them on a single core
-    corpus = _appended_corpus(fan_out(d))
-    fp = D.simhash64(corpus, "text", "doc_id")
-    return D.simhash_near_dup_pairs(fp, "doc_id", max_hamming=3, max_bucket=2048)
-
-
-@register_rotated(
-    "dedup_simhash_incremental",
-    "EXT-dedup — INCREMENTAL SimHash near-dup search (r6, the "
-    "optional half of VERDICT r5 next #3): the corpus is "
-    "fingerprinted ONCE into a persisted bkey-bucketed band table "
-    "whose member structs carry FULL fingerprints, so a new batch "
-    "probes with batch-sized work — band join bucket-local on the "
-    "index side, Hamming verify INLINE on the joined lists (no "
-    "second lookup), combined-membership cap. Same from-scratch "
-    "whole-corpus oracle as `dedup_simhash` restricted to cross "
-    "pairs: per-document fingerprints make probe == recompute "
-    "provable, and the driver hash-match IS that proof",
-    oracle=f"""
-WITH {_APPENDED_DUCK.strip()},
-words AS (
-    SELECT doc_id, string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
-    FROM corpus
-),
-toks AS (
-    SELECT doc_id, w[g.i] AS tok
-    FROM words, generate_series(1, 4000) g(i)
-    WHERE g.i <= len(w) AND w[g.i] <> ''
-),
-votes AS (
-    SELECT doc_id,
-           {_SIMHASH_SUMS_DUCK}
-    FROM toks GROUP BY doc_id
-),
-fp AS (
-    SELECT doc_id,
-       {_SIMHASH_BANDS_DUCK}
-    FROM votes
-),
-bands AS (
-    SELECT doc_id, 0 AS band_id, b0 AS band_val FROM fp
-    UNION ALL SELECT doc_id, 1, b1 FROM fp
-    UNION ALL SELECT doc_id, 2, b2 FROM fp
-    UNION ALL SELECT doc_id, 3, b3 FROM fp
-),
-bsz AS (
-    SELECT band_id, band_val, count(*) AS c
-    FROM bands GROUP BY band_id, band_val
-),
-cand AS (
-    SELECT DISTINCT b.doc_id AS id_a, a.doc_id AS id_b
-    FROM bands a
-    JOIN bands b ON a.band_id = b.band_id AND a.band_val = b.band_val
-                AND a.doc_id < 100000 AND b.doc_id >= 100000
-    JOIN bsz s ON s.band_id = a.band_id AND s.band_val = a.band_val
-    WHERE s.c <= 2048
-)
-SELECT c.id_a, c.id_b,
-       CAST({_SIMHASH_HAMMING_DUCK} AS INTEGER) AS hamming
-FROM cand c
-JOIN fp fa ON fa.doc_id = c.id_a
-JOIN fp fb ON fb.doc_id = c.id_b
-WHERE {_SIMHASH_HAMMING_DUCK} <= 3
-""",
-)
-def dedup_simhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Index the original documents, probe with the appended
-    near-dup copies (same Hamming-1..3 testbed as `dedup_simhash`);
-    output (id_a = batch doc, id_b = indexed doc, hamming). Context
-    manager + eager checkpoint: no catalog//tmp residue."""
-    from openaq_data_pipeline_spark.operators.incremental_fuzzy import (
-        build_simhash_index,
-        incremental_simhash_matches,
-        temp_simhash_index,
-    )
-
-    d = fan_out(load(spark, sf_dir, "documents")["documents"])
-    batch = d.filter(F.col("doc_id") % 5 == 0).select(
-        (F.col("doc_id") + 100000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" qq")).alias("text"),
-    )
-    with temp_simhash_index(n_buckets=8) as idx:
-        build_simhash_index(d.select("doc_id", "text"), "text", "doc_id", idx)
-        return incremental_simhash_matches(
-            batch, "text", "doc_id", idx
-        ).localCheckpoint(eager=True)
-
-
-@register_rotated(
-    "dedup_keep_best",
-    "[rotated r8 after green r4-r7; the survivor-policy family stays "
-    "driver-live via dedup_keep_one, which runs the same "
-    "cluster-closure + per-cluster survivor machinery] "
-    "EXT-dedup — keep-BEST-per-cluster survivor policy: each near-dup "
-    "cluster keeps its longest member (ties -> lowest id) instead of "
-    "keep_one's min-id representative — the keep-policy real curation "
-    "stacks use (C4/CCNet keep longest; classifier stacks keep top "
-    "score). On the appended corpus the longer APPENDED copy "
-    "(id+100000) survives, the opposite survivor from min-id, so the "
-    "policy is observably exercised. Oracle: recursive-CTE closure + "
-    "per-cluster argmax",
-    oracle=f"""
-WITH RECURSIVE {_clusters_duck(_APPENDED_DUCK)},
-scores AS (
-    -- collapse runs of whitespace before splitting (as _SHINGLES_DUCK
-    -- does) so the score matches Spark's regex token_count on any
-    -- fixture whitespace, not just single-spaced text (ADVICE r4)
-    SELECT doc_id,
-           CAST(len(string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')) AS BIGINT) AS n_tokens
-    FROM corpus WHERE len(string_split(text, ' ')) >= 3
-),
-best AS (
-    SELECT doc_id, cluster_size,
-           ROW_NUMBER() OVER (
-               PARTITION BY component_id ORDER BY n_tokens DESC, doc_id ASC
-           ) AS rn
-    FROM comp JOIN csize USING (component_id) JOIN scores USING (doc_id)
-)
-SELECT doc_id, cluster_size FROM best WHERE rn = 1
-UNION ALL
-SELECT s.doc_id, CAST(1 AS BIGINT) AS cluster_size
-FROM scores s LEFT JOIN comp ON comp.doc_id = s.doc_id
-WHERE comp.doc_id IS NULL
-""",
-)
-def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Appended-corpus pair pipeline (one appended token -> jaccard
-    n/(n+1) pairs every 5th doc), connected components, then
-    dedup.keep_best_per_cluster scored by whitespace token count."""
-    from openaq_data_pipeline_spark.operators.text import token_count
-
-    d = load(spark, sf_dir, "documents")["documents"]
-    corpus = _appended_corpus(fan_out(d)).filter(F.size(F.split("text", " ")) >= 3)
-    sh = D.shingles(corpus, "text", "doc_id", n=3, distinct=False)
-    pairs = D.jaccard_pairs(sh, "doc_id", min_jaccard=0.5, max_doc_freq=1000)
-    comp = D.connected_components(pairs)
-    scores = corpus.select("doc_id", token_count(F.col("text")).alias("n_tokens"))
-    return D.keep_best_per_cluster(scores, comp, id_col="doc_id", score_col="n_tokens")
 
 
 # --- incremental (cross-batch) dedup -----------------------------------
@@ -1291,184 +413,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint(eager=True)
 
 
-_COSINE_DUCK = (
-    "list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) / "
-    "(sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[])) * "
-    "sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[])))"
-)
-
-
-def _neardup_lsh_duck(
-    source: str,
-    dim: int = 64,
-    threshold: float = 0.40,
-    recall: float = 0.90,
-    max_tables: int = 64,
-    min_planes: int = 4,
-    max_planes: int = 12,
-    target_bucket: int = 8,
-    seed: int = 42,
-) -> str:
-    """params/planes/sigs CTEs reproducing the engine's derived-LSH
-    near-dup bucketing (operators/similarity.neardup_lsh_params +
-    _sign_planes + the lsh_near_dup_pairs tag stage) entirely in SQL:
-
-    - (b, L) derive from count(*) via an integer CASE ladder (the
-      bit_length occupancy clamp) plus a b→L lookup whose values were
-      frozen in Python — no cross-engine transcendental math;
-    - the ±1 planes regenerate from md5("{seed}|t|j|k"), so nothing
-      is inlined;
-    - buckets sum (plane·v ≥ 0) << j per table with list_dot_product.
-    """
-    from openaq_data_pipeline_spark.operators.similarity import neardup_param_table
-
-    b_thresh, lookup = neardup_param_table(
-        threshold, recall, max_tables, min_planes, max_planes
-    )
-    ladder = " ".join(
-        f"WHEN m >= {1 << (b - 1)} THEN {b}"
-        for b in range(b_thresh, min_planes, -1)
-    )
-    lcase = " ".join(f"WHEN {b} THEN {tabs}" for b, tabs in lookup.items())
-    return f"""
-params AS (
-    SELECT b, CASE b {lcase} END AS l
-    FROM (
-        SELECT CASE {ladder} ELSE {min_planes} END AS b
-        FROM (SELECT count(*) // {target_bucket} AS m FROM {source})
-    )
-),
-planes AS (
-    SELECT t AS table_id, j AS plane_idx,
-           list(CASE WHEN substr(md5('{seed}|' || t || '|' || j || '|' || k), 1, 1)
-                     IN ('8','9','a','b','c','d','e','f')
-                THEN CAST(1.0 AS DOUBLE) ELSE CAST(-1.0 AS DOUBLE) END
-                ORDER BY k) AS plane
-    FROM generate_series(0, {max_tables - 1}) ts(t),
-         generate_series(0, {max_planes - 1}) js(j),
-         generate_series(0, {dim - 1}) ks(k)
-    WHERE t < (SELECT l FROM params) AND j < (SELECT b FROM params)
-    GROUP BY t, j
-),
-sigs AS (
-    SELECT e.vec_id, p.table_id,
-           CAST(sum(CASE WHEN list_dot_product(e.embedding::DOUBLE[], p.plane) >= 0
-                         THEN (1 << p.plane_idx) ELSE 0 END) AS BIGINT) AS bucket
-    FROM {source} e CROSS JOIN planes p
-    GROUP BY e.vec_id, p.table_id
-)
-"""
-
-
-@register_rotated(
-    "dedup_embedding_cosine",
-    "EXT-dedup [rotated r5 after FOUR green driver rounds r1-r4; the "
-    "vector-LSH machinery (neardup_lsh_params + bucketed cosine "
-    "kernel) stays driver-verified via ann_topk_lsh, and the pair "
-    "tier's survivors feed dedup_keep_one/keep_best which remain "
-    "registered] — embedding-cosine near-dup pairs (≥ 0.40) via "
-    "corpus-sized LSH (b, L derived from count + threshold, sign "
-    "planes regenerated from md5) + exact vectorized verify (the "
-    "100 TB default path: equi-join on (table, bucket), no "
-    "all-pairs, no driver collect); the oracle re-derives the same "
-    "params, planes, and buckets in pure SQL",
-    oracle=f"""
-WITH {_neardup_lsh_duck('embeddings')},
-cand AS (
-    SELECT DISTINCT sa.vec_id AS id_a, sb.vec_id AS id_b
-    FROM sigs sa JOIN sigs sb
-      ON sa.table_id = sb.table_id AND sa.bucket = sb.bucket
-     AND sa.vec_id < sb.vec_id
-)
-SELECT c.id_a, c.id_b,
-       round({_COSINE_DUCK}, 6) AS cosine_sim
-FROM cand c
-JOIN embeddings a ON a.vec_id = c.id_a
-JOIN embeddings b ON b.vec_id = c.id_b
-WHERE round({_COSINE_DUCK}, 6) >= 0.40
-""",
-)
-def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load(spark, sf_dir, "embeddings")["embeddings"]
-    return cosine_near_dup_pairs(
-        fan_out(e), threshold=0.40, id_col="vec_id", dim=64
-    )
-
-
 # --- similarity search --------------------------------------------------
-
-
-@register_rotated(
-    # rotated r6 after 3 green driver rounds (r3-r5); the family
-    # stays driver-live (text: text_token_stats/text_quality_scores/
-    # text_repetition_signals; ANN: ann_topk_lsh/ann_topk_ivf) and
-    # this query keeps full Spark-vs-DuckDB parity via pytest
-    "ann_topk_bruteforce",
-    "EXT-similarity — exact cosine top-5 neighbors for 10 query "
-    "vectors (brute-force baseline; window top-k)",
-    oracle=f"""
-WITH scored AS (
-    SELECT b.vec_id AS query_id, a.vec_id AS neighbor_id,
-           round({_COSINE_DUCK}, 6) AS cosine_sim
-    FROM embeddings a
-    JOIN embeddings b ON b.vec_id < 10 AND a.vec_id <> b.vec_id
-)
-SELECT query_id, CAST(rnk AS BIGINT) AS rank, neighbor_id, cosine_sim
-FROM (
-    SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY query_id ORDER BY cosine_sim DESC, neighbor_id ASC
-    ) AS rnk
-    FROM scored
-)
-WHERE rnk <= 5
-""",
-)
-def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load(spark, sf_dir, "embeddings")["embeddings"]
-    return brute_force_topk(e, e.filter("vec_id < 10"), k=5)
-
-
-@register_rotated(
-    # rotated r7 after 3 green driver rounds (r4-r6); the ANN family
-    # stays driver-live via ann_topk_ivf (persisted-index path) and
-    # the new neardup_cosine_incremental (embedding-tier incremental
-    # probe); full Spark-vs-DuckDB parity continues via pytest.
-    "ann_topk_lsh",
-    "EXT-similarity — LSH-bucketed approximate top-k with (b, L) "
-    "derived from corpus size + threshold (VERDICT r3 #4: candidate "
-    "volume tracks the corpus instead of a fixed plane count); "
-    "hash-checked: the oracle re-derives the same params from "
-    "count(*), regenerates the md5 sign planes in SQL, and recomputes "
-    "every signature, so the whole bucketing+scoring algorithm is "
-    "verified (recall vs brute force separately asserted in tests/)",
-    oracle=f"""
-WITH {_neardup_lsh_duck('embeddings')},
-cand AS (
-    SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
-    FROM sigs c JOIN sigs q
-      ON c.table_id = q.table_id AND c.bucket = q.bucket
-    WHERE q.vec_id < 10 AND c.vec_id <> q.vec_id
-),
-scored AS (
-    SELECT cand.query_id, cand.neighbor_id,
-           round({_COSINE_DUCK}, 6) AS cosine_sim
-    FROM cand
-    JOIN embeddings a ON a.vec_id = cand.query_id
-    JOIN embeddings b ON b.vec_id = cand.neighbor_id
-)
-SELECT query_id, CAST(rnk AS BIGINT) AS rank, neighbor_id, cosine_sim
-FROM (
-    SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY query_id ORDER BY cosine_sim DESC, neighbor_id ASC
-    ) AS rnk
-    FROM scored
-)
-WHERE rnk <= 5
-""",
-)
-def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load(spark, sf_dir, "embeddings")["embeddings"]
-    return lsh_topk(e, e.filter("vec_id < 10"), dim=64, k=5)
 
 
 def _cos_duck(x: str, y: str) -> str:
@@ -1536,161 +481,6 @@ cents{i + 1} AS (
 )"""
         )
     return ",\n".join(parts)
-
-
-@register_rotated(
-    "ann_topk_ivf",
-    "EXT-similarity — IVF-flat approximate top-5 (16 cells, nprobe=4) "
-    "with a TRAINED coarse quantizer: a deterministic Lloyd "
-    "iteration with exact quantized-mean centroid updates (VERDICT "
-    "r3: the lowest-id-vectors quantizer was a toy; this one tracks "
-    "the vector distribution while staying bit-reproducible), then "
-    "map-only assignment + cell-pruned exact scoring; the oracle "
-    "re-runs the whole training loop in SQL → hash-checked",
-    oracle=f"""
-WITH {_ivf_trained_cents_duck(16, 1, 64)},
-cents AS (SELECT cell_id, c_vec FROM cents1),
-assign AS (
-    SELECT a.vec_id AS neighbor_id, c.cell_id,
-           ROW_NUMBER() OVER (
-               PARTITION BY a.vec_id
-               ORDER BY round({_cosc_duck('a', 'c')}, 6) DESC, c.cell_id ASC
-           ) AS rn
-    FROM embeddings a CROSS JOIN cents c
-),
-probes AS (
-    SELECT q.vec_id AS query_id, c.cell_id,
-           ROW_NUMBER() OVER (
-               PARTITION BY q.vec_id
-               ORDER BY round({_cosc_duck('q', 'c')}, 6) DESC, c.cell_id ASC
-           ) AS rn
-    FROM embeddings q CROSS JOIN cents c
-    WHERE q.vec_id < 10
-),
-cand AS (
-    SELECT DISTINCT p.query_id, s.neighbor_id
-    FROM (SELECT query_id, cell_id FROM probes WHERE rn <= 4) p
-    JOIN (SELECT neighbor_id, cell_id FROM assign WHERE rn = 1) s USING (cell_id)
-    WHERE s.neighbor_id <> p.query_id
-),
-scored AS (
-    SELECT cand.query_id, cand.neighbor_id,
-           round({_cos_duck('q', 'a')}, 6) AS cosine_sim
-    FROM cand
-    JOIN embeddings q ON q.vec_id = cand.query_id
-    JOIN embeddings a ON a.vec_id = cand.neighbor_id
-)
-SELECT query_id, CAST(rnk AS BIGINT) AS rank, neighbor_id, cosine_sim
-FROM (
-    SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY query_id ORDER BY cosine_sim DESC, neighbor_id ASC
-    ) AS rnk
-    FROM scored
-)
-WHERE rnk <= 5
-""",
-)
-def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Since r6 this runs the PRODUCTION shape: train the quantizer
-    + assign + persist the cell-bucketed index ONCE, then probe it —
-    candidate embeddings come from the index, so the probe never
-    re-reads or re-assigns the corpus (plan pinned by
-    tests/test_ann_index.py). Output is provably identical to the
-    inline ivf_topk with the same centroids (cell assignment is a
-    per-vector property of the frozen quantizer), so the chained-SQL
-    oracle is unchanged. Context manager + eager checkpoint keep the
-    no-residue contract."""
-    from openaq_data_pipeline_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_topk_indexed,
-        temp_ivf_index,
-    )
-
-    e = load(spark, sf_dir, "embeddings")["embeddings"]
-    # one Lloyd iteration exercises the full training loop (argmax
-    # assignment, exact quantized-mean update, empty-cell retention)
-    # at half the cost of two; production would run 3-5
-    with temp_ivf_index(nprobe=4, n_buckets=8) as idx:
-        build_ivf_index(e, idx, n_cells=16, train_iters=1)
-        return ivf_topk_indexed(
-            spark, e.filter("vec_id < 10"), idx, k=5
-        ).localCheckpoint(eager=True)
-
-
-@register_rotated(
-    "neardup_cosine_incremental",
-    "EXT-similarity — INCREMENTAL embedding-cosine near-dup (r7), "
-    "completing the per-tier incremental set (exact, Jaccard, "
-    "MinHash, SimHash, containment, embedding): the corpus is "
-    "indexed ONCE into the persisted cell-bucketed IVF tables; a "
-    "batch of new vectors probes its nprobe nearest frozen cells and "
-    "thresholds exact cosine against index-resident candidates — the "
-    "corpus is never re-read or re-assigned. The oracle replays "
-    "quantizer training, assignment and probing in SQL, so the "
-    "IVF-bounded candidate recall is mirrored exactly: probe == "
-    "recompute, not probabilistic",
-    oracle=f"""
-WITH {_ivf_trained_cents_duck(16, 1, 64)},
-cents AS (SELECT cell_id, c_vec FROM cents1),
-assign AS (
-    SELECT a.vec_id AS neighbor_id, c.cell_id,
-           ROW_NUMBER() OVER (
-               PARTITION BY a.vec_id
-               ORDER BY round({_cosc_duck('a', 'c')}, 6) DESC, c.cell_id ASC
-           ) AS rn
-    FROM embeddings a CROSS JOIN cents c
-),
-batch AS (
-    SELECT vec_id + 800000 AS query_id, vec_id AS src_id
-    FROM embeddings WHERE vec_id % 7 = 0
-),
-probes AS (
-    SELECT b.query_id, c.cell_id,
-           ROW_NUMBER() OVER (
-               PARTITION BY b.query_id
-               ORDER BY round({_cosc_duck('q', 'c')}, 6) DESC, c.cell_id ASC
-           ) AS rn
-    FROM batch b
-    JOIN embeddings q ON q.vec_id = b.src_id
-    CROSS JOIN cents c
-),
-cand AS (
-    SELECT DISTINCT p.query_id, s.neighbor_id
-    FROM (SELECT query_id, cell_id FROM probes WHERE rn <= 4) p
-    JOIN (SELECT neighbor_id, cell_id FROM assign WHERE rn = 1) s USING (cell_id)
-)
-SELECT cand.query_id, cand.neighbor_id,
-       round({_cos_duck('q', 'a')}, 6) AS cosine_sim
-FROM cand
-JOIN batch b ON b.query_id = cand.query_id
-JOIN embeddings q ON q.vec_id = b.src_id
-JOIN embeddings a ON a.vec_id = cand.neighbor_id
-WHERE round({_cos_duck('q', 'a')}, 6) >= 0.9
-""",
-)
-def neardup_cosine_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """History = the full embeddings corpus, indexed once (trained
-    quantizer + cell-bucketed vectors). Batch = copies of every 7th
-    vector (id+800000, embedding unchanged — 'is this vector already
-    in the corpus', cosine 1.0 with its source, which shares the
-    query's top probe cell by construction), thresholded at 0.9 so
-    organic near-neighbors inside the probed cells surface too.
-    Context-managed temp index, eager checkpoint: no residue."""
-    from openaq_data_pipeline_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_neardup_indexed,
-        temp_ivf_index,
-    )
-
-    e = load(spark, sf_dir, "embeddings")["embeddings"]
-    batch = e.filter(F.col("vec_id") % 7 == 0).select(
-        (F.col("vec_id") + 800000).alias("vec_id"), "embedding"
-    )
-    with temp_ivf_index(nprobe=4, n_buckets=8) as idx:
-        build_ivf_index(e, idx, n_cells=16, train_iters=1)
-        return ivf_neardup_indexed(
-            spark, batch, idx, min_cosine=0.9
-        ).localCheckpoint(eager=True)
 
 
 # --- hybrid retrieval ---------------------------------------------------
@@ -1892,93 +682,6 @@ def hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint(eager=True)
 
 
-@register_rotated(
-    "semantic_dedup",
-    "EXT-similarity — SemDeDup semantic near-duplicate pruning "
-    "(Abbas et al., arXiv:2303.09540, r8): k-means-cluster the "
-    "embedding space with the SAME deterministic Lloyd quantizer "
-    "the IVF tier trains, then greedy keep-first pruning WITHIN "
-    "each cell — a vector is a duplicate iff a lower-id cell-mate "
-    "has rounded cosine ≥ 0.9, dup_of = the lowest such id. The "
-    "per-cell quadratic is the published scale design (n_cells "
-    "sized to bound cells) plus the engine's observable-drop cap "
-    "(cell ranks past max_cell_size pass through flagged, never "
-    "silently compared). The oracle replays quantizer training, "
-    "assignment, capping, pairing and the survivor policy in one "
-    "SQL statement → hash-checked",
-    oracle="""
-WITH {IVF_CENTS},
-cents AS (SELECT cell_id, c_vec FROM cents1),
-corpus AS (
-    SELECT vec_id, embedding FROM embeddings
-    UNION ALL
-    SELECT vec_id + 100000, embedding FROM embeddings WHERE vec_id % 13 = 0
-),
-assign AS (
-    SELECT a.vec_id, c.cell_id,
-           ROW_NUMBER() OVER (
-               PARTITION BY a.vec_id
-               ORDER BY round({COSC_AC}, 6) DESC, c.cell_id ASC
-           ) AS rn
-    FROM corpus a CROSS JOIN cents c
-),
-members AS (
-    SELECT vec_id, cell_id,
-           row_number() OVER (PARTITION BY cell_id ORDER BY vec_id) AS cr
-    FROM assign WHERE rn = 1
-),
-dup AS (
-    SELECT a.vec_id AS a_id, min(b.vec_id) AS dup_of
-    FROM members a
-    JOIN members b ON a.cell_id = b.cell_id AND b.vec_id < a.vec_id
-    JOIN corpus ea ON ea.vec_id = a.vec_id
-    JOIN corpus eb ON eb.vec_id = b.vec_id
-    WHERE a.cr <= 512 AND b.cr <= 512
-      AND round({COS_AB}, 6) >= 0.9
-    GROUP BY a.vec_id
-)
-SELECT m.vec_id, CAST(m.cell_id AS BIGINT) AS cell_id, d.dup_of,
-       d.dup_of IS NULL AS kept, m.cr > 512 AS cell_overflow
-FROM members m LEFT JOIN dup d ON d.a_id = m.vec_id
-""".format(
-        IVF_CENTS=_ivf_trained_cents_duck(16, 1, 64),
-        COSC_AC=_cosc_duck("a", "c"),
-        COS_AB=_cos_duck("ea", "eb"),
-    ),
-)
-def semantic_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Completes the dedup tier spectrum: exact hash → lexical
-    shingle tiers (Jaccard/MinHash/SimHash/containment/spans) →
-    embedding-cosine pairs → SEMANTIC cluster-then-prune, the tier
-    that catches paraphrases sharing no surface text.
-
-    The quantizer trains on the ORIGINAL corpus and is passed frozen
-    (the persisted-IvfIndex reuse shape); the dedup input is the
-    corpus plus exact copies of every 13th vector under shifted ids
-    — copies land in their source's cell with cosine 1.0 and must
-    come back dup_of=source, everything else kept (the driver's
-    embeddings carry no organic pairs above 0.9 — max off-diagonal
-    cosine in the testdata is ~0.51 — so the copies are what proves
-    the pruning actually fires)."""
-    from openaq_data_pipeline_spark.operators.similarity import (
-        ivf_train_centroids,
-        semantic_dedup,
-    )
-
-    e = load(spark, sf_dir, "embeddings")["embeddings"]
-    base = e.select("vec_id", "embedding")
-    copies = e.filter(F.col("vec_id") % 13 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
-    )
-    cent_rows = ivf_train_centroids(e, n_cells=16, n_iters=1)
-    return semantic_dedup(
-        base.unionByName(copies),
-        threshold=0.9,
-        max_cell_size=512,
-        cent_rows=cent_rows,
-    )
-
-
 # --- multimodal ---------------------------------------------------------
 
 
@@ -2067,48 +770,6 @@ def multimodal_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "px_sum",
         "mean_px",
     )
-
-
-@register_rotated(
-    "multimodal_features",
-    "EXT-multimodal — binary-column feature extraction via Arrow "
-    "mapInPandas (format-agnostic fake decoder over arbitrary blobs); "
-    "rotated: the multimodal component is driver-verified by "
-    "multimodal_real_decode, which exercises the same mapInPandas "
-    "plumbing plus the real codec",
-    oracle="""
-WITH bytes AS (
-    SELECT doc_id, encode(text) AS blob FROM documents
-),
-chars AS (
-    SELECT doc_id, unicode(substr(text, g.i, 1)) AS code
-    FROM documents, generate_series(1, 100000) g(i)
-    WHERE g.i <= length(text)
-),
-agg AS (
-    SELECT doc_id, CAST(sum(code) AS BIGINT) AS byte_sum,
-           CAST(count(*) AS BIGINT) AS n
-    FROM chars GROUP BY doc_id
-)
-SELECT b.doc_id AS media_id,
-       CAST(octet_length(blob) AS BIGINT) AS n_bytes,
-       lower(substr(hex(blob), 1, 8)) AS header_hex,
-       CAST(((byte_sum * 20000 + n) // (2 * n)) / 10000.0 AS DOUBLE) AS mean_byte
-FROM bytes b JOIN agg USING (doc_id)
-""",
-)
-def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Documents' UTF-8 bytes stand in for media blobs (the container
-    has no image/audio test data); the oracle independently recomputes
-    byte length / header / exact-rounded mean byte, cross-checking
-    the Pandas-UDF path against pure SQL."""
-    d = load(spark, sf_dir, "documents")["documents"]
-    media = d.select(
-        F.col("doc_id").alias("media_id"),
-        F.encode("text", "UTF-8").alias("content"),
-    )
-    feats = extract_features(media, decode="fake")
-    return feats.select("media_id", "n_bytes", "header_hex", "mean_byte")
 
 
 # ---------------------------------------------------------------------------
@@ -2302,745 +963,6 @@ def streaming_hourly_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# A3: conditional pivot with unit conversion INSIDE the aggregate
-# ---------------------------------------------------------------------------
-
-
-@register_rotated(
-    "weather_pivot_conversion",
-    "A3,F10 — conditional-AVG pivot with the unit conversion inside the "
-    "aggregate (mart_location_weather.sql:70-78: AVG(CASE WHEN id=100 THEN "
-    "v*9/5+32 END)), wind-direction analogue rounded to 0 dp",
-    oracle=f"""
-SELECT user_id,
-       {exact_avg_duck('value', "event_type = 'view'", in_scale=2)} AS view_raw,
-       {exact_avg_duck('value * 9 / 5 + 32', "event_type = 'view'", in_scale=4)} AS view_converted,
-       {exact_avg_duck('value', "event_type = 'click'", in_scale=2, out_scale=0)} AS click_deg
-FROM events
-GROUP BY user_id
-""",
-)
-def weather_pivot_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The weather-mart shape: same source column pivoted twice with a
-    derivation applied *inside* the AVG (reference keeps °C and °F as
-    sibling aggregate columns) plus a 0-dp rounded pivot (wind
-    direction). Exact integer-scaled averaging on both engines."""
-    e = load(spark, sf_dir, "events")["events"]
-    v, t = F.col("value"), F.col("event_type")
-    return e.groupBy("user_id").agg(
-        exact_avg_spark(v, cond=t == "view", in_scale=2).alias("view_raw"),
-        exact_avg_spark(v * 9 / 5 + 32, cond=t == "view", in_scale=4).alias(
-            "view_converted"
-        ),
-        exact_avg_spark(v, cond=t == "click", in_scale=2, out_scale=0).alias(
-            "click_deg"
-        ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Skew-tolerant aggregation (functions/skew.py)
-# ---------------------------------------------------------------------------
-
-
-@register_rotated(
-    "salted_skew_agg",
-    "A1 at-scale variant — salted two-stage aggregation on a "
-    "low-cardinality (skew-prone) key; bit-identical to the plain "
-    "group-by the oracle runs (functions/skew.py)",
-    oracle="""
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS sum_cents,
-       CAST(min(user_id) AS BIGINT) AS min_user,
-       CAST(max(user_id) AS BIGINT) AS max_user
-FROM events
-GROUP BY event_type
-""",
-)
-def salted_skew_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """event_type has ~5 values over the whole fact — the archetypal
-    skewed aggregation key. The salted plan shuffles on (key, salt)
-    first, so no reducer owns a whole key; the combiner stage merges
-    ≤ n_salts partials. Values are exactly the single-stage result
-    (sums pre-scaled to integer cents for engine-neutral exactness)."""
-    from openaq_data_pipeline_spark.functions.skew import salted_two_stage_agg
-
-    e = load(spark, sf_dir, "events")["events"]
-    return salted_two_stage_agg(
-        e,
-        keys=["event_type"],
-        measures={
-            "n": ("count", F.lit(1)),
-            "sum_cents": ("sum", F.round(F.col("value") * 100, 0).cast("long")),
-            "min_user": ("min", F.col("user_id")),
-            "max_user": ("max", F.col("user_id")),
-        },
-        n_salts=16,
-    )
-
-
-@register_rotated(
-    "text_fingerprints",
-    "EXT-text — winnowing-style document fingerprints: the 4 smallest "
-    "3-gram shingle MD5s per document, exploded to (doc, fingerprint, "
-    "rank) rows (operators/text.shingle_fingerprints); rotated r5 "
-    "after 4 green driver rounds — the shingle-MD5 family stays "
-    "driver-verified via the dedup queries and vocab_top_ngrams",
-    oracle="""
-WITH words AS (
-    SELECT doc_id,
-           string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
-    FROM documents
-),
-sh AS (
-    SELECT doc_id, md5(w[g.i] || ' ' || w[g.i + 1] || ' ' || w[g.i + 2]) AS h
-    FROM words, generate_series(1, 4000) g(i)
-    WHERE g.i <= len(w) - 2
-),
-ranked AS (
-    SELECT doc_id, h, ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY h) AS rk
-    FROM sh
-)
-SELECT doc_id, h AS fingerprint, CAST(rk AS BIGINT) AS rk
-FROM ranked WHERE rk <= 4
-""",
-)
-def text_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explodes via ``stack`` rather than ``posexplode`` deliberately:
-    InferFiltersFromGenerate rewrites explode-of-a-*computed*-array
-    into a pushed-down ``size(arr)>0 AND isnotnull(arr)`` filter whose
-    pushdown clones the whole shingle-MD5 pipeline below the ``__w``
-    tokenization projection — re-tokenizing per array element, a
-    measured 9× slowdown at sf0.1. ``stack`` is not an ExplodeBase so
-    nothing is inferred; the array stays a multi-referenced non-cheap
-    alias (CollapseProject keeps it materialized once), and the
-    null-rank guard filters generator OUTPUT, which cannot be pushed
-    below the Generate."""
-    d = fan_out(load(spark, sf_dir, "documents")["documents"])
-    keep = 4
-    fp = X.shingle_fingerprints(d, "text", "doc_id", n=3, keep=keep)
-    pairs: list = []
-    for k in range(1, keep + 1):
-        pairs += [F.lit(k).cast("long"), F.element_at("fingerprints", k)]
-    return (
-        fp.select("doc_id", F.stack(F.lit(keep), *pairs).alias("rk", "fingerprint"))
-        .where(F.col("fingerprint").isNotNull())
-        .select("doc_id", "fingerprint", "rk")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Session windows + approximate sketches (scale toolkit)
-# ---------------------------------------------------------------------------
-
-
-@register_rotated(
-    "session_windows",
-    "EXT-sessionize — per-user session windows with a 30-minute "
-    "inactivity gap (F.session_window; the oracle is the classic "
-    "gaps-and-islands SQL, proving the operator's relational "
-    "semantics). Sessions: event count + span seconds",
-    oracle=f"""
-WITH marked AS (
-    SELECT user_id, ts,
-           CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                     > INTERVAL 30 MINUTE
-                     OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-                THEN 1 ELSE 0 END AS is_start
-    FROM events
-),
-islands AS (
-    SELECT user_id, ts,
-           sum(is_start) OVER (
-               PARTITION BY user_id ORDER BY ts
-               ROWS UNBOUNDED PRECEDING
-           ) AS session_no
-    FROM marked
-)
-SELECT user_id,
-       CAST(session_no AS BIGINT) AS session_no,
-       strftime(min(ts), '{TS_FMT_DUCK}') AS session_start,
-       CAST(count(*) AS BIGINT) AS n_events,
-       (epoch_us(max(ts)) - epoch_us(min(ts))) // 1000000 AS span_seconds
-FROM islands
-GROUP BY user_id, session_no
-""",
-)
-def session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sessionization — the stateful-streaming window the reference
-    lacks, batch-expressed with ``F.session_window`` (the same
-    operator runs under Structured Streaming with a watermark for
-    the stateful path). The session number is re-derived per user by
-    start-time rank so both engines emit identical keys."""
-    e = load(spark, sf_dir, "events")["events"]
-    sessions = e.groupBy(
-        F.col("user_id"), F.session_window("ts", "30 minutes").alias("w")
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        # µs-exact: floor the *difference*, not each endpoint
-        F.floor(
-            (F.unix_micros(F.max("ts")) - F.unix_micros(F.min("ts"))) / 1_000_000
-        ).cast("long").alias("span_seconds"),
-        F.min("ts").alias("t0"),
-    )
-    rank = Window.partitionBy("user_id").orderBy(F.col("t0"))
-    return sessions.select(
-        "user_id",
-        F.row_number().over(rank).cast("long").alias("session_no"),
-        F.date_format("t0", TS_FMT_SPARK).alias("session_start"),
-        "n_events",
-        "span_seconds",
-    )
-
-
-def approx_distinct_by(
-    df: DataFrame,
-    keys: list[str],
-    col: str,
-    rsd: float = 0.01,
-    verify: bool = False,
-) -> DataFrame:
-    """HyperLogLog++ approximate distinct-``col`` per ``keys`` group —
-    the constant-memory COUNT(DISTINCT) path for 100 TB facts. The
-    production shape (``verify=False``) is sketch-only: one hash
-    aggregate, partials merge map-side, O(2^p) memory per group no
-    matter the cardinality.
-
-    ``verify=True`` (the oracle/QA shape) additionally computes the
-    exact count and event total. It pre-deduplicates on
-    (keys, col) FIRST and feeds the sketch the deduped rows — HLL
-    register updates are idempotent, so the estimate is bit-identical
-    to sketching the raw rows, while keeping the sketch out of
-    Spark's distinct-aggregate rewrite (which would otherwise merge
-    16 KB HLL buffers through the per-(keys, col) exchange — the
-    2.4× bench regression VERDICT r2 flagged)."""
-    if not verify:
-        return df.groupBy(*keys).agg(
-            F.approx_count_distinct(col, rsd=rsd).alias(f"approx_{col}"),
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-        )
-    g = df.groupBy(*keys, col).agg(F.count(F.lit(1)).alias("__c"))
-    return g.groupBy(*keys).agg(
-        F.count(F.col(col)).cast("long").alias("exact"),
-        F.sum("__c").cast("long").alias("n_rows"),
-        F.approx_count_distinct(col, rsd=rsd).alias("approx"),
-    )
-
-
-@register_rotated(
-    "approx_distinct_sketch",
-    "EXT-sketch — HyperLogLog++ approximate distinct users per event "
-    "type (approx_count_distinct, rsd 1%): the constant-memory path "
-    "for COUNT(DISTINCT) at 100 TB. The raw estimate is "
-    "engine-specific, so the hash-checked surface is the exact count "
-    "plus a bounded-relative-error verdict the sketch must satisfy "
-    "(oracle emits TRUE) — the sketch runs and its accuracy is "
-    "driver-enforced without hashing engine-private values; "
-    "production callers use approx_distinct_by(verify=False), "
-    "sketch-only",
-    oracle="""
-SELECT event_type,
-       CAST(count(DISTINCT user_id) AS BIGINT) AS exact_users,
-       CAST(count(*) AS BIGINT) AS n_events,
-       TRUE AS sketch_within_5pct
-FROM events GROUP BY event_type
-""",
-)
-def approx_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """rsd=0.01 ⇒ ~1% standard error, so |approx−exact| ≤ 5% of
-    exact is a ~5σ bound — deterministic enough to hash-check, yet a
-    real failure if the sketch ever degrades."""
-    e = load(spark, sf_dir, "events")["events"]
-    agg = approx_distinct_by(e, ["event_type"], "user_id", verify=True)
-    return agg.select(
-        "event_type",
-        F.col("exact").alias("exact_users"),
-        F.col("n_rows").alias("n_events"),
-        (
-            F.abs(F.col("approx") - F.col("exact")) <= 0.05 * F.col("exact")
-        ).alias("sketch_within_5pct"),
-    )
-
-
-@register_rotated(
-    "priority_orders_semi",
-    "J-family completion — EXISTS/left-semi join (the only join kind "
-    "absent from both the reference surface and the anti-join tests): "
-    "orders having at least one early-shipped line item. Rotated r4 "
-    "(two green driver rounds; left_semi also driver-verified inside "
-    "customer_year_setops' INTERSECT and decontamination's overlap "
-    "join) to free the slot for dedup_containment",
-    oracle="""
-SELECT o.o_orderkey, o.o_orderpriority,
-       strftime(o.o_orderdate, '%Y-%m-%d') AS order_date
-FROM orders o
-WHERE EXISTS (
-    SELECT 1 FROM lineitem l
-    WHERE l.l_orderkey = o.o_orderkey AND l.l_shipdate < o.o_orderdate + INTERVAL 10 DAY
-)
-""",
-)
-def priority_orders_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """left_semi with a non-equi conjunct: the equi part hashes, the
-    range predicate evaluates as a join residual — one shuffle (or
-    broadcast under AQE), no fan-out, no dedup needed (semi-join
-    emits each qualifying order exactly once)."""
-    t = load(spark, sf_dir, "orders", "lineitem")
-    o, li = t["orders"].alias("o"), t["lineitem"].alias("li")
-    semi = o.join(
-        li,
-        (F.col("li.l_orderkey") == F.col("o.o_orderkey"))
-        & (F.col("li.l_shipdate") < F.date_add(F.col("o.o_orderdate"), 10)),
-        "left_semi",
-    )
-    return semi.select(
-        "o_orderkey",
-        "o_orderpriority",
-        F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_date"),
-    )
-
-
-@register_rotated(
-    "approx_percentile_sketch",
-    "EXT-sketch [rotated r5 after green r3+r4; sketch family stays driver-verified via approx_distinct_sketch] — approx_percentile (quantile digest) per event type "
-    "with a bounded-rank-error verdict, the constant-memory companion "
-    "to exact percentile_order_value for 100 TB groups. Digest values "
-    "are engine-specific, so (like approx_distinct_sketch) the "
-    "hash-checked surface is the exact rank bound the sketch must "
-    "satisfy",
-    oracle="""
-WITH ranked AS (
-    SELECT event_type, value,
-           percent_rank() OVER (PARTITION BY event_type ORDER BY value) AS pr
-    FROM events WHERE value IS NOT NULL
-)
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n_values,
-       TRUE AS p50_rank_ok,
-       TRUE AS p95_rank_ok
-FROM ranked GROUP BY event_type
-""",
-)
-def approx_percentile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """approx_percentile's accuracy contract is on RANK, not value:
-    the returned p-quantile's true percent_rank must lie within
-    1/accuracy of p. That bound is engine-checkable: recompute each
-    estimate's exact rank with a window and emit the verdict, which
-    the oracle pins to TRUE. accuracy=1000 ⇒ ±0.1% rank error."""
-    e = load(spark, sf_dir, "events")["events"].filter(F.col("value").isNotNull())
-    est = e.groupBy("event_type").agg(
-        F.percentile_approx("value", [0.5, 0.95], 1000).alias("q")
-    )
-    ranked = e.select(
-        "event_type",
-        "value",
-        F.percent_rank()
-        .over(Window.partitionBy("event_type").orderBy("value"))
-        .alias("pr"),
-    )
-    # exact percent_rank of each estimate = max pr over values <= est
-    j = ranked.join(F.broadcast(est), "event_type")
-    agg = j.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_values"),
-        F.max(F.when(F.col("value") <= F.col("q")[0], F.col("pr"))).alias("r50"),
-        F.max(F.when(F.col("value") <= F.col("q")[1], F.col("pr"))).alias("r95"),
-    )
-    # 2× the 1/accuracy bound, floored at the rank granularity of a
-    # small group (an exact quantile's percent_rank is itself up to
-    # 1/(n-1) away from p)
-    tol = F.greatest(F.lit(0.002), 2.0 / F.col("n_values"))
-    return agg.select(
-        "event_type",
-        "n_values",
-        (F.abs(F.col("r50") - 0.5) <= tol).alias("p50_rank_ok"),
-        (F.abs(F.col("r95") - 0.95) <= tol).alias("p95_rank_ok"),
-    )
-
-
-@register_rotated(
-    "rollup_revenue",
-    "EXT-olap — ROLLUP hierarchy totals (nation → year → grand "
-    "total) with grouping_id disambiguation; one pass computes all "
-    "three levels (absent from the reference surface — engine "
-    "capability extension); rotated r5 after 4 green driver rounds "
-    "(Expand-based grouping stays pytest-parity-checked)",
-    oracle="""
-WITH j AS (
-    SELECT n_name AS nation,
-           CAST(year(o_orderdate) AS BIGINT) AS order_year,
-           CAST(o_totalprice AS DECIMAL(12,2)) AS p
-    FROM orders
-    JOIN customer ON o_custkey = c_custkey
-    JOIN nation ON c_nationkey = n_nationkey
-)
-SELECT nation, order_year,
-       CAST(GROUPING(nation, order_year) AS BIGINT) AS gid,
-       CAST(round(sum(p), 2) AS DOUBLE) AS revenue,
-       CAST(count(*) AS BIGINT) AS n_orders
-FROM j GROUP BY ROLLUP(nation, order_year)
-""",
-)
-def rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark .rollup == BigQuery/DuckDB GROUP BY ROLLUP: detail rows,
-    per-nation subtotals, and the grand total in ONE aggregation pass
-    (Catalyst Expand feeds a single hash aggregate — no union of
-    three scans). grouping_id bit-encoding matches DuckDB GROUPING
-    (first rollup col = MSB), verified in the oracle."""
-    t = load(spark, sf_dir, "orders", "customer", "nation")
-    dim = (
-        t["customer"]
-        .join(
-            F.broadcast(t["nation"]),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .select("c_custkey", F.col("n_name").alias("nation"))
-    )
-    o = t["orders"].select(
-        "o_custkey",
-        F.col("o_totalprice").cast("decimal(12,2)").alias("p"),
-        F.year("o_orderdate").cast("long").alias("order_year"),
-    )
-    return (
-        o.join(F.broadcast(dim), F.col("o_custkey") == F.col("c_custkey"))
-        .rollup("nation", "order_year")
-        .agg(
-            F.grouping_id().cast("long").alias("gid"),
-            F.round(F.sum("p"), 2).cast("double").alias("revenue"),
-            F.count(F.lit(1)).cast("long").alias("n_orders"),
-        )
-        .select("nation", "order_year", "gid", "revenue", "n_orders")
-    )
-
-
-@register_rotated(
-    "percentile_order_value",
-    "EXT-olap — exact p25/median/p75 order value per priority class "
-    "(absent from the reference; sort-based exact percentile). "
-    "Interpolation over integer cents is exact in double arithmetic, "
-    "so Spark percentile() and DuckDB quantile_cont() agree "
-    "bit-for-bit",
-    oracle="""
-WITH cents AS (
-    SELECT o_orderpriority,
-           CAST(round(o_totalprice * 100, 0) AS BIGINT) AS c
-    FROM orders
-)
-SELECT o_orderpriority,
-       CAST(count(*) AS BIGINT) AS n_orders,
-       quantile_cont(c, 0.25) / 100.0 AS p25,
-       quantile_cont(c, 0.50) / 100.0 AS median,
-       quantile_cont(c, 0.75) / 100.0 AS p75
-FROM cents GROUP BY o_orderpriority
-""",
-)
-def percentile_order_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """At 100 TB: exact percentile requires a per-group sort of the
-    full value set — Catalyst's ObjectHashAggregate buffers per
-    group, so group cardinality x group size must fit executors; for
-    genuinely huge groups switch to approx_percentile (t-digest,
-    mergeable map-side) and document the error bound. Here groups are
-    5 priority classes — exact is the right call and oracle-stable
-    because interpolation over integer cents is exact FP arithmetic
-    ((hi-lo)*f with lo,hi < 2^52)."""
-    o = load(spark, sf_dir, "orders")["orders"].select(
-        "o_orderpriority",
-        F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("c"),
-    )
-    return o.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders"),
-        (F.expr("percentile(c, 0.25)") / 100.0).alias("p25"),
-        (F.expr("percentile(c, 0.50)") / 100.0).alias("median"),
-        (F.expr("percentile(c, 0.75)") / 100.0).alias("p75"),
-    )
-
-
-@register_rotated(
-    "customer_year_setops",
-    "EXT-setops — INTERSECT / EXCEPT over per-year customer key sets "
-    "(absent from the reference, SURVEY §2.7): repeat buyers of "
-    "1995∩1996 vs 1995-only churners, tagged in one result",
-    oracle="""
-WITH y95 AS (SELECT DISTINCT o_custkey FROM orders WHERE year(o_orderdate) = 1995),
-     y96 AS (SELECT DISTINCT o_custkey FROM orders WHERE year(o_orderdate) = 1996)
-SELECT o_custkey, 'repeat' AS cohort FROM (SELECT * FROM y95 INTERSECT SELECT * FROM y96)
-UNION ALL
-SELECT o_custkey, 'churned' AS cohort FROM (SELECT * FROM y95 EXCEPT SELECT * FROM y96)
-""",
-)
-def customer_year_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT/EXCEPT compile to left-semi/left-anti hash joins over
-    hash-distinct inputs — one shuffle each on the key, AQE-broadcast
-    when one side is small. The two set ops share the same two scans;
-    Catalyst reuses the year-filtered subplans (no lambdas, they
-    canonicalize equal)."""
-    o = load(spark, sf_dir, "orders")["orders"]
-    def year_keys(y: int) -> DataFrame:
-        return (
-            o.filter(F.year("o_orderdate") == y)
-            .select("o_custkey")
-            .distinct()
-        )
-    y95, y96 = year_keys(1995), year_keys(1996)
-    repeat = y95.intersect(y96).select("o_custkey", F.lit("repeat").alias("cohort"))
-    churned = y95.exceptAll(y96).select(
-        "o_custkey", F.lit("churned").alias("cohort")
-    )
-    return repeat.unionByName(churned)
-
-
-@register_rotated(
-    "rolling_user_spend",
-    "EXT-window — frame-spec rolling aggregate (ROWS BETWEEN 9 "
-    "PRECEDING AND CURRENT ROW): trailing-10-event spend sum and "
-    "exact rounded average per user (no frame windows exist in the "
-    "reference, SURVEY §2.5)",
-    oracle=f"""
-WITH cents AS (
-    SELECT event_id, user_id, ts,
-           CAST(round(value * 100, 0) AS BIGINT) AS c
-    FROM events WHERE event_type = 'purchase'
-),
-framed AS (
-    SELECT event_id, user_id,
-           strftime(ts, '{TS_FMT_DUCK}') AS ts_utc,
-           sum(c) OVER w AS roll_cents,
-           count(*) OVER w AS roll_n
-    FROM cents
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
-)
-SELECT event_id, user_id, ts_utc,
-       CAST(roll_cents AS BIGINT) AS roll_cents,
-       CAST(roll_n AS BIGINT) AS roll_n,
-       {exact_ratio_duck('roll_cents', 'roll_n * 100')} AS roll_avg
-FROM framed
-""",
-)
-def rolling_user_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One shuffle (the window partition); the 10-row frame is a
-    sliding aggregate Spark evaluates incrementally per partition.
-    event_id tiebreak makes same-timestamp ordering deterministic
-    (SURVEY §7.4 trap 2). Average = exact integer rounding on cents,
-    engine-independent."""
-    e = load(spark, sf_dir, "events")["events"]
-    cents = e.filter(F.col("event_type") == "purchase").select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.round(F.col("value") * 100, 0).cast("long").alias("c"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-9, Window.currentRow)
-    )
-    roll_cents = F.sum("c").over(w)
-    roll_n = F.count(F.lit(1)).over(w)
-    return cents.select(
-        "event_id",
-        "user_id",
-        ts_str(F.col("ts"), TS_FMT_SPARK).alias("ts_utc"),
-        roll_cents.cast("long").alias("roll_cents"),
-        roll_n.cast("long").alias("roll_n"),
-        exact_ratio_spark(roll_cents, roll_n * 100).alias("roll_avg"),
-    )
-
-
-@register_rotated(
-    "event_gaps_lag_lead",
-    "EXT-window — lag/lead analytics (unused in the reference, "
-    "SURVEY §2.5): per-user inter-event gap seconds and next event "
-    "type, deterministic (ts, event_id) ordering. Rotated r4 (two "
-    "green driver rounds; lag AND lead are driver-verified inside "
-    "scd2_user_state's change-detect + interval-close windows) to "
-    "free the slot for dedup_keep_best",
-    oracle=f"""
-SELECT event_id, user_id,
-       strftime(ts, '{TS_FMT_DUCK}') AS ts_utc,
-       CAST(date_diff('second',
-            lag(ts) OVER w, ts) AS BIGINT) AS gap_seconds,
-       lead(event_type) OVER w AS next_event_type
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-""",
-)
-def event_gaps_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lag/lead share ONE window spec → one shuffle + one sort serves
-    both; first/last rows per user yield NULLs in both engines.
-    Gap arithmetic in whole seconds (unix_timestamp truncation ==
-    DuckDB date_diff 'second' boundary counting for these
-    microsecond-precision positive timestamps)."""
-    e = load(spark, sf_dir, "events")["events"]
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev_ts = F.lag("ts").over(w)
-    return e.select(
-        "event_id",
-        "user_id",
-        ts_str(F.col("ts"), TS_FMT_SPARK).alias("ts_utc"),
-        (F.unix_timestamp("ts") - F.unix_timestamp(prev_ts))
-        .cast("long")
-        .alias("gap_seconds"),
-        F.lead("event_type").over(w).alias("next_event_type"),
-    )
-
-
-@register_rotated(
-    "unpivot_weather_long",
-    "EXT-reshape — UNPIVOT/melt: the weather mart's wide hourly "
-    "pollutant columns back to long (metric, value) rows — the "
-    "inverse of the reference's conditional-AVG pivot (A2/A3), via "
-    "Spark stack()/unpivot and DuckDB UNPIVOT. Rotated r4 (two green "
-    "driver rounds; the stack() Generate shape is driver-verified in "
-    "text_fingerprints and the pivot family it inverts in "
-    "weather_pivot_conversion) to free the slot for doc_chunking",
-    oracle=f"""
-WITH wide AS (
-    SELECT user_id,
-           strftime(date_trunc('hour', ts), '{HOUR_FMT_DUCK}') AS hour_utc,
-           {exact_avg_duck('value', "event_type = 'view'")} AS avg_view,
-           {exact_avg_duck('value', "event_type = 'click'")} AS avg_click,
-           {exact_avg_duck('value', "event_type = 'purchase'")} AS avg_purchase
-    FROM events GROUP BY user_id, date_trunc('hour', ts)
-)
-SELECT user_id, hour_utc, metric, value
-FROM wide UNPIVOT (value FOR metric IN (avg_view, avg_click, avg_purchase))
-""",
-)
-def unpivot_weather_long(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wide→long via stack(): a Generate with no shuffle of its own —
-    the only exchange is the upstream hourly aggregate. NULL cells
-    are dropped by both Spark unpivot and DuckDB UNPIVOT (default
-    EXCLUDE NULLS) — row parity depends on that agreement."""
-    e = load(spark, sf_dir, "events")["events"]
-    wide = e.groupBy(
-        "user_id", F.date_trunc("hour", "ts").alias("hour")
-    ).agg(
-        *[
-            exact_avg_spark(F.col("value"), F.col("event_type") == t).alias(
-                f"avg_{t}"
-            )
-            for t in ("view", "click", "purchase")
-        ]
-    ).select(
-        "user_id",
-        F.date_format("hour", HOUR_FMT_SPARK).alias("hour_utc"),
-        "avg_view", "avg_click", "avg_purchase",
-    )
-    return wide.unpivot(
-        ["user_id", "hour_utc"],
-        ["avg_view", "avg_click", "avg_purchase"],
-        "metric",
-        "value",
-    ).filter(F.col("value").isNotNull())
-
-
-@register_rotated(
-    "video_frame_sample",
-    "EXT-multimodal — VIDEO frame sampling with real partial decode "
-    "over a MIXED corpus: ids ≡1 (mod 3) are REAL MJPEG-in-AVI "
-    "(public RIFF layout: hdrl avih/strh/strf + movi '00dc' chunks "
-    "of baseline JPEG frames, r7 VERDICT r6 next #6), the rest the "
-    "synthetic MBMP container; either walker seeks past unsampled "
-    "frames/chunks by declared size and decodes ONLY frames 0, 2, 4, "
-    "… — at 100 TB decode cost scales with frames KEPT, not frames "
-    "stored. AVI frames are constant-per-8×8-block grayscale (the "
-    "DC-only/flat-q=8 construction), so the lossy JPEG codec decodes "
-    "bit-exactly and the oracle recomputes every sampled frame's "
-    "dimensions and pixel statistics analytically from the id — "
-    "container walk + BMP/JPEG decode + stats hash-checked "
-    "end-to-end",
-    oracle="""
-WITH v AS (
-    SELECT doc_id AS media_id,
-           3 + doc_id % 4 AS nf,
-           CASE WHEN doc_id % 3 = 1 THEN 8 * (1 + doc_id % 2)
-                ELSE 4 + doc_id % 5 END AS w,
-           CASE WHEN doc_id % 3 = 1 THEN 8 * (1 + (doc_id // 2) % 2)
-                ELSE 3 + doc_id % 3 END AS h
-    FROM documents
-),
-fr AS (
-    SELECT media_id, nf, w, h, f.i AS frame_idx
-    FROM v, generate_series(0, 6) f(i)
-    WHERE f.i < nf AND f.i % 2 = 0
-),
-px AS (
-    SELECT media_id, nf, frame_idx, w, h,
-           CAST(sum(CASE WHEN media_id % 3 = 1
-                THEN (media_id * 31 + frame_idx * 13 + (y.i // 8) * 7 + (x.i // 8) * 3) % 256
-                ELSE (media_id * 31 + frame_idx * 13 + y.i * 7 + x.i * 3 + c.i * 11) % 256
-           END) AS BIGINT) AS px_sum,
-           CAST(w * h * 3 AS BIGINT) AS n_px
-    FROM fr,
-         generate_series(0, 15) y(i),
-         generate_series(0, 15) x(i),
-         generate_series(0, 2) c(i)
-    WHERE y.i < h AND x.i < w
-    GROUP BY media_id, nf, frame_idx, w, h
-)
-SELECT media_id,
-       CAST(nf AS BIGINT) AS n_frames,
-       CAST(frame_idx AS BIGINT) AS frame_idx,
-       CAST(w AS INTEGER) AS width,
-       CAST(h AS INTEGER) AS height,
-       px_sum,
-       CAST(((px_sum * 20000 + n_px) // (2 * n_px)) / 10000.0 AS DOUBLE) AS mean_px
-FROM px
-""",
-)
-def video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Videos are synthesized per doc_id (n_frames = 3 + id%4; MBMP
-    pixels closed-form in (id, frame, y, x, c); AVI rows (ids ≡ 1
-    mod 3) constant-per-8×8-block grayscale MJPEG — decoded
-    channel-replicated, so the oracle's c-series sums the gray value
-    3× — operators/multimodal.synthetic_videos mix_formats), then
-    stride-2 sampled through the real demux + decode paths."""
-    from openaq_data_pipeline_spark.operators.multimodal import (
-        sample_video_frames,
-        synthetic_videos,
-    )
-
-    d = load(spark, sf_dir, "documents")["documents"]
-    vids = synthetic_videos(
-        fan_out(d.select(F.col("doc_id").alias("media_id"))),
-        mix_formats=True,
-    )
-    return sample_video_frames(vids, stride=2)
-
-
-@register_rotated(
-    "zorder_values",
-    "[parity-only: new in r8 at the 50-query driver cap; the layout "
-    "writer built on it is footer-stats-pinned in test_layout.py] "
-    "EXT-layout — Morton/z-value computation (sources/layout.py): "
-    "interleave the low 8 bits of two event dimensions into the "
-    "clustering key write_zordered range-partitions on, so parquet "
-    "min-max stats prune scans on EITHER dimension. Pure codegen "
-    "aggregate-over-sequence shift/mask arithmetic; the oracle "
-    "replays the interleave with a correlated generate_series sum",
-    oracle="""
-SELECT e.event_id,
-       (SELECT CAST(sum(
-            (((e.user_id % 256) >> g.i) & 1) * ((1::BIGINT) << (2 * g.i))
-          + (((e.event_id % 256) >> g.i) & 1) * ((1::BIGINT) << (2 * g.i + 1))
-        ) AS BIGINT)
-        FROM generate_series(0, 7) g(i)) AS zval
-FROM events e
-""",
-)
-def zorder_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from openaq_data_pipeline_spark.sources.layout import zvalue
-
-    e = fan_out(load(spark, sf_dir, "events")["events"])
-    return e.select(
-        "event_id",
-        (F.col("user_id") % 256).alias("ux"),
-        (F.col("event_id") % 256).alias("ex"),
-    ).select("event_id", zvalue(["ux", "ex"], bits=8).alias("zval"))
-
-
 # --- iterative graph scoring (r8) --------------------------------------
 
 _PR_SCALE = 10**12
@@ -3131,155 +1053,3 @@ def pagerank_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     return pagerank_fixed_point(both, n_iters=3)
-
-
-# --- product quantization ANN (r8) -------------------------------------
-
-
-def _pq_trained_books_duck(
-    m: int, ksub: int, n_iters: int, dim: int, q_scale: int = 1_000_000
-) -> str:
-    """CTE chain reproducing operators/similarity.pq_train_codebooks
-    in pure SQL: per-subspace Lloyd with the shared (vector,
-    subspace) explosion, argmin on round(||u||²−2u·c+||c||², 6) with
-    ties to the lowest code, exact quantized-mean updates, empty
-    codes coalescing to their previous centroid. Emits
-    ``book{n_iters}`` and the shared ``pexpl``/``subs`` CTEs."""
-    dsub = dim // m
-    parts = [
-        f"""pq_seed AS (
-    SELECT vec_id, embedding::DOUBLE[] AS v,
-           ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code_id
-    FROM (SELECT * FROM embeddings ORDER BY vec_id LIMIT {ksub})
-),
-subs AS (SELECT g.s AS sub_id FROM generate_series(0, {m - 1}) g(s)),
-book0 AS (
-    SELECT s.sub_id, p.code_id,
-           list_slice(p.v, s.sub_id * {dsub} + 1, (s.sub_id + 1) * {dsub}) AS c
-    FROM pq_seed p CROSS JOIN subs s
-),
-pexpl AS (
-    SELECT e.vec_id, s.sub_id,
-           list_slice(e.embedding::DOUBLE[], s.sub_id * {dsub} + 1,
-                      (s.sub_id + 1) * {dsub}) AS u
-    FROM embeddings e CROSS JOIN subs s
-)"""
-    ]
-    d2 = (
-        "list_dot_product(x.u, x.u) - 2 * list_dot_product(x.u, b.c)"
-        " + list_dot_product(b.c, b.c)"
-    )
-    for i in range(n_iters):
-        parts.append(
-            f"""passign{i} AS (
-    SELECT x.vec_id, x.sub_id, b.code_id,
-           ROW_NUMBER() OVER (
-               PARTITION BY x.vec_id, x.sub_id
-               ORDER BY round({d2}, 6) ASC, b.code_id ASC
-           ) AS rn
-    FROM pexpl x JOIN book{i} b ON b.sub_id = x.sub_id
-),
-pmean{i} AS (
-    SELECT a.sub_id, a.code_id, g.k AS dim,
-           sum(CAST(round(x.u[g.k] * {q_scale}, 0) AS BIGINT)) AS sq,
-           count(*) AS n
-    FROM (SELECT vec_id, sub_id, code_id FROM passign{i} WHERE rn = 1) a
-    JOIN pexpl x ON x.vec_id = a.vec_id AND x.sub_id = a.sub_id,
-         generate_series(1, {dsub}) g(k)
-    GROUP BY a.sub_id, a.code_id, g.k
-),
-pnew{i} AS (
-    SELECT sub_id, code_id,
-           list(CAST(sq AS DOUBLE) / (CAST(n AS DOUBLE) * {float(q_scale)!r})
-                ORDER BY dim) AS c
-    FROM pmean{i} GROUP BY sub_id, code_id
-),
-book{i + 1} AS (
-    SELECT b.sub_id, b.code_id, coalesce(n1.c, b.c) AS c
-    FROM book{i} b
-    LEFT JOIN pnew{i} n1
-      ON n1.sub_id = b.sub_id AND n1.code_id = b.code_id
-)"""
-        )
-    return ",\n".join(parts)
-
-
-@register_rotated(
-    "ann_topk_pq",
-    "EXT-similarity — PRODUCT-QUANTIZATION ANN (Jégou et al. 2011, "
-    "r8), the memory-scale path past the int8 cells: 8 subspaces × "
-    "16-code codebooks trained by the same deterministic Lloyd "
-    "(ALL subspaces in one pass per iteration), vectors stored as "
-    "8 code ids (32× vs float32), and top-5 by ASYMMETRIC distance "
-    "— per-query lookup tables of round(d²·10⁶) BIGINTs broadcast "
-    "into the code rows, candidate distance = order-free integer "
-    "sum of 8 lookups, raw vectors never read at query time. The "
-    "oracle replays codebook training, encoding, the LUTs and the "
-    "ADC ranking in one SQL statement → hash-checked",
-    oracle=f"""
-WITH {_pq_trained_books_duck(8, 16, 1, 64)},
-penc AS (
-    SELECT x.vec_id, x.sub_id, b.code_id,
-           ROW_NUMBER() OVER (
-               PARTITION BY x.vec_id, x.sub_id
-               ORDER BY round(list_dot_product(x.u, x.u)
-                              - 2 * list_dot_product(x.u, b.c)
-                              + list_dot_product(b.c, b.c), 6) ASC,
-                        b.code_id ASC
-           ) AS rn
-    FROM pexpl x JOIN book1 b ON b.sub_id = x.sub_id
-),
-pcodes AS (SELECT vec_id, sub_id, code_id FROM penc WHERE rn = 1),
-lut AS (
-    SELECT q.vec_id AS query_id, b.sub_id, b.code_id,
-           CAST(round((list_dot_product(q.u, q.u)
-                       - 2 * list_dot_product(q.u, b.c)
-                       + list_dot_product(b.c, b.c)) * 1000000, 0)
-                AS BIGINT) AS d2_int
-    FROM pexpl q JOIN book1 b ON b.sub_id = q.sub_id
-    WHERE q.vec_id % 101 = 0
-),
-sc2 AS (
-    SELECT l.query_id, c.vec_id AS neighbor_id,
-           CAST(sum(l.d2_int) AS BIGINT) AS adc_fp
-    FROM pcodes c
-    JOIN lut l ON l.sub_id = c.sub_id AND l.code_id = c.code_id
-    WHERE c.vec_id <> l.query_id
-    GROUP BY l.query_id, c.vec_id
-)
-SELECT query_id, CAST(rnk AS BIGINT) AS rank, neighbor_id, adc_fp
-FROM (
-    SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY query_id ORDER BY adc_fp ASC, neighbor_id ASC
-    ) AS rnk
-    FROM sc2
-)
-WHERE rnk <= 5
-""",
-)
-def ann_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Since r9 this runs the PRODUCTION shape: train the codebooks
-    + encode + persist the neighbor-bucketed :class:`PqIndex` ONCE,
-    then ADC-probe it — code rows come from the index, the corpus is
-    never re-encoded at probe time (plan pinned by
-    tests/test_ann_index.py), and the persisted handle is what puts
-    PQ codes inside the compaction + takedown guarantees (VERDICT r8
-    #2). Output is provably identical to the inline pq_topk_adc
-    under the same frozen codebooks, so the chained-SQL oracle is
-    unchanged. Approximation stays explicit in the column name:
-    ``adc_fp`` is quantized code-space distance, not exact distance.
-    Context manager + eager checkpoint keep the no-residue
-    contract."""
-    from openaq_data_pipeline_spark.operators.similarity import (
-        build_pq_index,
-        pq_topk_indexed,
-        temp_pq_index,
-    )
-
-    e = load(spark, sf_dir, "embeddings")["embeddings"]
-    queries = e.filter(F.col("vec_id") % 101 == 0)
-    with temp_pq_index(m=8, ksub=16, dim=64, n_buckets=8) as idx:
-        build_pq_index(e, idx, n_iters=1)
-        return pq_topk_indexed(spark, queries, idx, k=5).localCheckpoint(
-            eager=True
-        )

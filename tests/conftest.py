@@ -17,9 +17,8 @@ r17 additions (VERDICT r16 next #1/#8):
   items), explicit shards, and ``OPENAQ_PYTEST_PARALLEL=0`` keep the
   stock serial loop.
 - **Parity artifact.** Every ``test_parity[...]`` outcome is merged
-  into ``PARITY_r17.json`` (query -> outcome), so a rotation never
-  again leaves driver-dropped queries without machine-readable
-  correctness evidence (VERDICT r16 next #8).
+  into ``PARITY.json`` (query -> outcome): machine-readable
+  correctness evidence for every catalog query (VERDICT r16 next #8).
 """
 
 from __future__ import annotations
@@ -37,9 +36,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from openaq_data_pipeline_spark.session import get_spark  # noqa: E402
 
 _REPO_ROOT = Path(__file__).resolve().parent.parent
-_PARITY_ARTIFACT = os.environ.get(
-    "OPENAQ_PARITY_ARTIFACT", str(_REPO_ROOT / "PARITY_r17.json")
-)
+_PARITY_ARTIFACT = str(_REPO_ROOT / "PARITY.json")
 _RESULTS_FILE = os.environ.get("OPENAQ_RESULTS_FILE")
 
 
@@ -60,20 +57,60 @@ def _merge_json_locked(path: str, updates: dict) -> None:
         fh.write("\n")
 
 
+def shard_record(report) -> dict | None:
+    """The record a shard child streams to the parent for one report:
+    every call-phase report, plus each setup or teardown report that
+    did not pass (a skip at setup, a fixture error). Passing setup and
+    teardown reports carry nothing the parent needs."""
+    if report.when != "call" and report.passed:
+        return None
+    rec = {
+        "nodeid": report.nodeid,
+        "when": report.when,
+        "outcome": report.outcome,
+        "duration": round(report.duration, 3),
+    }
+    if report.skipped and isinstance(report.longrepr, tuple):
+        rec["longrepr"] = list(report.longrepr)  # (path, lineno, reason)
+    elif not report.passed:
+        rec["longrepr"] = str(report.longrepr)[:8000]
+    return rec
+
+
+def replayed_reports(item, records: list[dict]):
+    """Rebuild ``item``'s reports from its shard records, each with
+    its original phase and outcome, in the order they were streamed."""
+    from _pytest.reports import TestReport
+
+    reports = []
+    for rec in records:
+        longrepr = rec.get("longrepr")
+        if rec["outcome"] == "skipped" and isinstance(longrepr, list):
+            longrepr = tuple(longrepr)
+        reports.append(
+            TestReport(
+                nodeid=item.nodeid,
+                location=item.location,
+                keywords=dict(item.keywords),
+                outcome=rec["outcome"],
+                longrepr=longrepr,
+                when=rec["when"],
+                sections=[],
+                duration=rec.get("duration", 0.0),
+            )
+        )
+    return reports
+
+
 def pytest_runtest_logreport(report):
-    if report.when != "call":
-        return
     # (a) shard children stream exact per-test results to the parent
     if _RESULTS_FILE:
-        rec = {
-            "nodeid": report.nodeid,
-            "outcome": report.outcome,
-            "duration": round(report.duration, 3),
-        }
-        if report.outcome == "failed":
-            rec["longrepr"] = str(report.longrepr)[:8000]
-        with open(_RESULTS_FILE, "a") as fh:
-            fh.write(json.dumps(rec) + "\n")
+        rec = shard_record(report)
+        if rec is not None:
+            with open(_RESULTS_FILE, "a") as fh:
+                fh.write(json.dumps(rec) + "\n")
+    if report.when != "call":
+        return
     # (b) the parity artifact (VERDICT r16 next #8) — one entry per
     # oracled query; passing means rows+schema+values matched the
     # DuckDB oracle exactly (tests/oracle_harness.compare)
@@ -189,9 +226,7 @@ def pytest_runtestloop(session):
     # replay every child result through the parent's own hooks so the
     # terminal progress, summary counts, session.testsfailed and the
     # exit code are the real pytest machinery, not a facsimile
-    from _pytest.reports import TestReport
-
-    results: dict[str, dict] = {}
+    results: dict[str, list[dict]] = {}
     for i in range(len(procs)):
         rf = tmp / f"results-{i}.jsonl"
         if not rf.exists():
@@ -201,27 +236,18 @@ def pytest_runtestloop(session):
                 rec = json.loads(line)
             except ValueError:
                 continue
-            results[rec["nodeid"]] = rec
+            results.setdefault(rec["nodeid"], []).append(rec)
     missing = []
     for it in session.items:
-        rec = results.get(it.nodeid)
-        if rec is None:
+        records = results.get(it.nodeid)
+        if not records:
             missing.append(it)
             continue
-        rep = TestReport(
-            nodeid=it.nodeid,
-            location=it.location,
-            keywords=dict(it.keywords),
-            outcome=rec["outcome"],
-            longrepr=rec.get("longrepr"),
-            when="call",
-            sections=[],
-            duration=rec.get("duration", 0.0),
-        )
         it.ihook.pytest_runtest_logstart(
             nodeid=it.nodeid, location=it.location
         )
-        it.ihook.pytest_runtest_logreport(report=rep)
+        for rep in replayed_reports(it, records):
+            it.ihook.pytest_runtest_logreport(report=rep)
         it.ihook.pytest_runtest_logfinish(
             nodeid=it.nodeid, location=it.location
         )
@@ -231,29 +257,26 @@ def pytest_runtestloop(session):
     if missing and not (exitfirst and failed_seen):
         # a shard died without reporting (e.g. JVM OOM): fail loudly
         # with the shard tails rather than under-counting silently
+        lost = {
+            "when": "call",
+            "outcome": "failed",
+            "longrepr": (
+                "shard process exited without reporting this test "
+                f"(crashed shards: {crashed}; logs in {tmp})"
+            ),
+        }
         for it in missing:
-            rep = TestReport(
-                nodeid=it.nodeid,
-                location=it.location,
-                keywords=dict(it.keywords),
-                outcome="failed",
-                longrepr=(
-                    "shard process exited without reporting this test "
-                    f"(crashed shards: {crashed}; logs in {tmp})"
-                ),
-                when="call",
-                sections=[],
-                duration=0.0,
-            )
-            it.ihook.pytest_runtest_logreport(report=rep)
+            for rep in replayed_reports(it, [lost]):
+                it.ihook.pytest_runtest_logreport(report=rep)
     # refresh the packing table from the real durations (partest's
     # convention: per-file sums; node ids for SPLIT_FILES)
     try:
         fresh: dict[str, float] = {}
-        for nodeid, rec in results.items():
+        for nodeid, records in results.items():
             fname = nodeid.split("::", 1)[0]
             key = nodeid if fname.endswith(split) else fname
-            fresh[key] = round(fresh.get(key, 0.0) + rec["duration"], 2)
+            dur = sum(rec["duration"] for rec in records)
+            fresh[key] = round(fresh.get(key, 0.0) + dur, 2)
         if fresh:
             table = partest.load_durations()
             table.update(fresh)
@@ -267,8 +290,6 @@ def pytest_runtestloop(session):
 
 @pytest.fixture(scope="session")
 def spark():
-    import json
-
     extra = {
         "spark.driver.memory": "4g",
         # partest.py runs shards as concurrent pytest processes;
@@ -279,13 +300,10 @@ def spark():
             "SPARK_TEST_WAREHOUSE", "/tmp/spark-wh"
         ),
     }
-    # ad-hoc conf overrides for suite-latency experiments (r17), e.g.
-    # SPARK_TEST_EXTRA_CONF='{"spark.sql.codegen.wholeStage":"false"}'
-    extra.update(json.loads(os.environ.get("SPARK_TEST_EXTRA_CONF", "{}")))
     spark = get_spark(
         app_name="openaq-tests",
-        master=os.environ.get("SPARK_TEST_MASTER", "local[4]"),
-        shuffle_partitions=int(os.environ.get("SPARK_TEST_SHUFFLE", "4")),
+        master="local[4]",
+        shuffle_partitions=4,
         extra_conf=extra,
     )
     yield spark

@@ -7,11 +7,16 @@ float-unstable)."""
 from __future__ import annotations
 
 import math
+import os
 
 import duckdb
 import pyarrow as pa
 
 from openaq_data_pipeline_spark.catalog import TABLES
+
+# the driver tables at their smallest scale; PARITY_SF_DIR points the
+# oracle comparisons at another (e.g. sf0.01, the scale the driver uses)
+SF_DIR = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.001")
 
 
 class OracleTypeError(AssertionError):

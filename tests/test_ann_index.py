@@ -99,14 +99,17 @@ class TestIvfIndex:
     def test_no_temp_index_residue(self, spark):
         import tempfile
 
-        from openaq_data_pipeline_spark.queries_ext import ann_topk_ivf
+        from oracle_harness import SF_DIR
 
+        sf = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", SF_DIR)
+        e = spark.read.parquet(f"{sf}/embeddings.parquet")
         tmp_root = tempfile.gettempdir()
         before = set(glob.glob(os.path.join(tmp_root, "ivf_index_*")))
-        out = ann_topk_ivf(
-            spark,
-            os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001"),
-        )
+        with temp_ivf_index(nprobe=4, n_buckets=8) as idx:
+            build_ivf_index(e, idx, n_cells=16, train_iters=1)
+            out = ivf_topk_indexed(
+                spark, e.filter("vec_id < 10"), idx, k=5
+            ).localCheckpoint(eager=True)
         assert out.count() > 0
         after = set(glob.glob(os.path.join(tmp_root, "ivf_index_*")))
         assert after - before == set()
@@ -1230,3 +1233,83 @@ class TestBinaryHamming:
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
         assert "Python" not in plan and "ArrowEval" not in plan
+
+
+class TestIvfDriftOracle:
+    """ivf_drift_metrics against DuckDB: build the frozen 8-cell IVF
+    quantizer on the embeddings table, append a drifted batch (every
+    vector negated, guaranteed out of distribution) and report
+    per-cell fill and mean cosine residual in integer fixed point.
+    The oracle replays training, frozen assignment of base and
+    drifted vectors, and the fixed-point residual mean in one
+    statement."""
+
+    @staticmethod
+    def _oracle() -> str:
+        from openaq_data_pipeline_spark.catalog import exact_ratio_duck
+        from openaq_data_pipeline_spark.queries_ext import (
+            _ivf_trained_cents_duck,
+        )
+
+        cos = (
+            "list_dot_product(a.v, c.c_vec) / "
+            "(sqrt(list_dot_product(a.v, a.v)) * "
+            "sqrt(list_dot_product(c.c_vec, c.c_vec)))"
+        )
+        return f"""
+WITH {_ivf_trained_cents_duck(8, 1, 64)},
+cents AS (SELECT cell_id, c_vec FROM cents1),
+allvec AS (
+    SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
+    UNION ALL
+    SELECT vec_id + 1000000,
+           list_transform(embedding::DOUBLE[], x -> -x)
+    FROM embeddings
+),
+assign AS (
+    SELECT a.vec_id, c.cell_id,
+           ROW_NUMBER() OVER (
+               PARTITION BY a.vec_id
+               ORDER BY round({cos}, 6) DESC, c.cell_id ASC
+           ) AS rn
+    FROM allvec a CROSS JOIN cents c
+),
+res AS (
+    SELECT s.cell_id,
+           GREATEST(0, CAST(round((1 - ({cos})) * 1000000, 0) AS BIGINT))
+               AS res_fp
+    FROM (SELECT vec_id, cell_id FROM assign WHERE rn = 1) s
+    JOIN allvec a USING (vec_id)
+    JOIN cents c USING (cell_id)
+)
+SELECT cell_id,
+       CAST(count(*) AS BIGINT) AS n_vecs,
+       {exact_ratio_duck('sum(res_fp)', 'count(*) * 1000000', 6)}
+           AS mean_cos_residual
+FROM res
+GROUP BY cell_id
+ORDER BY cell_id
+"""
+
+    def test_negated_batch_matches_duckdb(self, spark):
+        from openaq_data_pipeline_spark.catalog import load
+        from openaq_data_pipeline_spark.operators.similarity import (
+            ivf_drift_metrics,
+        )
+        from oracle_harness import SF_DIR, compare, run_oracle
+
+        e = load(spark, SF_DIR, "embeddings")["embeddings"]
+        drift = e.select(
+            (F.col("vec_id") + 1000000).alias("vec_id"),
+            F.transform(F.col("embedding"), lambda x: -x).alias("embedding"),
+        )
+        with temp_ivf_index(n_buckets=8) as idx:
+            build_ivf_index(e, idx, n_cells=8, train_iters=1)
+            append_ivf_index(drift, idx)
+            out = (
+                ivf_drift_metrics(spark, idx)
+                .orderBy("cell_id")
+                .localCheckpoint(eager=True)
+            )
+        problems = compare(out, run_oracle(self._oracle(), SF_DIR))
+        assert not problems, problems

@@ -104,7 +104,7 @@ class TestAvifNative:
         from openaq_data_pipeline_spark.operators import (
             avif_native as an,
         )
-        from openaq_data_pipeline_spark.queries_staged import (
+        from openaq_data_pipeline_spark.queries_crawl import (
             _avif_stats_oracle,
             q_image_avif_stats,
         )

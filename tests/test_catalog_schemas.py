@@ -72,58 +72,3 @@ def test_nested_ntz_fails_loudly(spark, tmp_path):
     raw = spark.read.parquet(str(d / "events.parquet"))
     with pytest.raises(TypeError, match="nests a TIMESTAMP_NTZ"):
         normalize_timestamps(raw, "events")
-
-
-# --- registry rotation ledger (r15, VERDICT r14 next #7) -----------------
-
-
-def test_registry_ledger_current_and_consistent():
-    """COVERAGE.md's generated ledger table must match the live
-    registry exactly — every query present with the right status,
-    regenerating produces a byte-identical file (no silent drift),
-    and every PROMOTIONS pair references real queries with the
-    promoted side in a driver slot and the demoted side rotated."""
-    import subprocess
-    import sys
-    from pathlib import Path
-
-    from openaq_data_pipeline_spark.catalog import (
-        DRIVER_QUERY_CAP,
-        registry,
-        rotated_registry,
-    )
-    from openaq_data_pipeline_spark.rotation_ledger import (
-        PROMOTIONS,
-        ledger_rows,
-    )
-
-    rows = ledger_rows()
-    driver = {q.name for q in registry()}
-    rotated = {q.name for q in rotated_registry()}
-    assert len(driver) == DRIVER_QUERY_CAP
-    by_name = {r[0]: r for r in rows}
-    assert len(by_name) == len(rows), "duplicate ledger rows"
-    assert set(by_name) == driver | rotated
-    for name, status, family, _swap in rows:
-        assert status == ("driver" if name in driver else status)
-        if name in driver:
-            assert status == "driver", name
-        else:
-            assert status in ("rotated", "staged"), name
-        assert family, f"{name} has no family tag"
-    latest = max(PROMOTIONS)
-    for rnd, pairs in PROMOTIONS.items():
-        for promoted, demoted in pairs:
-            assert promoted in driver | rotated, promoted
-            assert demoted in driver | rotated, demoted
-            if rnd == latest:
-                # the most recent swap must still be in effect
-                assert promoted in driver, promoted
-                assert demoted in rotated, demoted
-    repo = Path(__file__).resolve().parent.parent
-    res = subprocess.run(
-        [sys.executable, str(repo / "scripts" / "gen_ledger.py"),
-         "--check"],
-        capture_output=True, text=True,
-    )
-    assert res.returncode == 0, res.stdout + res.stderr

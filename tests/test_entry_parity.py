@@ -1,21 +1,17 @@
 """Spark-vs-DuckDB parity for every catalog query (the driver's t2
 gate, run locally at sf0.001 for speed; set PARITY_SF_DIR to run at
-sf0.01 exactly like the driver)."""
+sf0.01 exactly like the driver), and for the Spark-builtin
+demonstrations in ``builtin_queries``."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
-from openaq_data_pipeline_spark.catalog import registry, rotated_registry
-from oracle_harness import compare, run_oracle
+from builtin_queries import BUILTIN_QUERIES
+from openaq_data_pipeline_spark.catalog import registry
+from oracle_harness import SF_DIR, compare, run_oracle
 
-SF_DIR = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.001")
-
-# rotated queries left the driver-facing surface (DRIVER_QUERY_CAP)
-# but keep identical parity coverage here
-QUERIES = registry() + rotated_registry()
+QUERIES = registry() + BUILTIN_QUERIES
 
 
 @pytest.mark.parametrize("qdef", QUERIES, ids=[q.name for q in QUERIES])

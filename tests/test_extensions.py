@@ -25,12 +25,12 @@ def documents(spark):
 
 class TestDedup:
     def test_minhash_lsh_finds_planted_near_dups(self, spark):
-        from openaq_data_pipeline_spark.queries_ext import dedup_minhash_lsh
+        from near_dups import minhash_lsh_pairs
 
-        pairs = {(r.id_a, r.id_b) for r in dedup_minhash_lsh(spark, SF_DIR).collect()}
+        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        pairs = {(r.id_a, r.id_b) for r in minhash_lsh_pairs(docs).collect()}
         # every mutated copy (id+100000) should band-collide with its
         # original: ~90% shingle overlap → P[2-row band match] ≈ 1
-        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
         planted = {
             (r.doc_id, r.doc_id + 100000)
             for r in docs.filter(
@@ -42,9 +42,10 @@ class TestDedup:
         assert len(found) / len(planted) >= 0.9
 
     def test_ngram_jaccard_scores_planted_pairs_high(self, spark):
-        from openaq_data_pipeline_spark.queries_ext import dedup_ngram_jaccard
+        from near_dups import jaccard_pairs
 
-        rows = dedup_ngram_jaccard(spark, SF_DIR).collect()
+        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        rows = jaccard_pairs(docs)[1].collect()
         planted = [r for r in rows if r.id_b == r.id_a + 100000]
         assert planted, "no planted pair passed the 0.5 threshold"
         assert all(r.jaccard >= 0.5 for r in rows)
@@ -70,10 +71,21 @@ class TestDedup:
         assert len(dup) == 1 and dup[0].jaccard == 1.0
 
     def test_exact_dedup_collapses_doubled_corpus(self, spark):
-        from openaq_data_pipeline_spark.queries_ext import dedup_exact
+        from openaq_data_pipeline_spark.operators.text import fingerprint
 
-        out = dedup_exact(spark, SF_DIR)
-        docs_n = spark.read.parquet(f"{SF_DIR}/documents.parquet").count()
+        d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        corpus = d.select("doc_id", "text").unionByName(
+            d.select((F.col("doc_id") + 200000).alias("doc_id"), "text")
+        )
+        out = (
+            corpus.select("doc_id", fingerprint(F.col("text")).alias("fingerprint"))
+            .groupBy("fingerprint")
+            .agg(
+                F.min("doc_id").cast("long").alias("doc_id"),
+                F.count("*").cast("long").alias("n_copies"),
+            )
+        )
+        docs_n = d.count()
         assert out.count() == docs_n  # one survivor per original
         assert out.filter("n_copies <> 2").count() == 0
         assert out.filter("doc_id >= 200000").count() == 0  # min-id wins
@@ -1073,6 +1085,53 @@ class TestTextOps:
         # winnowed mins mostly survive a suffix edit
         assert len(fps[1] & fps[2]) >= 2
 
+
+    def test_quality_scores_match_duckdb(self, spark):
+        """Alpha/non-ASCII/stopword ratios and a length-based verdict,
+        exact ratios on both engines (stopword_count against its
+        DuckDB regexp restatement)."""
+        from openaq_data_pipeline_spark.catalog import (
+            exact_ratio_duck,
+            exact_ratio_spark,
+        )
+        from openaq_data_pipeline_spark.operators import text as X
+        from oracle_harness import compare, run_oracle
+
+        stop_re = "\\b(?:" + "|".join(X.STOPWORDS) + ")\\b"
+        n_stop_sql = f"len(regexp_extract_all(lower(text), '{stop_re}'))"
+        oracle = f"""
+SELECT doc_id,
+       CAST(length(text) AS BIGINT) AS n_chars,
+       CAST({n_stop_sql} AS BIGINT) AS n_stopwords,
+       {exact_ratio_duck("len(regexp_extract_all(text, '[A-Za-z]'))", "length(text)")} AS alpha_ratio,
+       {exact_ratio_duck("len(regexp_extract_all(text, '[^ -~]'))", "length(text)")} AS nonascii_ratio,
+       {exact_ratio_duck(n_stop_sql, "len(string_split(trim(text), ' '))")} AS stopword_ratio,
+       CASE WHEN length(text) BETWEEN 50 AND 10000
+             AND len(regexp_extract_all(text, '[A-Za-z]')) * 2 > length(text)
+            THEN 'keep' ELSE 'flag' END AS verdict
+FROM documents
+"""
+        d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        n_chars = F.length("text").cast("long")
+        n_alpha = F.size(F.regexp_extract_all("text", F.lit(r"[A-Za-z]"), 0)).cast("long")
+        n_nonascii = F.size(F.regexp_extract_all("text", F.lit(r"[^ -~]"), 0)).cast("long")
+        n_stop = X.stopword_count(F.col("text"))
+        n_tok = X.token_count(F.col("text"))
+        out = d.select(
+            "doc_id",
+            n_chars.alias("n_chars"),
+            n_stop.alias("n_stopwords"),
+            exact_ratio_spark(n_alpha, n_chars).alias("alpha_ratio"),
+            exact_ratio_spark(n_nonascii, n_chars).alias("nonascii_ratio"),
+            exact_ratio_spark(n_stop, n_tok).alias("stopword_ratio"),
+            F.when(
+                n_chars.between(50, 10000) & (n_alpha * 2 > n_chars), "keep"
+            )
+            .otherwise("flag")
+            .alias("verdict"),
+        )
+        problems = compare(out, run_oracle(oracle, SF_DIR))
+        assert not problems, problems
 
 class TestNeardupParams:
     def test_derivation_monotone_and_clamped(self):

@@ -360,3 +360,83 @@ class TestAudioPlaneComposition:
         assert rows[0].peak == int(np.abs(s).max())
         assert rows[1].sample_rate == 44100
         assert rows[1].sum_abs is None  # header-only
+
+
+class TestAudioQualityOracle:
+    """audio_pcm_features against DuckDB: WAV (even ids) and FLAC (odd
+    ids) decode through the engine's own codecs into integer-exact
+    quality signals — peak, int64 sum of squares, full-scale clip
+    count, near-silence count. Each document is a loud prefix of
+    closed-form amplitude (full-scale 32767 every fifth id) over a
+    silent tail; the oracle is the closed form of that synthesis."""
+
+    ORACLE = """
+SELECT doc_id,
+       CASE WHEN doc_id % 2 = 0 THEN 'wav' ELSE 'flac' END AS codec,
+       CAST(CASE doc_id % 5 WHEN 0 THEN 8000 WHEN 1 THEN 16000
+            WHEN 2 THEN 22050 WHEN 3 THEN 44100 ELSE 48000 END
+            AS INT) AS sample_rate,
+       CAST(256 + (doc_id % 4) * 64 AS BIGINT) AS n_samples,
+       CAST(a AS BIGINT) AS peak_abs,
+       CAST(s * a * a AS BIGINT) AS sum_sq,
+       CAST(CASE WHEN a = 32767 THEN s ELSE 0 END AS BIGINT)
+           AS n_clipped,
+       CAST(256 + (doc_id % 4) * 64 - s AS BIGINT) AS n_silent
+FROM (
+  SELECT doc_id,
+         CASE WHEN doc_id % 5 = 0 THEN 32767
+              ELSE 20000 + doc_id % 9999 END AS a,
+         64 + (doc_id % 7) * 16 AS s
+  FROM documents) t
+ORDER BY doc_id
+"""
+
+    def test_pcm_signals_match_duckdb(self, spark):
+        from openaq_data_pipeline_spark.catalog import fan_out, load
+        from openaq_data_pipeline_spark.operators.multimodal import (
+            audio_pcm_features,
+        )
+        from oracle_harness import SF_DIR, compare, run_oracle
+
+        d = load(spark, SF_DIR, "documents")["documents"].select("doc_id")
+
+        def synth(batches):
+            from openaq_data_pipeline_spark.operators.multimodal import (
+                encode_wav_pcm16,
+            )
+
+            rates = (8000, 16000, 22050, 44100, 48000)
+            for pdf in batches:
+                pdf = pdf.copy()
+                blobs = []
+                for i in pdf["doc_id"]:
+                    i = int(i)
+                    n = 256 + (i % 4) * 64
+                    s = 64 + (i % 7) * 16
+                    a = 32767 if i % 5 == 0 else 20000 + i % 9999
+                    rate = rates[i % 5]
+                    pcm = np.zeros(n, np.int64)
+                    pcm[:s] = a
+                    if i % 2 == 0:
+                        blobs.append(
+                            encode_wav_pcm16(pcm.astype(np.int16), rate)
+                        )
+                    else:
+                        blobs.append(
+                            encode_flac(
+                                pcm.reshape(-1, 1).astype(np.int32),
+                                sample_rate=rate,
+                            )
+                        )
+                pdf["content"] = blobs
+                yield pdf[["doc_id", "content"]]
+
+        audio = fan_out(d).mapInPandas(
+            synth, schema="doc_id long, content binary"
+        )
+        out = audio_pcm_features(audio, "content", id_col="doc_id").select(
+            "doc_id", "codec", "sample_rate", "n_samples",
+            "peak_abs", "sum_sq", "n_clipped", "n_silent",
+        )
+        problems = compare(out, run_oracle(self.ORACLE, SF_DIR))
+        assert not problems, problems

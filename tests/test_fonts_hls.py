@@ -223,3 +223,103 @@ class TestCssRefs:
             (3, "asset", "img/b.png"),
             (4, "asset", "img/c.png"),
         ]
+
+
+class TestFontOracle:
+    """font_features against DuckDB: per document the blob rotates
+    through raw sfnt TTF, CFF OTTO, a WOFF wrapper (per-table zlib
+    under the declared origLength cap), a WOFF2 (real varint
+    directory + one Brotli stream through the gated binding; without
+    the library the arm folds to a header-only stub with NULL
+    metrics) and a corrupt head-magic residue that must degrade to
+    NULL columns. The oracle is the closed form of the synthesis."""
+
+    @staticmethod
+    def _oracle(br_ok: bool) -> str:
+        if br_ok:
+            nt3 = "CAST(2 AS INT)"
+            upem3 = ("CAST(CASE doc_id % 4 WHEN 0 THEN 1000 WHEN 1 "
+                     "THEN 2048 WHEN 2 THEN 1024 ELSE 512 END AS INT)")
+            ng3 = "CAST(10 + doc_id % 500 AS INT)"
+        else:
+            nt3 = "CAST(5 + doc_id % 7 AS INT)"
+            upem3 = "NULL"
+            ng3 = "NULL"
+        return f"""
+SELECT doc_id,
+       CASE doc_id % 5
+         WHEN 0 THEN 'ttf' WHEN 1 THEN 'otf' WHEN 2 THEN 'woff'
+         WHEN 3 THEN 'woff2' ELSE NULL END AS format,
+       CASE doc_id % 5
+         WHEN 3 THEN {nt3}
+         WHEN 4 THEN NULL
+         ELSE CAST(2 AS INT) END AS n_tables,
+       CASE WHEN doc_id % 5 = 4 THEN NULL
+            WHEN doc_id % 5 = 3 THEN {upem3}
+            ELSE CAST(CASE doc_id % 4 WHEN 0 THEN 1000 WHEN 1
+                 THEN 2048 WHEN 2 THEN 1024 ELSE 512 END AS INT)
+            END AS units_per_em,
+       CASE WHEN doc_id % 5 = 4 THEN NULL
+            WHEN doc_id % 5 = 3 THEN {ng3}
+            ELSE CAST(10 + doc_id % 500 AS INT) END AS n_glyphs
+FROM documents
+ORDER BY doc_id
+"""
+
+    def test_five_arms_match_duckdb(self, spark):
+        from openaq_data_pipeline_spark.catalog import load
+        from openaq_data_pipeline_spark.operators.fonts import font_features
+        from openaq_data_pipeline_spark.queries_crawl import (
+            _native_brotli_ok,
+        )
+        from oracle_harness import SF_DIR, compare, run_oracle
+
+        d = load(spark, SF_DIR, "documents")["documents"].select("doc_id")
+        br_ok = _native_brotli_ok()  # frozen at plan build (driver side)
+
+        def synth(batches):
+            upems = (1000, 2048, 1024, 512)
+            for pdf in batches:
+                pdf = pdf.copy()
+                blobs = []
+                for i in pdf["doc_id"]:
+                    i = int(i)
+                    arm = i % 5
+                    ng, upem = 10 + i % 500, upems[i % 4]
+                    if arm == 0:
+                        blobs.append(encode_font_stub(ng, upem, "ttf"))
+                    elif arm == 1:
+                        blobs.append(encode_font_stub(ng, upem, "otf"))
+                    elif arm == 2:
+                        blobs.append(encode_font_stub(ng, upem, "woff"))
+                    elif arm == 3:
+                        if br_ok:
+                            blobs.append(
+                                encode_font_stub(ng, upem, "woff2")
+                            )
+                        else:  # header-only fold: full 48-byte
+                            # header + null directory entries, no
+                            # head/maxp -> declared count, NULL metrics
+                            nt = 5 + i % 7
+                            blobs.append(
+                                b"wOF2" + b"\x00\x01\x00\x00"
+                                + struct.pack(">I", 100)
+                                + struct.pack(">H", nt)
+                                + b"\x00" * 34 + b"\x00" * (2 * nt)
+                            )
+                    else:
+                        # corrupt: head magicNumber flipped — the walk
+                        # must refuse, the lenient plane keeps NULLs
+                        b = bytearray(encode_font_stub(ng, upem, "ttf"))
+                        off = 12 + 16 * 2 + 12  # head body + magic offset
+                        b[off] ^= 0xFF
+                        blobs.append(bytes(b))
+                pdf["content"] = blobs
+                yield pdf[["doc_id", "content"]]
+
+        fonts = d.mapInPandas(synth, schema="doc_id long, content binary")
+        out = font_features(
+            fonts, "content", id_col="doc_id", lenient=True
+        ).select("doc_id", "format", "n_tables", "units_per_em", "n_glyphs")
+        problems = compare(out, run_oracle(self._oracle(br_ok), SF_DIR))
+        assert not problems, problems

@@ -166,20 +166,29 @@ class TestIncrementalFuzzy:
             )
 
     def test_no_temp_index_residue(self, spark):
-        """The registered query leaves no fuzzy_index_* tempdir and
-        no fuzzy_idx_* catalog table; its result is readable after
-        cleanup (eager checkpoint severs the index dependency)."""
+        """Indexing the documents and probing truncated copies of every
+        13th doc (id+500000) through the temp-index context manager
+        leaves no fuzzy_index_* tempdir and no fuzzy_idx_* catalog
+        table; the result is readable after cleanup (eager checkpoint
+        severs the index dependency)."""
         import tempfile
 
-        from openaq_data_pipeline_spark.queries_corpus import (
-            fuzzy_decon_incremental,
-        )
+        from oracle_harness import SF_DIR
 
+        sf = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", SF_DIR)
+        d = spark.read.parquet(f"{sf}/documents.parquet")
+        w = F.split(F.col("text"), " ")
+        ev = d.filter((F.col("doc_id") % 13 == 0) & (F.size(w) >= 8)).select(
+            (F.col("doc_id") + 500000).alias("doc_id"),
+            F.concat_ws(" ", F.slice(w, 1, F.size(w) - 5)).alias("text"),
+        )
         tmp_root = tempfile.gettempdir()
         before = set(glob.glob(os.path.join(tmp_root, "fuzzy_index_*")))
-        out = fuzzy_decon_incremental(
-            spark, os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
-        )
+        with temp_fuzzy_index(n_buckets=8) as idx:
+            build_fuzzy_index(d.select("doc_id", "text"), "text", "doc_id", idx)
+            out = incremental_fuzzy_matches(
+                ev, "text", "doc_id", idx
+            ).localCheckpoint(eager=True)
         assert out.count() >= 0
         after = set(glob.glob(os.path.join(tmp_root, "fuzzy_index_*")))
         assert after - before == set()
@@ -200,7 +209,7 @@ class TestIncrementalSimHash:
     # natural-language token multiplicity gives and uniform synthetic
     # token soups do NOT (all-distinct tokens leave ~11% of bit-sums
     # balanced — one appended token then flips ~7 bits, past any
-    # banded radius). Same testbed as the dedup_simhash driver query.
+    # banded radius).
     def _train(self, spark):
         sf = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
         return (
@@ -365,16 +374,27 @@ class TestIncrementalSimHash:
     def test_no_temp_index_residue(self, spark):
         import tempfile
 
-        from openaq_data_pipeline_spark.queries_ext import (
-            dedup_simhash_incremental,
+        from openaq_data_pipeline_spark.operators.incremental_fuzzy import (
+            build_simhash_index,
+            incremental_simhash_matches,
+            temp_simhash_index,
         )
 
+        from oracle_harness import SF_DIR
+
+        sf = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", SF_DIR)
+        d = spark.read.parquet(f"{sf}/documents.parquet")
+        batch = d.filter(F.col("doc_id") % 5 == 0).select(
+            (F.col("doc_id") + 100000).alias("doc_id"),
+            F.concat(F.col("text"), F.lit(" qq")).alias("text"),
+        )
         tmp_root = tempfile.gettempdir()
         before = set(glob.glob(os.path.join(tmp_root, "simhash_index_*")))
-        out = dedup_simhash_incremental(
-            spark,
-            os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001"),
-        )
+        with temp_simhash_index(n_buckets=8) as idx:
+            build_simhash_index(d.select("doc_id", "text"), "text", "doc_id", idx)
+            out = incremental_simhash_matches(
+                batch, "text", "doc_id", idx
+            ).localCheckpoint(eager=True)
         assert out.count() > 0
         after = set(glob.glob(os.path.join(tmp_root, "simhash_index_*")))
         assert after - before == set()

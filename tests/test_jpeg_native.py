@@ -193,7 +193,7 @@ class TestJpegNative:
         from openaq_data_pipeline_spark.operators import (
             jpeg_native as jn,
         )
-        from openaq_data_pipeline_spark.queries_staged import (
+        from openaq_data_pipeline_spark.queries_crawl import (
             _jpeg_prog_oracle,
             q_image_jpeg_progressive,
         )

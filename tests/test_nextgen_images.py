@@ -101,3 +101,101 @@ class TestSniff:
         assert got[2] == ("image/jxl", "image")
         assert got[3] == ("image/jxl", "image")
         assert got[4] == ("video/mp4", "video")
+
+
+class TestNextgenOracle:
+    """nextgen_image_features against DuckDB: per document the blob
+    rotates through heic, heic+alpha (MIAF auxC URN), mif1,
+    bare-codestream JXL, container JXL (dims exercise both the div8
+    fast path and the U32 arm) and a truncated-JXL residue that must
+    keep NULL columns; the sniffer routes both formats to the image
+    plane. The oracle is the closed form of the synthesis."""
+
+    ORACLE = """
+SELECT doc_id,
+       CASE WHEN doc_id % 6 IN (0, 1, 2) THEN 'image/heif'
+            ELSE 'image/jxl' END AS mime,
+       'image' AS route,
+       CASE WHEN doc_id % 6 = 5 THEN NULL
+            WHEN doc_id % 6 IN (0, 1, 2) THEN 'heif'
+            ELSE 'jxl' END AS fmt,
+       CASE WHEN doc_id % 6 = 5 THEN NULL
+            WHEN doc_id % 6 IN (0, 1, 2)
+                THEN CAST(320 + doc_id % 200 AS INT)
+            WHEN doc_id % 6 = 3 THEN CAST(8 * (1 + doc_id % 32) AS INT)
+            ELSE CAST(257 + doc_id % 700 AS INT) END AS width,
+       CASE WHEN doc_id % 6 = 5 THEN NULL
+            WHEN doc_id % 6 IN (0, 1, 2)
+                THEN CAST(240 + doc_id % 100 AS INT)
+            WHEN doc_id % 6 = 3 THEN CAST(8 * (1 + doc_id % 16) AS INT)
+            ELSE CAST(300 + doc_id % 500 AS INT) END AS height,
+       CASE WHEN doc_id % 6 IN (0, 1, 2) THEN doc_id % 6 = 1
+            END AS has_alpha,
+       CASE WHEN doc_id % 6 IN (3, 4) THEN doc_id % 6 = 4
+            END AS is_container
+FROM documents
+ORDER BY doc_id
+"""
+
+    def test_six_arms_match_duckdb(self, spark):
+        from openaq_data_pipeline_spark.catalog import load
+        from openaq_data_pipeline_spark.operators.multimodal import (
+            nextgen_image_features,
+        )
+        from openaq_data_pipeline_spark.operators.router import (
+            route_for_mime,
+        )
+        from openaq_data_pipeline_spark.operators.text import sniff_mime
+        from oracle_harness import SF_DIR, compare, run_oracle
+
+        d = load(spark, SF_DIR, "documents")["documents"].select("doc_id")
+
+        def synth(batches):
+            for pdf in batches:
+                pdf = pdf.copy()
+                blobs = []
+                for i in pdf["doc_id"]:
+                    i = int(i)
+                    arm = i % 6
+                    if arm in (0, 1, 2):
+                        brand = (b"heic", b"heic", b"mif1")[arm]
+                        blobs.append(
+                            encode_heif_header(
+                                320 + i % 200, 240 + i % 100, brand,
+                                has_alpha=arm == 1,
+                            )
+                        )
+                    elif arm == 3:  # div8 fast path, bare codestream
+                        blobs.append(
+                            encode_jxl_header(
+                                8 * (1 + i % 32), 8 * (1 + i % 16)
+                            )
+                        )
+                    elif arm == 4:  # U32 arm, container
+                        blobs.append(
+                            encode_jxl_header(
+                                257 + i % 700, 300 + i % 500,
+                                container=True,
+                            )
+                        )
+                    else:  # truncated codestream: NULL columns
+                        blobs.append(b"\xff\x0a")
+                pdf["content"] = blobs
+                yield pdf[["doc_id", "content"]]
+
+        imgs = d.mapInPandas(synth, schema="doc_id long, content binary")
+        mimes = imgs.select(
+            "doc_id", sniff_mime(F.col("content")).alias("mime")
+        ).withColumn("route", route_for_mime(F.col("mime")))
+        out = (
+            nextgen_image_features(
+                imgs, "content", id_col="doc_id", lenient=True
+            )
+            .join(mimes, "doc_id")
+            .select(
+                "doc_id", "mime", "route", "fmt", "width", "height",
+                "has_alpha", "is_container",
+            )
+        )
+        problems = compare(out, run_oracle(self.ORACLE, SF_DIR))
+        assert not problems, problems

@@ -7,13 +7,9 @@ the driver's *typed* hash didn't, and the Python-normalizing local
 harness was blind to it. These tests pin the machine-enforcement of
 the BIGINT-cast contract (catalog.py determinism contract)."""
 
-import os
-
 import pytest
 
-from oracle_harness import OracleTypeError, run_oracle
-
-SF_DIR = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.001")
+from oracle_harness import SF_DIR, OracleTypeError, run_oracle
 
 
 def test_uncast_sum_oracle_fails_locally():

@@ -12,14 +12,27 @@ from __future__ import annotations
 import re
 
 import pytest
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
-from openaq_data_pipeline_spark.catalog import registry, rotated_registry
+from openaq_data_pipeline_spark.catalog import (
+    exact_avg_spark,
+    fan_out,
+    load,
+    registry,
+    sk_spark,
+)
+from openaq_data_pipeline_spark.operators import dedup as D
+
+from near_dups import jaccard_pairs, minhash_lsh_pairs
 
 SF_DIR = "/root/testdata/sf0.001"
 
-# plan gates cover rotated queries too: rotation drops the driver
-# oracle slot, never the physical-plan contract
-REG = {q.name: q for q in [*registry(), *rotated_registry()]}
+REG = {q.name: q for q in registry()}
+
+
+def _documents(spark):
+    return load(spark, SF_DIR, "documents")["documents"]
 
 
 def final_plan(df) -> str:
@@ -28,12 +41,27 @@ def final_plan(df) -> str:
 
 
 def test_filter_pushdown_reaches_parquet_scan(spark):
-    """pricing_summary's shipdate range predicate is parquet-pushable
-    and must appear in PushedFilters (row-group/page pruning at 100 TB);
-    int_valid_events' CASE predicate is not pushable to parquet but
+    """A TPC-H Q1 pricing summary's shipdate range predicate is
+    parquet-pushable and must appear in PushedFilters (row-group/page
+    pruning at 100 TB); int_valid_events' CASE predicate is not pushable to parquet but
     must still evaluate AT the scan (DataFilters), not in a later
     stage after materialization."""
-    plan = final_plan(REG["pricing_summary"].build(spark, SF_DIR))
+    price = F.col("l_extendedprice").cast("decimal(12,2)")
+    disc = F.col("l_discount").cast("decimal(12,2)")
+    li = load(spark, SF_DIR, "lineitem")["lineitem"]
+    summary = (
+        li.filter(
+            F.col("l_shipdate")
+            <= F.lit("1998-09-02 00:00:00").cast("timestamp")
+        )
+        .groupBy("l_returnflag", "l_linestatus")
+        .agg(
+            F.round(F.sum(price * (F.lit(1) - disc)), 2).alias("sum_disc_price"),
+            exact_avg_spark(F.col("l_quantity")).alias("avg_qty"),
+            F.count(F.lit(1)).cast("long").alias("count_order"),
+        )
+    )
+    plan = final_plan(summary)
     m = re.search(r"PushedFilters: \[([^\]]*)\]", plan)
     assert m and m.group(1).strip(), f"no pushed filters:\n{plan[:2000]}"
 
@@ -43,26 +71,65 @@ def test_filter_pushdown_reaches_parquet_scan(spark):
 
 
 def test_column_pruning_narrow_read_schema(spark):
-    """surrogate_keys projects a few columns — the parquet ReadSchema
-    must not contain the wide remainder (e.g. lineitem comment)."""
-    plan = final_plan(REG["surrogate_keys"].build(spark, SF_DIR))
+    """A surrogate-key projection (F13) reads a few columns — the
+    parquet ReadSchema must not contain the wide remainder (e.g. the
+    nation comment)."""
+    n = load(spark, SF_DIR, "nation")["nation"]
+    keys = n.select(
+        "n_nationkey",
+        sk_spark(
+            F.col("n_nationkey").cast("string"),
+            F.when(F.col("n_regionkey") == 0, F.lit(None)).otherwise(
+                F.col("n_regionkey").cast("string")
+            ),
+            F.col("n_name"),
+        ).alias("record_key"),
+    )
+    plan = final_plan(keys)
     schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
     assert schemas
     assert all("comment" not in s for s in schemas), schemas
 
 
 def test_dimension_joins_broadcast(spark):
-    """snapshot_left_join and revenue_by_order join small dimensions:
-    both must resolve to BroadcastHashJoin, never SortMergeJoin."""
-    for name in ["snapshot_left_join", "revenue_by_order"]:
-        plan = final_plan(REG[name].build(spark, SF_DIR))
+    """A per-(user, day) snapshot dimension left-joined back to its
+    fact, and revenue_by_order, join small dimensions: both must
+    resolve to BroadcastHashJoin, never SortMergeJoin."""
+    e = load(spark, SF_DIR, "events")["events"]
+    dim = (
+        e.filter(F.col("event_type") == "purchase")
+        .groupBy("user_id", F.to_date("ts").alias("snapshot_date"))
+        .agg(F.round(F.max("value"), 2).alias("snapshot_max"))
+    )
+    snapshot = e.alias("e").join(
+        F.broadcast(dim).alias("d"),
+        (F.col("e.user_id") == F.col("d.user_id"))
+        & (F.to_date(F.col("e.ts")) == F.col("d.snapshot_date")),
+        "left",
+    ).select("e.event_id", "e.user_id", "d.snapshot_max")
+    for name, df in [
+        ("snapshot_left_join", snapshot),
+        ("revenue_by_order", REG["revenue_by_order"].build(spark, SF_DIR)),
+    ]:
+        plan = final_plan(df)
         assert "BroadcastHashJoin" in plan, f"{name} lost its broadcast"
         assert "SortMergeJoin" not in plan, f"{name} fell back to SMJ"
 
 
 def test_anti_join_stays_broadcast(spark):
     """RI tests are anti-joins against a parent dim — broadcastable."""
-    plan = final_plan(REG["ri_violations"].build(spark, SF_DIR))
+    t = load(spark, SF_DIR, "lineitem", "supplier")
+    orphans = (
+        t["lineitem"]
+        .join(
+            F.broadcast(t["supplier"]),
+            F.col("l_suppkey") == F.col("s_suppkey"),
+            "left_anti",
+        )
+        .select(F.col("l_suppkey").alias("orphan_suppkey"))
+        .distinct()
+    )
+    plan = final_plan(orphans)
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
 
 
@@ -91,10 +158,19 @@ def test_whole_stage_codegen_covers_hot_path(spark):
 
 
 def test_topk_filters_before_full_sort(spark):
-    """topk_orders_per_segment: rank-filter pattern must use a window
-    + filter, not a global sort of everything (no global Sort without
-    partitioning below the filter)."""
-    plan = final_plan(REG["topk_orders_per_segment"].build(spark, SF_DIR))
+    """Top-3 orders per market segment: the rank-filter pattern must
+    use a window + filter, not a global sort of everything (no global
+    Sort without partitioning below the filter)."""
+    t = load(spark, SF_DIR, "orders", "customer")
+    joined = t["orders"].join(
+        F.broadcast(t["customer"].select("c_custkey", "c_mktsegment")),
+        F.col("o_custkey") == F.col("c_custkey"),
+    )
+    w = Window.partitionBy("c_mktsegment").orderBy(
+        F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
+    )
+    topk = joined.withColumn("rnk", F.row_number().over(w)).filter("rnk <= 3")
+    plan = final_plan(topk)
     assert "RunningWindowFunction" in plan or "Window" in plan
 
 
@@ -113,7 +189,10 @@ def test_dedup_pipelines_compute_shingles_once(spark, name):
     has exactly ONE consumer (the posting-list aggregate), so its
     pipeline appears exactly once inline with no materialization
     needed."""
-    plan = final_plan(REG[name].build(spark, SF_DIR))
+    if name == "dedup_ngram_jaccard":
+        plan = final_plan(jaccard_pairs(_documents(spark))[1])
+    else:
+        plan = final_plan(minhash_lsh_pairs(_documents(spark)))
     n_shingle_builds = len(re.findall(r"greatest", plan))
     if name == "dedup_ngram_jaccard":
         rdd_scans = len(re.findall(r"Scan ExistingRDD", plan))
@@ -166,7 +245,7 @@ def test_runtime_bloom_filter_prunes_fact_scan(spark):
 
 
 def test_embedding_cosine_default_is_bucketed(spark):
-    """dedup_embedding_cosine's default path must be the LSH-bucketed
+    """cosine_near_dup_pairs' default path must be the LSH-bucketed
     tag → repartition(table, bucket) → per-bucket kernel topology
     (VERDICT r1 #1 / r2 performance): no cartesian/nested-loop
     all-pairs scan, no full-corpus driver collect (collect/toPandas
@@ -178,13 +257,20 @@ def test_embedding_cosine_default_is_bucketed(spark):
 
     from pyspark.sql.classic.dataframe import DataFrame as ClassicDF
 
+    from openaq_data_pipeline_spark.operators.similarity import (
+        cosine_near_dup_pairs,
+    )
+
     def boom(*a, **kw):
         raise AssertionError("driver collect in default cosine path")
 
     with mock.patch.object(ClassicDF, "collect", boom), mock.patch.object(
         ClassicDF, "toPandas", boom
     ):
-        df = REG["dedup_embedding_cosine"].build(spark, SF_DIR)
+        e = load(spark, SF_DIR, "embeddings")["embeddings"]
+        df = cosine_near_dup_pairs(
+            fan_out(e), threshold=0.40, id_col="vec_id", dim=64
+        )
     plan = final_plan(df)
     assert "CartesianProduct" not in plan, "all-pairs cross join in default path"
     assert "BroadcastNestedLoopJoin" not in plan, "nested-loop all-pairs"
@@ -195,11 +281,14 @@ def test_embedding_cosine_default_is_bucketed(spark):
 
 
 def test_repetition_signals_plan(spark):
-    """text_repetition_signals: scan prunes to (doc_id, text); the
+    """repetition_signals: scan prunes to (doc_id, text); the
     n-gram histogram is exactly two exchanges ((id, gram) counts →
     per-id moments) with map-side partial aggregation — shuffled
     volume is distinct grams per doc, never corpus bytes."""
-    plan = final_plan(REG["text_repetition_signals"].build(spark, SF_DIR))
+    from openaq_data_pipeline_spark.operators.text import repetition_signals
+
+    d = fan_out(_documents(spark))
+    plan = final_plan(repetition_signals(d, "text", "doc_id", n=2))
     schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
     assert schemas and all(
         set(s.split(",")) <= {"doc_id:bigint", "text:string"} for s in schemas
@@ -217,7 +306,7 @@ def test_jaccard_index_is_single_exchange(spark):
     pair-count aggregate. The r3 shape added a distinct, a
     count-over-shingle window, and a per-side size recompute — three
     more full shuffles of exploded-shingle/corpus-sized tables."""
-    plan = final_plan(REG["dedup_ngram_jaccard"].build(spark, SF_DIR))
+    plan = final_plan(jaccard_pairs(_documents(spark))[1])
     assert "Window" not in plan, "stop-shingle guard regressed to a window"
     n_hash_exchanges = len(re.findall(r"Exchange hashpartitioning", plan))
     assert n_hash_exchanges == 1, f"expected 1 hash exchange, got {n_hash_exchanges}"
@@ -227,7 +316,19 @@ def test_containment_shares_posting_core(spark):
     """containment_pairs rides the same checkpointed posting-list
     index as jaccard (two RDD-scan consumers: sizes + pairs), with
     no window and no cartesian — only the ratio denominator differs."""
-    plan = final_plan(REG["dedup_containment"].build(spark, SF_DIR))
+    d = _documents(spark)
+    w = F.split(F.col("text"), " ")
+    excerpts = d.filter((F.col("doc_id") % 7 == 0) & (F.size(w) >= 12)).select(
+        (F.col("doc_id") + 300000).alias("doc_id"),
+        F.concat_ws(" ", F.slice(w, 1, 10)).alias("text"),
+    )
+    corpus = fan_out(d).select("doc_id", "text").unionByName(excerpts).filter(
+        F.size(F.split("text", " ")) >= 3
+    )
+    sh = D.shingles(corpus, "text", "doc_id", n=3, distinct=False)
+    plan = final_plan(
+        D.containment_pairs(sh, "doc_id", min_containment=0.8, max_doc_freq=1000)
+    )
     assert plan.count("Scan ExistingRDD") >= 2, "posting checkpoint not shared"
     assert "Window" not in plan
     assert "CartesianProduct" not in plan
@@ -239,7 +340,17 @@ def test_simhash_banded_plan(spark):
     integer bit_count(xor) Hamming verify filters BEFORE the
     distinct, and no join operator of any kind exists — the whole
     pair search is aggregates + explodes."""
-    plan = final_plan(REG["dedup_simhash"].build(spark, SF_DIR))
+    d = fan_out(_documents(spark))
+    appended = d.filter(F.col("doc_id") % 5 == 0).select(
+        (F.col("doc_id") + 100000).alias("doc_id"),
+        F.concat(F.col("text"), F.lit(" qq")).alias("text"),
+    )
+    fp = D.simhash64(
+        d.select("doc_id", "text").unionByName(appended), "text", "doc_id"
+    )
+    plan = final_plan(
+        D.simhash_near_dup_pairs(fp, "doc_id", max_hamming=3, max_bucket=2048)
+    )
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "Join" not in plan, "banded search must not re-join fingerprints"
@@ -322,11 +433,15 @@ def test_connected_components_scopes_width_to_cloned_session(spark, monkeypatch)
 
 
 def test_keep_one_survivors_plan(spark):
-    """dedup_keep_one's survivor step must stay equi-join-shaped (no
+    """keep_one_per_cluster's survivor step must stay equi-join-shaped (no
     cartesian/nested-loop), with the non-representative drop as a
     LeftAnti join — component counts at corpus scale are far past
     broadcast range, so the shape, not the strategy, is pinned."""
-    plan = final_plan(REG["dedup_keep_one"].build(spark, SF_DIR))
+    corpus, pairs = jaccard_pairs(_documents(spark))
+    comp = D.connected_components(pairs)
+    plan = final_plan(
+        D.keep_one_per_cluster(corpus.select("doc_id"), comp, id_col="doc_id")
+    )
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "LeftAnti" in plan, "non-representative drop is not an anti-join"
@@ -338,7 +453,14 @@ def test_curation_plan_shapes(spark):
     falls back to SortMergeJoin (eval set broadcasts); sampling and
     PII scanning are pure scan-side work — zero shuffles; all three
     prune to the columns they touch."""
-    plan = final_plan(REG["decontamination"].build(spark, SF_DIR))
+    from openaq_data_pipeline_spark.operators.curation import (
+        pii_scan,
+        stratified_sample,
+        train_eval_overlap,
+    )
+
+    d = _documents(spark)
+    plan = final_plan(train_eval_overlap(d, "text", "doc_id", n=3))
     assert plan.count("Scan ExistingRDD") >= 3, "shingle checkpoint not shared"
     # the train⋈eval overlap join must broadcast the collapsed eval
     # shingle set; the later per-doc totals⋈shared outer join is
@@ -346,28 +468,64 @@ def test_curation_plan_shapes(spark):
     # correct scale plan (AQE demotes it to broadcast on small runs)
     assert re.search(r"BroadcastHashJoin \[shingle", plan), "eval-set broadcast lost"
 
-    for name in ("stratified_sample", "pii_scan"):
-        plan = final_plan(REG[name].build(spark, SF_DIR))
+    sample = stratified_sample(
+        d.select("doc_id", "lang", "source"),
+        "doc_id",
+        "lang",
+        {"en": "80", "es": "40", "de": "40", "fr": "20"},
+        "10",
+    )
+    injected = d.select(
+        "doc_id",
+        F.when(
+            F.col("doc_id") % 7 == 0,
+            F.concat(
+                F.col("text"),
+                F.lit(" contact user"),
+                F.col("doc_id").cast("string"),
+                F.lit("@example.com or call 555-"),
+                F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
+                F.lit(" now"),
+            ),
+        )
+        .otherwise(F.col("text"))
+        .alias("text"),
+    )
+    for name, df in [
+        ("stratified_sample", sample),
+        ("pii_scan", pii_scan(injected, "text", "doc_id")),
+    ]:
+        plan = final_plan(df)
         assert "Exchange" not in plan, f"{name} acquired a shuffle"
         schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
         assert schemas and all("n_chars" not in s for s in schemas), schemas
 
 
 def test_mixture_sample_broadcasts_thresholds(spark):
-    """domain_mixture_sample: the threshold table is a tiny per-stratum
+    """mixture_sample: the threshold table is a tiny per-stratum
     aggregate — it must reach the corpus via a broadcast hash join,
     never a sort-merge shuffle of the big side."""
-    plan = final_plan(REG["domain_mixture_sample"].build(spark, SF_DIR))
+    from openaq_data_pipeline_spark.operators.curation import mixture_sample
+
+    kept = mixture_sample(
+        _documents(spark), "doc_id", "source", {"src1": 5, "src2": 3, "src3": 2}
+    )
+    plan = final_plan(kept.select("doc_id", "source", "bucket32", "thr"))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
 
 def test_quantize_embeddings_has_no_reassembly_shuffle(spark):
-    """embedding_quantization: pass 2 must be a per-row transform fed
+    """quantize_embeddings: pass 2 must be a per-row transform fed
     by a broadcast single-row grid (BroadcastNestedLoopJoin), NOT a
     posexplode + groupBy(vec_id) reassembly — the corpus side may
     shuffle only inside the tiny per-dim stats aggregate."""
-    plan = final_plan(REG["embedding_quantization"].build(spark, SF_DIR))
+    from openaq_data_pipeline_spark.operators.similarity import (
+        quantize_embeddings,
+    )
+
+    e = load(spark, SF_DIR, "embeddings")["embeddings"]
+    plan = final_plan(quantize_embeddings(e, "embedding", "vec_id", levels=255))
     assert "BroadcastNestedLoopJoin" in plan
     assert "SortMergeJoin" not in plan
     # exactly one scan feeds the per-dim stats; the quantize pass scans
@@ -376,24 +534,68 @@ def test_quantize_embeddings_has_no_reassembly_shuffle(spark):
 
 
 def test_boilerplate_heavy_lines_broadcast(spark):
-    """boilerplate_line_removal: the heavy-line set (df >= min_df) is
-    tiny by construction and must broadcast onto the exploded lines."""
-    plan = final_plan(REG["boilerplate_line_removal"].build(spark, SF_DIR))
+    """remove_boilerplate_lines: the heavy-line set (df >= min_df) is
+    tiny by construction and must broadcast onto the exploded lines.
+    Every 3rd document gets a newsletter line and every 4th a
+    copyright footer, so heavy lines exist."""
+    from openaq_data_pipeline_spark.operators.curation import (
+        remove_boilerplate_lines,
+    )
+
+    d = fan_out(_documents(spark))
+    w = F.split(F.col("text"), " ")
+    injected = d.select(
+        "doc_id",
+        F.concat_ws(
+            "\n",
+            F.concat_ws(" ", F.slice(w, 1, 10)),
+            F.when(
+                F.col("doc_id") % 3 == 0,
+                F.lit("subscribe to our newsletter today"),
+            ),
+            F.when(
+                F.size(w) > 10,
+                F.concat_ws(" ", F.slice(w, 11, F.size(w) - 10)),
+            ),
+            F.when(
+                F.col("doc_id") % 4 == 0,
+                F.lit("copyright twenty twenty four all rights reserved"),
+            ),
+        ).alias("text"),
+    )
+    plan = final_plan(
+        remove_boilerplate_lines(injected, "text", "doc_id", min_df=5)
+    )
     assert "BroadcastHashJoin" in plan
 
 
 def test_vocab_topk_never_full_sorts(spark):
-    """vocab_top_ngrams: global top-k must run as
+    """top_ngrams: global top-k must run as
     TakeOrderedAndProject (per-partition heaps), not a full Sort of
     the vocabulary."""
-    plan = final_plan(REG["vocab_top_ngrams"].build(spark, SF_DIR))
+    from openaq_data_pipeline_spark.operators.text import top_ngrams
+
+    d = fan_out(_documents(spark))
+    plan = final_plan(
+        top_ngrams(d, "text", "doc_id", n=1, k=50).unionByName(
+            top_ngrams(d, "text", "doc_id", n=2, k=50)
+        )
+    )
     assert "TakeOrderedAndProject" in plan
 
 
 def test_audio_features_is_arrow_batched(spark):
-    """audio_decode_features: both synth and decode must run as Arrow
+    """audio_features over synthetic_audio: both synth and decode must run as Arrow
     mapInPandas stages (never row-at-a-time Python UDFs)."""
-    plan = final_plan(REG["audio_decode_features"].build(spark, SF_DIR))
+    from openaq_data_pipeline_spark.operators.multimodal import (
+        audio_features,
+        synthetic_audio,
+    )
+
+    media = synthetic_audio(
+        _documents(spark).select(F.col("doc_id").alias("media_id"))
+    )
+    plan = final_plan(audio_features(media))
     assert len(re.findall(r"MapInPandas", plan)) >= 2
     assert "BatchEvalPython" not in plan
 
@@ -438,41 +640,76 @@ def test_bm25_prunes_postings_by_broadcast_query_terms(spark):
 
 
 def test_lm_score_joins_stay_keyed_and_jvm_side(spark):
-    """lm_bigram_score: scoring is two keyed joins + one aggregate —
+    """score_bigram_lm: scoring is two keyed joins + one aggregate —
     no Python in the plan, no cartesian, and the count tables build
     as broadcast or shuffled-hash joins (vocab-bounded sides)."""
-    plan = final_plan(REG["lm_bigram_score"].build(spark, SF_DIR))
+    from openaq_data_pipeline_spark.operators.lm import (
+        score_bigram_lm,
+        train_bigram_lm,
+    )
+
+    d = fan_out(_documents(spark))
+    c12, c1, v = train_bigram_lm(
+        d.filter(F.col("doc_id") % 2 == 0), "text", "doc_id"
+    )
+    cand = d.filter(F.col("doc_id") % 2 == 1)
+    plan = final_plan(score_bigram_lm(cand, "text", "doc_id", c12, c1, v))
     assert "BatchEvalPython" not in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_training_shards_single_exchange_for_rank(spark):
-    """training_shards: one exchange on shard_id feeding the rank
+    """shard_assignments: one exchange on shard_id feeding the rank
     window — the same physical shape the sharded writer needs, and
     nothing else (no join, no extra shuffle beyond the scan fan-out)."""
-    plan = final_plan(REG["training_shards"].build(spark, SF_DIR))
+    from openaq_data_pipeline_spark.operators.curation import shard_assignments
+
+    d = fan_out(_documents(spark))
+    plan = final_plan(shard_assignments(d, "doc_id", n_shards=16))
     assert plan.count("Window") == 1
     assert "Join" not in plan
     assert "BatchEvalPython" not in plan
 
 
 def test_fuzzy_decon_explodes_cross_pairs_only(spark):
-    """fuzzy_decontamination: candidates come from per-bucket SPLIT
+    """fuzzy_decontaminate: candidates come from per-bucket SPLIT
     train/eval lists (one exchange on the band key, train×eval
     explode) — no bands self-join, no cartesian; verification joins
     are keyed."""
-    plan = final_plan(REG["fuzzy_decontamination"].build(spark, SF_DIR))
+    from openaq_data_pipeline_spark.operators.curation import (
+        fuzzy_decontaminate,
+    )
+
+    d = fan_out(_documents(spark))
+    w = F.split(F.col("text"), " ")
+    leaked = d.filter((F.col("doc_id") % 13 == 0) & (F.size(w) >= 8)).select(
+        (F.col("doc_id") + 500000).alias("doc_id"),
+        F.concat_ws(" ", F.slice(w, 1, F.size(w) - 5)).alias("text"),
+    )
+    corpus = d.select("doc_id", "text").unionByName(leaked)
+    plan = final_plan(
+        fuzzy_decontaminate(corpus, is_eval=F.col("doc_id") >= 500000)
+    )
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "BatchEvalPython" not in plan
 
 
 def test_video_sampling_is_arrow_batched(spark):
-    """video_frame_sample: synth and demux+decode both run as Arrow
+    """sample_video_frames: synth and demux+decode both run as Arrow
     mapInPandas stages; no row-at-a-time Python, no shuffle at all
     (pure per-row media work)."""
-    plan = final_plan(REG["video_frame_sample"].build(spark, SF_DIR))
+    from openaq_data_pipeline_spark.operators.multimodal import (
+        sample_video_frames,
+        synthetic_videos,
+    )
+
+    vids = synthetic_videos(
+        fan_out(_documents(spark).select(F.col("doc_id").alias("media_id"))),
+        mix_formats=True,
+    )
+    plan = final_plan(sample_video_frames(vids, stride=2))
     assert len(re.findall(r"MapInPandas", plan)) >= 2
     assert "BatchEvalPython" not in plan
     # the only exchange is the scan fan-out (round-robin); the media

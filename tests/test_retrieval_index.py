@@ -165,14 +165,26 @@ class TestBm25Index:
     def test_no_temp_index_residue(self, spark):
         import tempfile
 
-        from openaq_data_pipeline_spark.queries_corpus import bm25_topk_query
+        from openaq_data_pipeline_spark.operators.text import normalize, tokens
 
+        from oracle_harness import SF_DIR
+
+        sf = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", SF_DIR)
+        d = spark.read.parquet(f"{sf}/documents.parquet")
+        # every 101st document's first 8 tokens form a query
+        qdf = d.filter(F.col("doc_id") % 101 == 0).select(
+            F.col("doc_id").alias("query_id"),
+            F.concat_ws(
+                " ", F.slice(tokens(normalize(F.col("text"))), 1, 8)
+            ).alias("q_text"),
+        )
         tmp_root = tempfile.gettempdir()
         before = set(glob.glob(os.path.join(tmp_root, "bm25_index_*")))
-        out = bm25_topk_query(
-            spark,
-            os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001"),
-        )
+        with temp_bm25_index(n_buckets=8) as idx:
+            build_bm25_index(d, "text", "doc_id", idx)
+            out = bm25_topk_indexed(
+                spark, qdf, idx, "doc_id", "q_text", "query_id", k=5
+            ).localCheckpoint(eager=True)
         assert out.count() > 0
         after = set(glob.glob(os.path.join(tmp_root, "bm25_index_*")))
         assert after - before == set()

@@ -1726,7 +1726,7 @@ class TestCompressNativeBindings:
         from openaq_data_pipeline_spark.operators import (
             webp_native as wn,
         )
-        from openaq_data_pipeline_spark.queries_staged import (
+        from openaq_data_pipeline_spark.queries_crawl import (
             _content_encoding_oracle,
             _vp8_lossy_oracle,
             q_content_encoding_route,
@@ -1897,3 +1897,80 @@ class TestR16FormatsFrontDoor:
         assert got[3] == ("image/jxl", "image")
         assert got[4] == ("image/png", "image")
         assert got[5] == ("text/plain", "text")
+
+
+class TestCharsetDecodeOracle:
+    """decode_routed_text against DuckDB, over extract_routed_text's
+    split topology (codegen detect → JVM cast for UTF-8 → one Arrow hop
+    for the rest): five charset spellings of each document (plain
+    UTF-8, BOM'd UTF-8, UTF-16-LE+BOM, UTF-16-BE+BOM, latin-1 declared
+    via <meta charset>). A café marker with a non-ASCII octet proves
+    the bytes decoded through the right codec, and a BOM is consumed,
+    never leaked into the text. The oracle is the closed form of the
+    expected token and round-tripped text per residue."""
+
+    ORACLE = """
+SELECT doc_id,
+       CASE WHEN doc_id % 5 IN (2, 4) THEN 'utf-16'
+            WHEN doc_id % 5 = 3 THEN 'iso-8859-1'
+            ELSE 'utf-8' END AS charset,
+       CASE WHEN doc_id % 5 = 3
+            THEN '<meta charset="iso-8859-1">café ± ' || text
+            ELSE 'café ± ' || text END AS text_out
+FROM documents
+ORDER BY doc_id
+"""
+
+    def test_five_spellings_match_duckdb(self, spark):
+        import pandas as pd
+
+        from openaq_data_pipeline_spark.catalog import load
+        from openaq_data_pipeline_spark.operators.router import (
+            decode_routed_text,
+        )
+        from openaq_data_pipeline_spark.operators.text import detect_charset
+        from oracle_harness import SF_DIR, compare, run_oracle
+
+        d = load(spark, SF_DIR, "documents")["documents"].select("doc_id", "text")
+
+        def synth(batches):
+            for pdf in batches:
+                ids, pages = [], []
+                for mid, txt in zip(pdf["doc_id"], pdf["text"]):
+                    mid = int(mid)
+                    body = "café ± " + (txt or "")
+                    r = mid % 5
+                    if r == 0:
+                        b = body.encode("utf-8")
+                    elif r == 1:
+                        b = b"\xef\xbb\xbf" + body.encode("utf-8")
+                    elif r == 2:
+                        b = body.encode("utf-16")  # LE + BOM
+                    elif r == 3:
+                        b = (
+                            '<meta charset="iso-8859-1">' + body
+                        ).encode("iso-8859-1")
+                    else:
+                        b = b"\xfe\xff" + body.encode("utf-16-be")
+                    ids.append(mid)
+                    pages.append(b)
+                yield pd.DataFrame({"doc_id": ids, "page": pages})
+
+        pages = d.mapInPandas(synth, schema="doc_id long, page binary")
+        df = pages.withColumn(
+            "charset", detect_charset(F.col("page"), html=True)
+        )
+        utf8_bom = F.substring(F.col("page"), 1, 3) == F.lit(b"\xef\xbb\xbf")
+        fast = df.where(F.col("charset") == "utf-8").withColumn(
+            "text_out",
+            F.when(utf8_bom, F.substring(F.col("page"), 4, 1 << 30))
+            .otherwise(F.col("page"))
+            .cast("string"),
+        )
+        slow = decode_routed_text(
+            df.where(F.col("charset") != "utf-8"), "page", "charset",
+            "text_out",
+        )
+        out = fast.unionByName(slow).select("doc_id", "charset", "text_out")
+        problems = compare(out, run_oracle(self.ORACLE, SF_DIR))
+        assert not problems, problems

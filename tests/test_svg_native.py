@@ -124,7 +124,7 @@ class TestGateDegrade:
         """The driver query's oracle is a function of the SAME
         availability boolean the plan froze — the r15 env-robust
         contract, pinned by re-deriving both faces."""
-        from openaq_data_pipeline_spark.queries_staged import (
+        from openaq_data_pipeline_spark.queries_crawl import (
             _svg_stats_oracle,
         )
 
