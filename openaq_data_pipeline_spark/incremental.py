@@ -12,10 +12,14 @@ environment, MERGE is emulated *partition-scoped*:
 
 1. the recomputed slice carries a derived day-partition column
    (``DATE(event_time)``, mirroring BigQuery's ``partition_by
-   granularity: day``);
-2. existing target rows in the affected partitions whose key does
-   NOT collide with an incoming key are kept (broadcast anti-join —
-   the incoming key set is bounded by the lookback window);
+   granularity: day``), and is localCheckpoint-ed once, so the
+   steps below read it without recomputing the slice;
+2. the slice's few affected ``_part_date`` values come back to the
+   driver, and the target is read with a partition filter on them
+   (partition pruning: only those day directories are scanned); of
+   those rows, the ones whose key does NOT collide with an incoming
+   key are kept (broadcast anti-join — the incoming key set is
+   bounded by the lookback window);
 3. kept ∪ incoming is written with dynamic partition overwrite, so
    only the affected day partitions are rewritten.
 
@@ -29,10 +33,19 @@ watermark are **silently dropped**, exactly like the reference's
 ``>=`` lookback. The streaming variant (streaming/) offers the
 superset watermark-with-allowed-lateness behavior.
 
-The union-then-overwrite plan reads the target path it writes;
-Spark's self-overwrite guard rejects that lineage, so the merged
-slice is localCheckpoint-ed first — materializing only the affected
-partitions (bounded, see above), never the full table.
+Two localCheckpoints bound the work. The incoming slice is
+checkpointed before its partitions and keys are derived, so each
+merge evaluates its source (the watermark filter over the staging
+dedup) once, not once per consumer. The union-then-overwrite plan
+reads the target path it writes; Spark's self-overwrite guard
+rejects that lineage, so the merged slice is localCheckpoint-ed too
+— materializing only the affected partitions (bounded, see above),
+never the full table.
+
+The high watermark is read from the newest day partition only: with
+``_part_date = DATE(event_time)``, that directory holds
+``MAX(event_time)``, so the probe scans one partition, not the
+history.
 
 Crash & concurrency contract (the reference gets all of this for free
 from BigQuery's atomic MERGE; plain parquet cannot, so it is stated
@@ -84,16 +97,20 @@ class IncrementalTable:
     cluster_by: tuple[str, ...] = ()  # within-partition sort keys
 
 
+def _hadoop_path(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` (local paths and object
+    stores alike)."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
 def _path_exists(spark: SparkSession, path: str) -> bool:
-    """Hadoop-FS existence probe (works for local paths and object
-    stores alike). Probing BEFORE spark.read avoids the
+    """Hadoop-FS existence probe. Probing BEFORE spark.read avoids the
     exception-driven PATH_NOT_FOUND flow, which logs a full
     FileNotFoundException stack from the reader's metadata check —
     noise that pollutes whatever artifact captures this process's
     output (first merge of every stream drain hit it)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = _hadoop_path(spark, path)
     return bool(fs.exists(hpath))
 
 
@@ -108,13 +125,37 @@ def read_target(spark: SparkSession, table: IncrementalTable) -> DataFrame | Non
         return None  # path exists but holds no readable footer yet
 
 
+def _partition_dirs(spark: SparkSession, table: IncrementalTable) -> list[str]:
+    """The target's ``_part_date=YYYY-MM-DD`` directories, newest first
+    (ISO dates sort lexically)."""
+    fs, hpath = _hadoop_path(spark, table.path)
+    if not fs.exists(hpath):
+        return []
+    prefix = f"{PART_COL}="
+    dirs = [
+        st.getPath().toString()
+        for st in fs.listStatus(hpath)
+        if st.isDirectory() and st.getPath().getName().startswith(prefix)
+    ]
+    return sorted(dirs, key=lambda d: d.rsplit("=", 1)[1], reverse=True)
+
+
 def high_watermark(spark: SparkSession, table: IncrementalTable):
     """P7/A4: ``SELECT MAX(event_time) FROM target`` — one scalar to
-    the driver; parquet footer stats make this metadata-only."""
-    target = read_target(spark, table)
-    if target is None:
-        return None
-    return target.agg(F.max(table.event_time_col)).first()[0]
+    the driver. Only the newest day partition is scanned: it holds the
+    maximum because ``_part_date = DATE(event_time)``. A partition
+    with no readable rows (a torn commit) is skipped, so the
+    watermark regresses to the newest one that has them. The maximum
+    is taken as a top-1 (one job, no shuffle), not an aggregate."""
+    col = F.col(table.event_time_col)
+    for part in _partition_dirs(spark, table):
+        try:
+            top = spark.read.parquet(part).select(col).orderBy(col.desc_nulls_last()).first()
+        except AnalysisException:
+            continue  # no readable footer in this partition
+        if top is not None and top[0] is not None:
+            return top[0]
+    return None
 
 
 def _with_partition(df: DataFrame, table: IncrementalTable) -> DataFrame:
@@ -159,11 +200,14 @@ def merge_upsert(
     if target is None:
         _write(incoming, table, "overwrite")
         return
-    affected = incoming.select(PART_COL).distinct()
+    # one evaluation of the slice for its three consumers below
+    incoming = incoming.localCheckpoint(eager=True)
+    affected = [r[0] for r in incoming.select(PART_COL).distinct().collect()]
+    if not affected:
+        return  # nothing to merge
     keys = incoming.select(table.unique_key).distinct()
-    keep = (
-        target.join(F.broadcast(affected), PART_COL, "left_semi")
-        .join(F.broadcast(keys), table.unique_key, "left_anti")
+    keep = target.filter(F.col(PART_COL).isin(affected)).join(
+        F.broadcast(keys), table.unique_key, "left_anti"
     )
     merged = keep.unionByName(incoming.select(keep.columns))
     # break lineage: the write overwrites partitions this plan reads
@@ -186,7 +230,15 @@ def incremental_run(
     ``mart_location_air_quality.sql:14-19``). Returns the resulting
     target table."""
     hwm = None if full_refresh else high_watermark(spark, table)
-    sliced = build_slice(hwm)
+    return commit_slice(spark, table, build_slice(hwm), hwm)
+
+
+def commit_slice(
+    spark: SparkSession, table: IncrementalTable, sliced: DataFrame, hwm
+) -> DataFrame:
+    """Land a slice computed against watermark ``hwm``: a full
+    overwrite when there is none (first run or full refresh), the
+    MERGE otherwise. Returns the resulting target table."""
     if hwm is None:
         _write(_with_partition(sliced, table), table, "overwrite")
     else:

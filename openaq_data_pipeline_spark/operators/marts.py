@@ -11,15 +11,26 @@ Parity targets:
   mart_location_weather.sql`` (A3 5-column pivot with the Fahrenheit
   conversion *inside* the aggregate, wind dir rounded to 0 dp)
 
+Both marts share the J2 join, the hour grain and the 6-column group
+set, so :func:`hourly_pivot` computes them together: one join, one
+``groupBy`` carrying all 19 pivot columns (14 air-quality + 5
+weather). Each mart is a projection of that pivot
+(:func:`air_quality_from_pivot`, :func:`weather_from_pivot`); built
+alone, Catalyst prunes the other mart's aggregates, so a lone mart
+costs what it did as its own aggregation.
+
 Scale notes: the measurement fact is the only big input; enriched
 sensors are a dimension (≤ sensors × snapshot days), broadcast into
 the J2 join so the fact never shuffles for the join. The single
-shuffle in each mart is the hash aggregation on the 6 grouping
-columns — keyed by (location, hour), which is high-cardinality and
-evenly spread. AQE coalesces post-agg partitions.
+shuffle is the pivot's hash aggregation on the 6 grouping columns —
+keyed by (location, hour), which is high-cardinality and evenly
+spread — shared by both marts when they are built from one pivot.
+AQE coalesces post-agg partitions.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -27,7 +38,7 @@ from pyspark.sql import functions as F
 from openaq_data_pipeline_spark.functions.keys import surrogate_key
 from openaq_data_pipeline_spark.functions.scalars import celsius_to_fahrenheit, hour_bucket
 
-# parameter_id → mart column (mart_location_air_quality.sql:71-86)
+# mart column → parameter_id (mart_location_air_quality.sql:71-86)
 AIR_QUALITY_PIVOT: dict[str, int] = {
     "pm10_ugm3": 1,
     "pm25_ugm3": 2,
@@ -45,6 +56,16 @@ AIR_QUALITY_PIVOT: dict[str, int] = {
     "no_ugm3": 19843,
 }
 
+# mart column → (parameter_id, decimals, transform applied inside the
+# AVG) (mart_location_weather.sql:70-78)
+WEATHER_PIVOT: dict[str, tuple[int, int, Callable[[Column], Column] | None]] = {
+    "temp_celsius": (100, 2, None),
+    "temp_fahrenheit": (100, 2, celsius_to_fahrenheit),
+    "humidity_pct": (98, 2, None),
+    "wind_speed_ms": (34, 2, None),
+    "wind_direction_deg": (22, 0, None),
+}
+
 
 def conditional_avg(
     parameter_id: Column, value: Column, pid: int, scale: int = 2, transform=None
@@ -54,6 +75,24 @@ def conditional_avg(
     map-side, so the pivot costs one shuffle total for all columns."""
     v = F.when(parameter_id == pid, transform(value) if transform else value)
     return F.round(F.avg(v), scale)
+
+
+def air_quality_aggs() -> list[Column]:
+    """The A2 pivot: one conditional AVG per :data:`AIR_QUALITY_PIVOT`
+    column, over ``parameter_id`` / ``measurement_value``."""
+    pid, v = F.col("parameter_id"), F.col("measurement_value")
+    return [conditional_avg(pid, v, k).alias(name) for name, k in AIR_QUALITY_PIVOT.items()]
+
+
+def weather_aggs() -> list[Column]:
+    """The A3 pivot: Fahrenheit derived inside the aggregate for
+    bit-parity (``mart_location_weather.sql:71``), wind direction at
+    0 dp."""
+    pid, v = F.col("parameter_id"), F.col("measurement_value")
+    return [
+        conditional_avg(pid, v, k, scale, transform).alias(name)
+        for name, (k, scale, transform) in WEATHER_PIVOT.items()
+    ]
 
 
 def dim_locations(sensors_enriched: DataFrame) -> DataFrame:
@@ -137,23 +176,45 @@ def _key_col() -> Column:
     )
 
 
+def hourly_pivot(
+    valid_measurements: DataFrame,
+    sensors_enriched: DataFrame,
+    broadcast_sensors: bool = True,
+) -> DataFrame:
+    """Both marts' aggregation in one pass: the J2 join, then one
+    ``groupBy`` on the 6 grouping columns with all 19 pivot columns."""
+    joined = _joined_hourly(valid_measurements, sensors_enriched, broadcast_sensors)
+    return joined.groupBy(*_GROUP_COLS).agg(*air_quality_aggs(), *weather_aggs())
+
+
+def air_quality_from_pivot(pivot: DataFrame) -> DataFrame:
+    """``mart_location_air_quality`` as a projection of :func:`hourly_pivot`."""
+    return pivot.select(
+        _key_col().alias("air_quality_record_id"),
+        *_GROUP_COLS,
+        *_calendar_cols(),
+        *AIR_QUALITY_PIVOT,
+    )
+
+
+def weather_from_pivot(pivot: DataFrame) -> DataFrame:
+    """``mart_location_weather`` as a projection of :func:`hourly_pivot`."""
+    return pivot.select(
+        _key_col().alias("weather_record_id"),
+        *_GROUP_COLS,
+        *_calendar_cols(),
+        *WEATHER_PIVOT,
+    )
+
+
 def mart_location_air_quality(
     valid_measurements: DataFrame,
     sensors_enriched: DataFrame,
     broadcast_sensors: bool = True,
 ) -> DataFrame:
     """Wide hourly air-quality fact (14 pollutant columns)."""
-    joined = _joined_hourly(valid_measurements, sensors_enriched, broadcast_sensors)
-    aggs = [
-        conditional_avg(F.col("parameter_id"), F.col("measurement_value"), pid).alias(name)
-        for name, pid in AIR_QUALITY_PIVOT.items()
-    ]
-    grouped = joined.groupBy(*_GROUP_COLS).agg(*aggs)
-    return grouped.select(
-        _key_col().alias("air_quality_record_id"),
-        *_GROUP_COLS,
-        *_calendar_cols(),
-        *AIR_QUALITY_PIVOT.keys(),
+    return air_quality_from_pivot(
+        hourly_pivot(valid_measurements, sensors_enriched, broadcast_sensors)
     )
 
 
@@ -162,26 +223,7 @@ def mart_location_weather(
     sensors_enriched: DataFrame,
     broadcast_sensors: bool = True,
 ) -> DataFrame:
-    """Wide hourly weather fact; Fahrenheit derived inside the
-    aggregate for bit-parity (``mart_location_weather.sql:71``)."""
-    joined = _joined_hourly(valid_measurements, sensors_enriched, broadcast_sensors)
-    pid, v = F.col("parameter_id"), F.col("measurement_value")
-    grouped = joined.groupBy(*_GROUP_COLS).agg(
-        conditional_avg(pid, v, 100).alias("temp_celsius"),
-        conditional_avg(pid, v, 100, transform=celsius_to_fahrenheit).alias(
-            "temp_fahrenheit"
-        ),
-        conditional_avg(pid, v, 98).alias("humidity_pct"),
-        conditional_avg(pid, v, 34).alias("wind_speed_ms"),
-        conditional_avg(pid, v, 22, scale=0).alias("wind_direction_deg"),
-    )
-    return grouped.select(
-        _key_col().alias("weather_record_id"),
-        *_GROUP_COLS,
-        *_calendar_cols(),
-        "temp_celsius",
-        "temp_fahrenheit",
-        "humidity_pct",
-        "wind_speed_ms",
-        "wind_direction_deg",
+    """Wide hourly weather fact (5 columns, see :func:`weather_aggs`)."""
+    return weather_from_pivot(
+        hourly_pivot(valid_measurements, sensors_enriched, broadcast_sensors)
     )

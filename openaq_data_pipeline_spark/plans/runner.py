@@ -16,6 +16,7 @@ import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from openaq_data_pipeline_spark import schemas
 from openaq_data_pipeline_spark.operators.intermediate import (
@@ -23,9 +24,10 @@ from openaq_data_pipeline_spark.operators.intermediate import (
     int_valid_measurements,
 )
 from openaq_data_pipeline_spark.operators.marts import (
+    air_quality_from_pivot,
     dim_locations,
-    mart_location_air_quality,
-    mart_location_weather,
+    hourly_pivot,
+    weather_from_pivot,
 )
 from openaq_data_pipeline_spark.operators.staging import (
     stg_locations,
@@ -76,25 +78,27 @@ def ingest(spark: SparkSession, paths: PipelinePaths, mode: str = "overwrite") -
     return counts
 
 
+def _bronze(spark: SparkSession, paths: PipelinePaths) -> tuple[DataFrame, DataFrame]:
+    return (
+        spark.read.schema(schemas.RAW_LOCATIONS).parquet(paths.bronze_locations),
+        spark.read.schema(schemas.RAW_MEASUREMENTS).parquet(paths.bronze_measurements),
+    )
+
+
 def transform(spark: SparkSession, paths: PipelinePaths) -> dict[str, DataFrame]:
     """The full dbt-graph equivalent as lazy DataFrames.
 
     Nothing materializes here — callers pick which outputs to write
-    (or test). All eight models share the two bronze scans; Catalyst
-    dedups/pipelines the common subplans per action.
-    """
-    raw_locations = spark.read.schema(schemas.RAW_LOCATIONS).parquet(
-        paths.bronze_locations
-    )
-    raw_measurements = spark.read.schema(schemas.RAW_MEASUREMENTS).parquet(
-        paths.bronze_measurements
-    )
-
+    (or test). All models share the two bronze scans; both hourly
+    marts are projections of one ``hourly_pivot`` (returned too, so a
+    caller can persist it once for both)."""
+    raw_locations, raw_measurements = _bronze(spark, paths)
     locations = stg_locations(raw_locations)
     sensors = stg_sensors(raw_locations)
     measurements = stg_measurements(raw_measurements)
     valid = int_valid_measurements(measurements)
     enriched = int_sensors_enriched(sensors, locations)
+    pivot = hourly_pivot(valid, enriched)
 
     return {
         "raw_locations": raw_locations,
@@ -104,9 +108,10 @@ def transform(spark: SparkSession, paths: PipelinePaths) -> dict[str, DataFrame]
         "stg_openaq__measurements": measurements,
         "int_valid_measurements": valid,
         "int_sensors_enriched": enriched,
+        "hourly_pivot": pivot,
         "dim_locations": dim_locations(enriched),
-        "mart_location_air_quality": mart_location_air_quality(valid, enriched),
-        "mart_location_weather": mart_location_weather(valid, enriched),
+        "mart_location_air_quality": air_quality_from_pivot(pivot),
+        "mart_location_weather": weather_from_pivot(pivot),
     }
 
 
@@ -119,26 +124,39 @@ def materialize_marts(
     reference's ``materialized='incremental', unique_key=…`` contract
     (S12/P7). Each run recomputes only measurements at/after the
     target's high watermark and MERGEs on the record key; day
-    partitions outside the lookback are never rewritten."""
-    from openaq_data_pipeline_spark.incremental import (
-        AIR_QUALITY_TABLE_SPEC,
-        WEATHER_TABLE_SPEC,
-        IncrementalTable,
-        incremental_mart,
-    )
+    partitions outside the lookback are never rewritten.
 
-    models = transform(spark, paths)
-    valid = models["int_valid_measurements"]
-    enriched = models["int_sensors_enriched"]
+    Both marts come from one slice: valid measurements at/after the
+    lower of the two watermarks, pivoted once and localCheckpoint-ed.
+    Each mart's incoming rows are its projection at/after its own
+    watermark — exact, because a watermark is an hour boundary, so
+    ``measured_from_utc >= hwm`` iff ``measurement_hour_utc >= hwm``."""
+    from openaq_data_pipeline_spark import incremental as inc
+
+    raw_locations, raw_measurements = _bronze(spark, paths)
+    valid = int_valid_measurements(stg_measurements(raw_measurements))
+    enriched = int_sensors_enriched(stg_sensors(raw_locations), stg_locations(raw_locations))
+    marts = {
+        "mart_location_air_quality": (air_quality_from_pivot, inc.AIR_QUALITY_TABLE_SPEC),
+        "mart_location_weather": (weather_from_pivot, inc.WEATHER_TABLE_SPEC),
+    }
+    tables = {
+        name: inc.IncrementalTable(path=os.path.join(paths.root, "gold", name), **spec)
+        for name, (_, spec) in marts.items()
+    }
+    hwms = {
+        name: None if full_refresh else inc.high_watermark(spark, table)
+        for name, table in tables.items()
+    }
+    if None not in hwms.values():
+        valid = valid.filter(F.col("measured_from_utc") >= F.lit(min(hwms.values())))
+    pivot = hourly_pivot(valid, enriched).localCheckpoint(eager=True)
     out = {}
-    for name, fn, spec in (
-        ("mart_location_air_quality", mart_location_air_quality, AIR_QUALITY_TABLE_SPEC),
-        ("mart_location_weather", mart_location_weather, WEATHER_TABLE_SPEC),
-    ):
-        table = IncrementalTable(path=os.path.join(paths.root, "gold", name), **spec)
-        out[name] = incremental_mart(
-            spark, fn, valid, enriched, table, full_refresh=full_refresh
-        )
+    for name, (project, _) in marts.items():
+        sliced, hwm = project(pivot), hwms[name]
+        if hwm is not None:
+            sliced = sliced.filter(F.col("measurement_hour_utc") >= F.lit(hwm))
+        out[name] = inc.commit_slice(spark, tables[name], sliced, hwm)
     return out
 
 
@@ -151,10 +169,11 @@ def build(
     """The reference's ``dbt source freshness && dbt build`` contract
     (``dags/02_openaq_transformation.py:41-47``): transform the full
     model graph, then run the complete ported test manifest
-    (quality.REFERENCE_SUITE). Staging models are persisted for the
-    duration of the suite — each is referenced by several checks and
-    both marts, so caching turns ~8 recomputations of the silver
-    lineage into one."""
+    (quality.REFERENCE_SUITE). Staging models and the hourly pivot are
+    persisted for the duration of the suite — each staging model is
+    referenced by several checks and both marts, and both marts
+    project the one pivot, so caching turns ~8 recomputations of the
+    silver lineage into one and computes the gold aggregation once."""
     from openaq_data_pipeline_spark import quality as Q
 
     models = transform(spark, paths)
@@ -164,6 +183,7 @@ def build(
             "stg_openaq__locations",
             "stg_openaq__sensors",
             "stg_openaq__measurements",
+            "hourly_pivot",
         )
     ]
     for df in cached:

@@ -51,7 +51,9 @@ from openaq_data_pipeline_spark.incremental import IncrementalTable, merge_upser
 from openaq_data_pipeline_spark.operators.intermediate import physical_validity
 from openaq_data_pipeline_spark.operators.marts import (
     AIR_QUALITY_PIVOT,
-    conditional_avg,
+    WEATHER_PIVOT,
+    air_quality_aggs,
+    weather_aggs,
 )
 from openaq_data_pipeline_spark.operators.staging import measurements_projection
 
@@ -155,17 +157,11 @@ def stream_mart_air_quality(
     broadcast_sensors: bool = True,
 ) -> DataFrame:
     """Streaming hourly air-quality mart (14-column pollutant pivot)."""
-    aggs = [
-        conditional_avg(F.col("parameter_id"), F.col("measurement_value"), pid).alias(
-            name
-        )
-        for name, pid in AIR_QUALITY_PIVOT.items()
-    ]
     return _stream_hourly_mart(
         stg_stream,
         sensors_enriched,
-        aggs,
-        list(AIR_QUALITY_PIVOT.keys()),
+        air_quality_aggs(),
+        list(AIR_QUALITY_PIVOT),
         "air_quality_record_id",
         broadcast_sensors,
     )
@@ -179,27 +175,12 @@ def stream_mart_weather(
     """Streaming hourly weather mart — the A3 pivot with Fahrenheit
     derived inside the aggregate, wind direction at 0 dp
     (mart_location_weather.sql:70-78)."""
-    from openaq_data_pipeline_spark.functions.scalars import celsius_to_fahrenheit
-
-    pid, v = F.col("parameter_id"), F.col("measurement_value")
-    aggs = [
-        conditional_avg(pid, v, 100).alias("temp_celsius"),
-        conditional_avg(pid, v, 100, transform=celsius_to_fahrenheit).alias(
-            "temp_fahrenheit"
-        ),
-        conditional_avg(pid, v, 98).alias("humidity_pct"),
-        conditional_avg(pid, v, 34).alias("wind_speed_ms"),
-        conditional_avg(pid, v, 22, scale=0).alias("wind_direction_deg"),
-    ]
-    names = [
-        "temp_celsius",
-        "temp_fahrenheit",
-        "humidity_pct",
-        "wind_speed_ms",
-        "wind_direction_deg",
-    ]
     return _stream_hourly_mart(
-        stg_stream, sensors_enriched, aggs, names, "weather_record_id",
+        stg_stream,
+        sensors_enriched,
+        weather_aggs(),
+        list(WEATHER_PIVOT),
+        "weather_record_id",
         broadcast_sensors,
     )
 
